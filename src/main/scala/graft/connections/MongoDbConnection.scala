@@ -12,8 +12,6 @@ import org.apache.spark.sql.types.StructType
   * (reference mongodb/dialect.py:125-155). */
 object MongoDialect extends Dialect {
   val name = "mongodb"
-  override def supportsWhere: Boolean = true
-  override def requiresDfSchema: Boolean = true
 
   /** HWM window edges render as Mongo JSON fragments, not SQL — this is
     * what `Dialect.applyWindow` composes, so DbReader windows flow into

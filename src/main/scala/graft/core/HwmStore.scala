@@ -32,57 +32,6 @@ final class InMemoryHwmStore extends HwmStore {
   def set(hwm: Hwm): Unit = map.put(hwm.name, hwm)
 }
 
-/** File-backed store: one small file per HWM qualified name under `root`,
-  * written atomically (temp file + move). Like the reference YAML store,
-  * each `set` PREPENDS a record (with a `modified` timestamp) and `get`
-  * returns the latest — the file is an audit trail of every saved value
-  * (reference yaml_hwm_store.py:178-196: `[hwm.serialize()] + data`, get
-  * picks max `modified_time`). Records are blank-line separated key=value
-  * blocks. Name sanitization mirrors yaml_hwm_store.py:192-199. */
-final class FileHwmStore(rootDir: String) extends HwmStore {
-  private val root: Path = Paths.get(rootDir)
-  Files.createDirectories(root)
-
-  private def fileFor(name: String): Path =
-    root.resolve(name.toLowerCase.replaceAll("[^a-z0-9_.]+", "__") + ".hwm")
-
-  private def records(f: Path): Seq[Map[String, String]] =
-    new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
-      .split("\n\n").toSeq.map { block =>
-        block.linesIterator.filter(_.contains("=")).map { l =>
-          val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1)
-        }.toMap
-      }.filter(_.nonEmpty)
-
-  /** Full saved history for `name`, newest first (audit/debug surface). */
-  def history(name: String): Seq[Hwm] = {
-    val f = fileFor(name)
-    if (!Files.exists(f)) Nil
-    else records(f)
-      .sortBy(r => r.get("modified").map(Instant.parse(_).toEpochMilli)
-        .getOrElse(Long.MinValue))(Ordering[Long].reverse)
-      .map(FileHwmStore.decode)
-  }
-
-  def get(name: String): Option[Hwm] = history(name).headOption
-
-  def set(hwm: Hwm): Unit = {
-    val f = fileFor(hwm.name)
-    val prior =
-      if (Files.exists(f))
-        new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
-      else ""
-    val rec = (FileHwmStore.encode(hwm) :+
-        ("modified" -> Instant.now().toString))
-      .map { case (k, v) => s"$k=$v" }.mkString("", "\n", "\n")
-    val body = if (prior.isEmpty) rec else rec + "\n" + prior
-    val tmp = Files.createTempFile(root, ".hwm", ".tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
-}
-
 /** YAML-file store matching the reference's on-disk format
   * (yaml_hwm_store.py:56-216): one `<sanitized-name>.yml` per HWM holding
   * a YAML LIST of serialized records, newest first; `get` returns the
@@ -129,6 +78,8 @@ final class YamlHwmStore(rootDir: String) extends HwmStore {
   }
 }
 
+/** The HWM record codec of both persistent stores: [[YamlHwmStore]] keeps
+  * a list of these records per file, [[JdbcHwmStore]] one record per row. */
 private[core] object YamlHwmStore {
   /** One parsed YAML list entry: flat string fields plus the two
     * structured `value` shapes. */
@@ -268,59 +219,14 @@ private[core] object YamlHwmStore {
   }
 }
 
-private object FileHwmStore {
-  def encode(hwm: Hwm): Seq[(String, String)] = {
-    val base = Seq("name" -> hwm.name, "entity" -> hwm.entity,
-      "expression" -> hwm.expression)
-    hwm match {
-      case h: IntHwm      => base :+ ("type" -> "int") :+ ("value" -> h.value.map(_.toString).getOrElse(""))
-      case h: DecimalHwm  => base :+ ("type" -> "decimal") :+ ("value" -> h.value.map(_.toString).getOrElse(""))
-      case h: DateHwm     => base :+ ("type" -> "date") :+ ("value" -> h.value.map(_.toString).getOrElse(""))
-      case h: DateTimeHwm => base :+ ("type" -> "datetime") :+ ("value" -> h.value.map(_.toString).getOrElse(""))
-      case h: KeyValueIntHwm =>
-        base :+ ("type" -> "keyvalue") :+
-          ("value" -> h.value.toSeq.sorted.map { case (k, v) => s"$k:$v" }.mkString(","))
-      case h: FileListHwm =>
-        // records are line-oriented key=value blocks: NUL separates paths
-        // (legal in no filesystem path), and a newline inside a path would
-        // silently corrupt the record format, so reject it here
-        require(h.value.forall(v => !v.contains('\n') && !v.contains('\u0000')),
-          s"FileListHwm '${h.name}' contains a path with a newline or NUL")
-        base :+ ("type" -> "filelist") :+ ("value" -> h.value.toSeq.sorted.mkString("\u0000"))
-      case h: FileMTimeHwm =>
-        base :+ ("type" -> "filemtime") :+ ("value" -> h.value.map(_.toString).getOrElse(""))
-    }
-  }
-
-  def decode(kv: Map[String, String]): Hwm = {
-    val name = kv("name"); val entity = kv("entity"); val expr = kv("expression")
-    val raw = kv.getOrElse("value", "")
-    val v = Option(raw).filter(_.nonEmpty)
-    kv("type") match {
-      case "int"      => IntHwm(name, entity, expr, v.map(_.toLong))
-      case "decimal"  => DecimalHwm(name, entity, expr, v.map(BigDecimal(_)))
-      case "date"     => DateHwm(name, entity, expr, v.map(LocalDate.parse))
-      case "datetime" => DateTimeHwm(name, entity, expr, v.map(Instant.parse))
-      case "keyvalue" =>
-        val m = v.map(_.split(",").map { p =>
-          val Array(k, x) = p.split(":"); k.toInt -> x.toLong
-        }.toMap).getOrElse(Map.empty[Int, Long])
-        KeyValueIntHwm(name, entity, expr, m)
-      case "filelist" =>
-        FileListHwm(name, entity, expr, v.map(_.split("\u0000").toSet).getOrElse(Set.empty))
-      case "filemtime" => FileMTimeHwm(name, entity, expr, v.map(Instant.parse))
-      case other => throw new IllegalArgumentException(s"unknown HWM type: $other")
-    }
-  }
-}
-
 /** JDBC-backed HWM store — beyond the reference's memory/YAML pair: teams
   * running many pipelines persist watermarks in a shared database so any
   * driver host can resume any pipeline. Append-only history table (one
   * row per save, IDENTITY-sequenced); `get` returns the newest record,
-  * matching the file stores' newest-first contract. Records reuse the
-  * same key=value codec as [[FileHwmStore]], so a value that round-trips
-  * through one store round-trips through all of them.
+  * matching [[YamlHwmStore]]'s newest-first contract. Each row's payload
+  * is one record of the YAML store's list, written and read by the same
+  * codec, so a value that round-trips through one store round-trips
+  * through the other.
   *
   * Plain `java.sql.DriverManager` on the driver — the same channel as
   * JdbcConnection.fetch/execute; no Spark job is involved in HWM I/O.
@@ -351,20 +257,12 @@ final class JdbcHwmStore(url: String, table: String = "graft_hwm")
     }
   }
 
-  private def encodePayload(hwm: Hwm): String =
-    FileHwmStore.encode(hwm).map { case (k, v) => s"$k=$v" }.mkString("\n")
-
-  private def decodePayload(s: String): Hwm =
-    FileHwmStore.decode(s.linesIterator.filter(_.contains("=")).map { l =>
-      val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1)
-    }.toMap)
-
   def set(hwm: Hwm): Unit = withConn { c =>
     val ps = c.prepareStatement(
       s"INSERT INTO $table (hwm_name, payload) VALUES (?, ?)")
     try {
       ps.setString(1, hwm.name)
-      ps.setString(2, encodePayload(hwm))
+      ps.setString(2, YamlHwmStore.emitRecord(hwm, Instant.now()))
       ps.executeUpdate()
     } finally ps.close()
   }
@@ -380,7 +278,8 @@ final class JdbcHwmStore(url: String, table: String = "graft_hwm")
       ps.setString(1, name)
       val rs = ps.executeQuery()
       val out = Seq.newBuilder[Hwm]
-      while (rs.next()) out += decodePayload(rs.getString(1))
+      while (rs.next())
+        out ++= YamlHwmStore.parseRecords(rs.getString(1)).map(YamlHwmStore.decode)
       rs.close()
       out.result()
     } finally ps.close()

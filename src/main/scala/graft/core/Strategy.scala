@@ -185,9 +185,6 @@ sealed abstract class BatchHwmStrategy(val step: Any, store: HwmStore)
   @volatile private[graft] var isFirstBatch = true
   @volatile private[graft] var iterations = 0
 
-  /** Whether the stored HWM seeds `start` (incremental-batch) or is
-    * ignored (snapshot-batch, reference snapshot_strategy.py:96). */
-  def usesStoredHwm: Boolean
   /** Whether each completed batch persists the HWM
     * (reference incremental_strategy.py:572-574). */
   def savesPerBatch: Boolean
@@ -265,7 +262,6 @@ final class SnapshotBatchStrategy(step: Any,
                                   val explicitStop: Option[Any] = None,
                                   store: HwmStore = HwmStore.current)
   extends BatchHwmStrategy(step, store) {
-  def usesStoredHwm: Boolean = false
   def savesPerBatch: Boolean = false
   override def saveHwm(): Unit = () // never persists (snapshot_strategy.py:96)
   override private[core] def exitSuccess(): Unit = ()
@@ -281,7 +277,6 @@ object SnapshotBatchStrategy {
 final class IncrementalBatchStrategy(step: Any,
                                      store: HwmStore = HwmStore.current)
   extends BatchHwmStrategy(step, store) {
-  def usesStoredHwm: Boolean = true
   def savesPerBatch: Boolean = true
 }
 

@@ -20,9 +20,6 @@ trait Dialect {
 
   // ---- capabilities (reference dialect_mixins/*.py) -----------------------
   def supportsHint: Boolean = false
-  def supportsWhere: Boolean = true
-  def supportsColumns: Boolean = true
-  def requiresDfSchema: Boolean = false
 
   def escapeColumn(ident: String): String = "\"" + ident + "\""
   def aliased(expression: String, alias: String): String = s"$expression AS $alias"

@@ -35,6 +35,20 @@ final case class FileTransferResult(successful: Seq[String] = Nil,
     successful.isEmpty && failed.isEmpty && skipped.isEmpty && missing.isEmpty
 }
 
+object FileTransferResult {
+  /** Sort each file's worker outcome — `("ok" | "skipped" | "missing",
+    * path)` or a failure — into the result's four lists. */
+  private[files] def collect(files: Seq[RemoteEntry],
+                             outcomes: Seq[Try[(String, String)]]): FileTransferResult = {
+    val zipped = files.zip(outcomes)
+    FileTransferResult(
+      successful = zipped.collect { case (_, Success(("ok", p))) => p },
+      failed = zipped.collect { case (e, Failure(t)) => (e.path, t) },
+      skipped = zipped.collect { case (_, Success(("skipped", p))) => p },
+      missing = zipped.collect { case (_, Success(("missing", p))) => p })
+  }
+}
+
 private object TransferPool {
   /** Bounded pool per run (reference file_downloader.py:795-828 uses a
     * ThreadPoolExecutor(workers)). */
@@ -134,7 +148,7 @@ final case class FileDownloader(connection: FileConnection,
           ("ok", dest.toString)
         }
       }
-      collect(files, outcomes)
+      FileTransferResult.collect(files, outcomes)
     } finally {
       // HWM updated+saved even on partial failure (reference :771-775).
       strategy.foreach { s =>
@@ -146,16 +160,6 @@ final case class FileDownloader(connection: FileConnection,
         s.saveHwm()
       }
     }
-  }
-
-  private def collect(files: Seq[RemoteEntry],
-                      outcomes: Seq[Try[(String, String)]]): FileTransferResult = {
-    val zipped = files.zip(outcomes)
-    FileTransferResult(
-      successful = zipped.collect { case (_, Success(("ok", p))) => p },
-      failed = zipped.collect { case (e, Failure(t)) => (e.path, t) },
-      skipped = zipped.collect { case (_, Success(("skipped", p))) => p },
-      missing = zipped.collect { case (_, Success(("missing", p))) => p })
   }
 }
 
@@ -196,12 +200,7 @@ final case class FileUploader(connection: FileConnection,
         ("ok", dest)
       }
     }
-    val zipped = files.zip(outcomes)
-    FileTransferResult(
-      successful = zipped.collect { case (_, Success(("ok", p))) => p },
-      failed = zipped.collect { case (e, Failure(t)) => (e.path, t) },
-      skipped = zipped.collect { case (_, Success(("skipped", p))) => p },
-      missing = zipped.collect { case (_, Success(("missing", p))) => p })
+    FileTransferResult.collect(files, outcomes)
   }
 }
 
@@ -236,11 +235,6 @@ final case class FileMover(connection: FileConnection,
         ("ok", dest)
       }
     }
-    val zipped = files.zip(outcomes)
-    FileTransferResult(
-      successful = zipped.collect { case (_, Success(("ok", p))) => p },
-      failed = zipped.collect { case (e, Failure(t)) => (e.path, t) },
-      skipped = zipped.collect { case (_, Success(("skipped", p))) => p },
-      missing = zipped.collect { case (_, Success(("missing", p))) => p })
+    FileTransferResult.collect(files, outcomes)
   }
 }

@@ -39,8 +39,4 @@ object SparkUtils {
     * matters for planning. */
   def estimateDataFrameBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
-
-  /** Strip trailing semicolon + dedent (reference _util/sql.py:3). */
-  def clearStatement(statement: String): String =
-    statement.linesIterator.map(_.stripLeading()).mkString("\n").trim.stripSuffix(";").trim
 }

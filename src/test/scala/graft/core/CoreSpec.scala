@@ -65,30 +65,24 @@ class HwmStoreSpec extends AnyFunSuite {
     assert(store.get("missing").isEmpty)
   }
 
-  test("file store roundtrips every HWM type atomically") {
+  test("yaml store round-trips an unset value; odd names stay inside the root") {
     val dir = java.nio.file.Files.createTempDirectory("hwm").toString
-    val store = new FileHwmStore(dir)
-    val hwms = Seq(
-      IntHwm("db.t.id", "t", "id", Some(7L)),
-      DecimalHwm("d", "t", "amount", Some(BigDecimal("12.34"))),
-      DateHwm("dt", "t", "day", Some(LocalDate.of(2024, 3, 1))),
-      DateTimeHwm("ts", "t", "ts", Some(Instant.parse("2024-03-01T12:00:00Z"))),
-      KeyValueIntHwm("kv", "topic", "offset", Map(0 -> 5L, 1 -> 9L)),
-      FileListHwm("fl", "dir", "file_list", Set("/a/b.csv", "/a/c.csv")),
-      FileMTimeHwm("fm", "dir", "modified_time", Some(Instant.parse("2024-01-01T00:00:00Z"))))
-    hwms.foreach(store.set)
-    hwms.foreach { h => assert(store.get(h.name).contains(h), h.name) }
-    // unset value roundtrip
+    val store = new YamlHwmStore(dir)
     store.set(IntHwm("empty", "t", "id", None))
     assert(store.get("empty").get.valueOpt.isEmpty)
     // name sanitization: weird chars don't escape the directory
     store.set(IntHwm("sch ema//t@ble#id", "t", "id", Some(1L)))
     assert(store.get("sch ema//t@ble#id").get.valueOpt.contains(1L))
+    val root = java.nio.file.Paths.get(dir)
+    assert(store.fileFor("sch ema//t@ble#id").getParent == root)
+    // atomic writes leave no temp file behind: one .yml per name
+    val names = new java.io.File(dir).list().sorted
+    assert(names.length == 2 && names.forall(_.endsWith(".yml")), names.mkString(", "))
   }
 
-  test("file store keeps an append-history; latest set wins (yaml_hwm_store.py:178-196)") {
+  test("yaml store keeps every save; a manual reset to a lower value wins") {
     val dir = java.nio.file.Files.createTempDirectory("hwm_hist").toString
-    val store = new FileHwmStore(dir)
+    val store = new YamlHwmStore(dir)
     store.set(IntHwm("h", "t", "id", Some(100L)))
     store.set(IntHwm("h", "t", "id", Some(250L)))
     store.set(IntHwm("h", "t", "id", Some(175L))) // e.g. after a manual reset
@@ -96,6 +90,20 @@ class HwmStoreSpec extends AnyFunSuite {
     val hist = store.history("h").map(_.valueOpt.get)
     assert(hist.length == 3 && hist.head == 175L)
     assert(hist.toSet == Set(100L, 250L, 175L))
+  }
+
+  test("paths with control, quote and non-ASCII chars round-trip in both stores") {
+    System.setProperty("derby.system.home", System.getProperty("java.io.tmpdir"))
+    val hwm = FileListHwm("paths", "dir", "file_list", Set(
+      "/in/new\nline.csv", "/in/nul\u0000.csv", "/in/\"quoted\".csv",
+      "/in/tab\there.csv", "/in/back\\slash.csv", "/in/données/日本語.csv"))
+    val yaml = new YamlHwmStore(
+      java.nio.file.Files.createTempDirectory("hwm_paths").toString)
+    val jdbc = new JdbcHwmStore("jdbc:derby:memory:graft_hwm_paths;create=true")
+    Seq(yaml, jdbc).foreach { store =>
+      store.set(hwm)
+      assert(store.get("paths").contains(hwm), store.getClass.getSimpleName)
+    }
   }
 
   test("yaml store roundtrips every HWM type; latest set wins") {
