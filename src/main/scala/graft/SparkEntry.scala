@@ -312,6 +312,13 @@ object SparkEntry {
     copyTree(tableLocation(s, src), tableLocation(s, dst))
   }
 
+  /** [[cloneBucketedTable]] for each table of a MinHash index. */
+  private def cloneMinHashIndex(s: SparkSession, src: String,
+                                dst: String): Unit =
+    operators.Dedup.SignedBatch.tables(src)
+      .zip(operators.Dedup.SignedBatch.tables(dst))
+      .foreach { case (a, b) => cloneBucketedTable(s, a, b) }
+
   /** Pristine built IVF-PQ index + staged landing batches for
     * streaming_ann_ingest: the deterministic BUILD is reusable across
     * bench repeats, but the gate appends to its index, so each
@@ -5277,8 +5284,7 @@ object SparkEntry {
       val (fpT, mhT, bnT) =
         (s"sri_fp_$tag", s"sri_mh_$tag", s"sri_bn_$tag")
       cloneBucketedTable(s, pfp, fpT)
-      cloneBucketedTable(s, s"${pmh}_bands", s"${mhT}_bands")
-      cloneBucketedTable(s, s"${pmh}_shingles", s"${mhT}_shingles")
+      cloneMinHashIndex(s, pmh, mhT)
       cloneBucketedTable(s, pbn, bnT)
       try {
         val schema = StructType(Seq(
@@ -5309,7 +5315,7 @@ object SparkEntry {
           .orderBy(col("batch"), col("shard"), col("split"))
           .localCheckpoint()
       } finally {
-        Seq(fpT, s"${mhT}_bands", s"${mhT}_shingles", bnT).foreach(t =>
+        (fpT +: operators.Dedup.SignedBatch.tables(mhT) :+ bnT).foreach(t =>
           s.sql(s"DROP TABLE IF EXISTS $t"))
       }
     }),
@@ -5403,8 +5409,7 @@ object SparkEntry {
           p
         })
       }
-      cloneBucketedTable(s, s"${pristine}_bands", s"${table}_bands")
-      cloneBucketedTable(s, s"${pristine}_shingles", s"${table}_shingles")
+      cloneMinHashIndex(s, pristine, table)
       try {
         // the landing batches are a pure function of dir — cache them
         // across bench repeats (the INDEX table stays fresh per
@@ -5450,8 +5455,8 @@ object SparkEntry {
           .orderBy(col("doc_id"))
           .localCheckpoint()
       } finally {
-        s.sql(s"DROP TABLE IF EXISTS ${table}_bands")
-        s.sql(s"DROP TABLE IF EXISTS ${table}_shingles")
+        operators.Dedup.SignedBatch.tables(table).foreach(t =>
+          s.sql(s"DROP TABLE IF EXISTS $t"))
       }
     }),
 

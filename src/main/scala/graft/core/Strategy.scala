@@ -185,10 +185,6 @@ sealed abstract class BatchHwmStrategy(val step: Any, store: HwmStore)
   @volatile private[graft] var isFirstBatch = true
   @volatile private[graft] var iterations = 0
 
-  /** Whether each completed batch persists the HWM
-    * (reference incremental_strategy.py:572-574). */
-  def savesPerBatch: Boolean
-
   @volatile private[graft] var startExclusive = false
 
   /** Called by the reader once min/max are known. `exclusiveStart` marks a
@@ -233,7 +229,9 @@ sealed abstract class BatchHwmStrategy(val step: Any, store: HwmStore)
       throw new IllegalStateException("batch window is not advancing")
     left = w.stopAt.value
     isFirstBatch = false
-    if (savesPerBatch) saveHwm()
+    // each completed batch persists the HWM (reference
+    // incremental_strategy.py:572-574); a snapshot batch's save is a no-op
+    saveHwm()
     !WindowMath.lt(left.get, stop.get) // true = done
   }
 
@@ -244,9 +242,7 @@ sealed abstract class BatchHwmStrategy(val step: Any, store: HwmStore)
   def foreachBatch[A](body: => A): Seq[A] = {
     val out = Seq.newBuilder[A]
     var done = false
-    var it = 0
-    while (!done && it <= MaxIterations) {
-      it += 1
+    while (!done) {
       out += body
       done = if (!initialized) true // reader found empty source: single batch
              else advance(hwm.map(_.expression).getOrElse(""))
@@ -262,9 +258,7 @@ final class SnapshotBatchStrategy(step: Any,
                                   val explicitStop: Option[Any] = None,
                                   store: HwmStore = HwmStore.current)
   extends BatchHwmStrategy(step, store) {
-  def savesPerBatch: Boolean = false
   override def saveHwm(): Unit = () // never persists (snapshot_strategy.py:96)
-  override private[core] def exitSuccess(): Unit = ()
 }
 
 object SnapshotBatchStrategy {
@@ -276,9 +270,7 @@ object SnapshotBatchStrategy {
   * (reference incremental_strategy.py:414). */
 final class IncrementalBatchStrategy(step: Any,
                                      store: HwmStore = HwmStore.current)
-  extends BatchHwmStrategy(step, store) {
-  def savesPerBatch: Boolean = true
-}
+  extends BatchHwmStrategy(step, store)
 
 object IncrementalBatchStrategy {
   def apply(step: Any): IncrementalBatchStrategy = new IncrementalBatchStrategy(step)

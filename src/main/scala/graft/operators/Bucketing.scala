@@ -85,11 +85,7 @@ object Bucketing {
     recoverCompaction(spark, table) // heal any earlier crash, drop stragglers
     val df0 = spark.table(table)
     val df = if (dropDuplicates) df0.distinct() else df0
-    // one file per bucket: repartition on the bucket keys into `buckets`
-    // output tasks before the bucketed write, so each task writes exactly
-    // its bucket's single file
-    writeBucketed(df.repartition(buckets, keys.map(org.apache.spark.sql.functions.col): _*),
-      tmp, buckets, keys)
+    writeBucketed(df, tmp, buckets, keys)
     spark.sql(s"ALTER TABLE $table RENAME TO $old")
     spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
     spark.sql(s"DROP TABLE $old")

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.expressions.GraftExpressions
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -61,7 +61,8 @@ object Dedup {
     * this path re-shuffles the full historical index every batch. */
   def exactDedupAgainstIndex(df: DataFrame, idCol: String, textCol: String,
                              indexPath: String): DataFrame =
-    dedupNewAgainstIndex(df, idCol, textCol,
+    dedupNewAgainstIndexByKey(df, idCol,
+      TextFunctions.fingerprint(col(textCol)),
       df.sparkSession.read.parquet(indexPath))
 
   /** The historical fingerprint index as a BUCKETED table (bucketed and
@@ -71,12 +72,12 @@ object Dedup {
     * at a trillion historical fingerprints that shuffle dwarfs the batch
     * itself; bucketed, the index side of the anti-join has no Exchange
     * (its `HashPartitioning(fp)` already satisfies the join's required
-    * distribution) and only the new batch moves. */
+    * distribution) and only the new batch moves. This is the
+    * [[buildKeyIndexTable]] family keyed by the text fingerprint. */
   def buildFingerprintIndexTable(df: DataFrame, textCol: String,
                                  table: String, buckets: Int = 32): Unit =
-    Bucketing.writeBucketed(
-      df.select(TextFunctions.fingerprint(col(textCol)).as("fp")).distinct(),
-      table, buckets, Seq("fp"))
+    buildKeyIndexTable(df, TextFunctions.fingerprint(col(textCol)), table,
+      buckets)
 
   /** Append a processed batch's fingerprints to the bucketed index —
     * the missing step that lets incremental ingestion RESUME without
@@ -88,9 +89,8 @@ object Dedup {
     * waste bytes — so a replayed batch is safe, just not free. */
   def appendToFingerprintIndexTable(newDocs: DataFrame, textCol: String,
                                     table: String, buckets: Int = 32): Unit =
-    Bucketing.writeBucketed(
-      newDocs.select(TextFunctions.fingerprint(col(textCol)).as("fp")).distinct(),
-      table, buckets, Seq("fp"), org.apache.spark.sql.SaveMode.Append)
+    appendKeysToIndexTable(newDocs, TextFunctions.fingerprint(col(textCol)),
+      table, buckets)
 
   /** Offline maintenance for the append-based fingerprint index: one
     * sorted file per bucket again, replay-duplicated fps collapsed
@@ -106,7 +106,8 @@ object Dedup {
     * fingerprint, into the index's bucket count. */
   def exactDedupAgainstIndexTable(df: DataFrame, idCol: String,
                                   textCol: String, table: String): DataFrame =
-    dedupNewAgainstIndex(df, idCol, textCol, df.sparkSession.table(table))
+    keyedDedupAgainstIndexTable(df, idCol,
+      TextFunctions.fingerprint(col(textCol)), table)
 
   /** The NEAR-dup analogue of the fingerprint index: persist the
     * historical corpus's MinHash band buckets and shingle sets as two
@@ -122,7 +123,7 @@ object Dedup {
     *
     * Storage is ~8·shingles + 24·bands bytes per historical doc — far
     * below the text — and both tables append per batch like the
-    * fingerprint index.
+    * fingerprint index. [[SignedBatch]] owns the layout.
     *
     * `partitionCols` scopes the index's near-dup relation WITHIN those
     * columns (the recipe's within-source policy): they salt the bucket
@@ -137,15 +138,9 @@ object Dedup {
                              table: String, shingleSize: Int = 3,
                              bands: Int = 32, rowsPerBand: Int = 4,
                              seed: Long = 42L, buckets: Int = 32,
-                             partitionCols: Seq[String] = Nil): Unit = {
-    val docs = shingleDocs(df, idCol, textCol, shingleSize, partitionCols)
-    Bucketing.writeBucketed(
-      bandRows(docs, bands, rowsPerBand, seed, partitionCols)
-        .select(col("id"), col("band"), col("bucket")),
-      s"${table}_bands", buckets, Seq("band", "bucket"))
-    Bucketing.writeBucketed(docs.select(col("id"), col("n_sh"), col("shingles")),
-      s"${table}_shingles", buckets, Seq("id"))
-  }
+                             partitionCols: Seq[String] = Nil): Unit =
+    SignedBatch.sign(df, idCol, textCol, shingleSize, bands, rowsPerBand,
+      seed, partitionCols).writeIndex(table, buckets, SaveMode.Overwrite)
 
   /** Append a processed batch (its SURVIVORS) to the MinHash index.
     * Duplicate rows from a replayed append are harmless for correctness
@@ -156,29 +151,17 @@ object Dedup {
                                 shingleSize: Int = 3, bands: Int = 32,
                                 rowsPerBand: Int = 4, seed: Long = 42L,
                                 buckets: Int = 32,
-                                partitionCols: Seq[String] = Nil): Unit = {
-    val docs = shingleDocs(newDocs, idCol, textCol, shingleSize,
-      partitionCols)
-    Bucketing.writeBucketed(
-      bandRows(docs, bands, rowsPerBand, seed, partitionCols)
-        .select(col("id"), col("band"), col("bucket")),
-      s"${table}_bands", buckets, Seq("band", "bucket"),
-      org.apache.spark.sql.SaveMode.Append)
-    Bucketing.writeBucketed(docs.select(col("id"), col("n_sh"), col("shingles")),
-      s"${table}_shingles", buckets, Seq("id"),
-      org.apache.spark.sql.SaveMode.Append)
-  }
+                                partitionCols: Seq[String] = Nil): Unit =
+    SignedBatch.sign(newDocs, idCol, textCol, shingleSize, bands,
+      rowsPerBand, seed, partitionCols).writeIndex(table, buckets,
+      SaveMode.Append)
 
   /** Offline maintenance for the MinHash index pair — same contract as
     * [[compactFingerprintIndexTable]]; replay-duplicated band/shingle
     * rows collapse and each bucket returns to one sorted file. */
   def compactMinHashIndexTable(spark: org.apache.spark.sql.SparkSession,
-                               table: String, buckets: Int = 32): Unit = {
-    Bucketing.compactBucketed(spark, s"${table}_bands", buckets,
-      Seq("band", "bucket"), dropDuplicates = true)
-    Bucketing.compactBucketed(spark, s"${table}_shingles", buckets,
-      Seq("id"), dropDuplicates = true)
-  }
+                               table: String, buckets: Int = 32): Unit =
+    SignedBatch.compactIndex(spark, table, buckets)
 
   /** Batch rows with NO verified near-duplicate in the index: LSH band
     * collision generates (batch, history) candidates — the index side of
@@ -196,61 +179,148 @@ object Dedup {
                                     threshold: Double = 0.8,
                                     seed: Long = 42L,
                                     partitionCols: Seq[String] = Nil
-                                   ): DataFrame = {
-    val docs = shingleDocs(batch, idCol, textCol, shingleSize,
-      partitionCols)
-    // the partition scoping is entirely in the salted bucket values
-    // (must match the index build's partitionCols); the vs-index join
-    // itself is unchanged, so the no-Exchange-on-index-side plan holds
-    val banded = bandRows(docs, bands, rowsPerBand, seed, partitionCols)
-      .select(col("id"), col("band"), col("bucket"))
-    minhashDedupVsIndexPre(batch, idCol,
-      docs.select(col("id"), col("n_sh"), col("shingles")), banded, table,
-      threshold)
+                                   ): DataFrame =
+    SignedBatch.sign(batch, idCol, textCol, shingleSize, bands, rowsPerBand,
+      seed, partitionCols).survivorsVsIndex(table, threshold)
+
+  /** One batch's MinHash signing: its shingle frame (id, [partitionCols],
+    * shingles, n_sh) and band frame (id, [partitionCols], band, bucket),
+    * built together by [[SignedBatch.sign]] from one set of signing
+    * parameters, and the owner of every operation on them and of the
+    * persisted index layout ([[buildMinHashIndexTable]]). A
+    * caller that needs the same batch's signing more than once — the
+    * vs-history join, the in-batch pair pass and the index append of
+    * [[graft.streaming.StreamRunner.runIncrementalNearDedup]] and
+    * [[Recipe.curateIncrementalStaged]] — signs once and reuses the
+    * value: re-deriving the frames from raw text tripled the per-batch
+    * signing cost, and frames from different batches or parameters
+    * cannot be paired by construction. */
+  private[graft] final class SignedBatch private (batch: DataFrame,
+                                                  idCol: String,
+                                                  docs: DataFrame,
+                                                  banded: DataFrame,
+                                                  partitionCols: Seq[String]) {
+    import SignedBatch.{Bands, Shingles}
+
+    /** Rows of the signed batch with no verified near-duplicate in the
+      * index `table`. The partition scoping is entirely in the salted
+      * bucket values, so the vs-index join is the same with or without
+      * `partitionCols` and its index side never shuffles. */
+    def survivorsVsIndex(table: String, threshold: Double): DataFrame = {
+      val spark = batch.sparkSession
+      val idxBands = spark.table(Bands.of(table))
+        .withColumnRenamed("id", "hist_id")
+      val candidates = banded.select(Bands.cols.map(col): _*)
+        .join(idxBands, Bands.keys)
+        .select(col("id"), col("hist_id")).dropDuplicates("id", "hist_id")
+      val idxSh = spark.table(Shingles.of(table))
+        .select(col("id").as("hist_id"), col("shingles").as("sh2"))
+      val dupIds = candidates
+        .join(docs.select(col("id"), col("shingles").as("sh1")), Seq("id"))
+        .join(idxSh, Seq("hist_id"))
+        .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
+        .withColumn("jaccard", round(col("inter") /
+          ((size(col("sh1")) + size(col("sh2"))).cast("double") - col("inter")), 6))
+        .filter(col("jaccard") >= threshold)
+        .select(col("id")).distinct()
+      batch.join(dupIds.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
+    }
+
+    /** Verified in-batch pairs (id1, id2, jaccard), id1 < id2 — see
+      * [[minhashDupPairs]]. */
+    def dupPairs(threshold: Double): DataFrame = {
+      val shingleSets = docs.select(col("id"), col("shingles"))
+      val candidates = candidatePairs
+        .join(shingleSets.withColumnRenamed("id", "id1")
+          .withColumnRenamed("shingles", "sh1"), Seq("id1"))
+        .join(shingleSets.withColumnRenamed("id", "id2")
+          .withColumnRenamed("shingles", "sh2"), Seq("id2"))
+      verifyJaccard(candidates, threshold)
+    }
+
+    /** The number of LSH candidate pairs [[dupPairs]] would verify. */
+    def candidateCount: Long = candidatePairs.count()
+
+    /** This signing restricted to the ids of `kept` (a frame with the
+      * batch's id column), e.g. a dedup pass's survivors. */
+    def restrictTo(kept: DataFrame): SignedBatch = {
+      val ids = kept.select(col(idCol).as("id"))
+      new SignedBatch(batch.join(kept.select(col(idCol)), Seq(idCol), "left_semi"),
+        idCol, docs.join(ids, Seq("id"), "left_semi"),
+        banded.join(ids, Seq("id"), "left_semi"), partitionCols)
+    }
+
+    /** Write both index tables of `table`: `Overwrite` builds the index,
+      * `Append` adds this batch to it (`buckets` must match the build). */
+    def writeIndex(table: String, buckets: Int, mode: SaveMode): Unit =
+      Seq(Bands -> banded, Shingles -> docs).foreach { case (t, f) =>
+        Bucketing.writeBucketed(f.select(t.cols.map(col): _*), t.of(table),
+          buckets, t.keys, mode)
+      }
+
+    /** Band self-join: (id1, id2) sharing a band bucket, id1 < id2. With
+      * `partitionCols` the join also requires them EQUAL — candidates
+      * never form across partitions (the bucket hash is salted with them
+      * in [[bandRows]] too, so even the band shuffle keys separate). */
+    private def candidatePairs: DataFrame = {
+      val pcEq = partitionCols
+        .map(c => col(s"l.$c") === col(s"r.$c"))
+        .foldLeft(lit(true))(_ && _)
+      banded.as("l")
+        .join(banded.as("r"),
+          col("l.band") === col("r.band") &&
+            col("l.bucket") === col("r.bucket") &&
+            col("l.id") < col("r.id") && pcEq)
+        .select(col("l.id").as("id1"), col("r.id").as("id2"))
+        .dropDuplicates("id1", "id2")
+    }
   }
 
-  /** [[minhashDedupAgainstIndexTable]] over PRE-computed shingle/band
-    * frames — the shared-signing path for callers that need the same
-    * batch's shingles and bands more than once per micro-batch
-    * ([[graft.streaming.StreamRunner.runIncrementalNearDedup]] feeds the
-    * vs-history join, the in-batch pass and the index append from ONE
-    * materialized signing; re-deriving them from raw text tripled the
-    * per-batch signing cost and let parameters silently diverge).
-    * `docs`/`banded` must come from [[shingleDocsOf]]/[[bandRowsOf]] on
-    * the same batch. */
-  private[graft] def minhashDedupVsIndexPre(batch: DataFrame, idCol: String,
-                                            docs: DataFrame, banded: DataFrame,
-                                            table: String,
-                                            threshold: Double): DataFrame = {
-    val spark = batch.sparkSession
-    val idxBands = spark.table(s"${table}_bands")
-      .withColumnRenamed("id", "hist_id")
-    val candidates = banded.join(idxBands, Seq("band", "bucket"))
-      .select(col("id"), col("hist_id")).dropDuplicates("id", "hist_id")
-    val idxSh = spark.table(s"${table}_shingles")
-      .select(col("id").as("hist_id"), col("shingles").as("sh2"))
-    val dupIds = candidates
-      .join(docs.select(col("id"), col("shingles").as("sh1")), Seq("id"))
-      .join(idxSh, Seq("hist_id"))
-      .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
-      .withColumn("jaccard", round(col("inter") /
-        ((size(col("sh1")) + size(col("sh2"))).cast("double") - col("inter")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id")).distinct()
-    batch.join(dupIds.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
+  private[graft] object SignedBatch {
+    /** One table of the persisted MinHash index: name suffix, columns,
+      * bucket keys. */
+    private final case class IndexTable(suffix: String, cols: Seq[String],
+                                        keys: Seq[String]) {
+      def of(table: String): String = table + suffix
+    }
+    private val Bands =
+      IndexTable("_bands", Seq("id", "band", "bucket"), Seq("band", "bucket"))
+    private val Shingles =
+      IndexTable("_shingles", Seq("id", "n_sh", "shingles"), Seq("id"))
+
+    /** Shingle and MinHash-sign `df` once. `materialize` sees the shingle
+      * frame ("shingle") and then the band frame ("band") before either
+      * is used — the hook for a caller that checkpoints the signing it
+      * reuses; the band frame is derived from what it returns. Defaults
+      * are every MinHash entry point's. */
+    def sign(df: DataFrame, idCol: String, textCol: String,
+             shingleSize: Int = 3, bands: Int = 32, rowsPerBand: Int = 4,
+             seed: Long = 42L, partitionCols: Seq[String] = Nil,
+             materialize: (String, DataFrame) => DataFrame = (_, f) => f
+            ): SignedBatch = {
+      val docs = materialize("shingle",
+        shingleDocs(df, idCol, textCol, shingleSize, partitionCols))
+      val banded = materialize("band",
+        bandRows(docs, bands, rowsPerBand, seed, partitionCols))
+      new SignedBatch(df, idCol, docs, banded, partitionCols)
+    }
+
+    /** The physical tables of the MinHash index `table`. */
+    def tables(table: String): Seq[String] = Seq(Bands, Shingles).map(_.of(table))
+
+    def compactIndex(spark: org.apache.spark.sql.SparkSession, table: String,
+                     buckets: Int): Unit =
+      Seq(Bands, Shingles).foreach(t =>
+        Bucketing.compactBucketed(spark, t.of(table), buckets, t.keys,
+          dropDuplicates = true))
   }
 
-  /** Shared batch-vs-index dedup: one fingerprint projection (computed
-    * ONCE), anti-join against the index, then in-batch first-occurrence
-    * via a window over the fingerprint — which reuses the anti-join's
-    * hash partitioning on fp, so the whole thing costs the batch one
+  /** Shared batch-vs-index dedup: one key projection (computed ONCE),
+    * anti-join against the index, then in-batch first-occurrence via a
+    * window over the key — which reuses the anti-join's hash
+    * partitioning on the key, so the whole thing costs the batch one
     * shuffle (plus the index side's Exchange only when `idx` is not
     * bucketed). */
-  private def dedupNewAgainstIndex(df: DataFrame, idCol: String,
-                                   textCol: String, idx: DataFrame): DataFrame =
-    dedupNewAgainstIndexByKey(df, idCol,
-      TextFunctions.fingerprint(col(textCol)), idx)
-
   private def dedupNewAgainstIndexByKey(df: DataFrame, idCol: String,
                                         key: Column, idx: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -281,9 +351,7 @@ object Dedup {
     * never appended (no identity ⇒ no duplicate relation). */
   def buildKeyIndexTable(df: DataFrame, key: Column, table: String,
                          buckets: Int = 32): Unit =
-    Bucketing.writeBucketed(
-      df.select(key.as("fp")).filter(col("fp").isNotNull).distinct(),
-      table, buckets, Seq("fp"))
+    writeKeyIndex(df, key, table, buckets, SaveMode.Overwrite)
 
   def keyedDedupAgainstIndexTable(df: DataFrame, idCol: String, key: Column,
                                   table: String): DataFrame =
@@ -291,9 +359,13 @@ object Dedup {
 
   def appendKeysToIndexTable(newRows: DataFrame, key: Column, table: String,
                              buckets: Int = 32): Unit =
+    writeKeyIndex(newRows, key, table, buckets, SaveMode.Append)
+
+  private def writeKeyIndex(df: DataFrame, key: Column, table: String,
+                            buckets: Int, mode: SaveMode): Unit =
     Bucketing.writeBucketed(
-      newRows.select(key.as("fp")).filter(col("fp").isNotNull).distinct(),
-      table, buckets, Seq("fp"), org.apache.spark.sql.SaveMode.Append)
+      df.select(key.as("fp")).filter(col("fp").isNotNull).distinct(),
+      table, buckets, Seq("fp"), mode)
 
   /** `base`, suffixed with underscores until it collides with nothing in
     * `cols` — temp-column hygiene for operators that decorate arbitrary
@@ -304,71 +376,6 @@ object Dedup {
     n
   }
 
-  /** (id, shingles, n_sh) per document — distinct hashed word shingles
-    * (8 bytes each through every downstream shuffle), empty docs dropped,
-    * input widened so the scan uses every core. Shared by every
-    * shingle-based dedup path so tokenization/hashing can never diverge
-    * between them. */
-  /** Package-private handles on the shared shingle/band pipeline for the
-    * one-signing-per-batch streaming path (see
-    * [[minhashDedupVsIndexPre]]); parameters default to the values every
-    * minhash entry point here uses. */
-  private[graft] def shingleDocsOf(df: DataFrame, idCol: String,
-                                   textCol: String,
-                                   shingleSize: Int = 3,
-                                   extraCols: Seq[String] = Nil): DataFrame =
-    shingleDocs(df, idCol, textCol, shingleSize, extraCols)
-
-  private[graft] def bandRowsOf(docs: DataFrame, bands: Int = 32,
-                                rowsPerBand: Int = 4,
-                                seed: Long = 42L,
-                                partitionCols: Seq[String] = Nil): DataFrame =
-    bandRows(docs, bands, rowsPerBand, seed, partitionCols)
-
-  /** Append PRE-computed shingle/band frames (restricted to the batch's
-    * survivors) to the MinHash index — the streaming path's variant of
-    * [[appendToMinHashIndexTable]] that reuses the signing the dedup
-    * passes already paid for. */
-  private[graft] def appendToMinHashIndexTablePre(docs: DataFrame,
-                                                  banded: DataFrame,
-                                                  table: String,
-                                                  buckets: Int): Unit = {
-    Bucketing.writeBucketed(banded, s"${table}_bands", buckets,
-      Seq("band", "bucket"), org.apache.spark.sql.SaveMode.Append)
-    Bucketing.writeBucketed(docs.select(col("id"), col("n_sh"), col("shingles")),
-      s"${table}_shingles", buckets, Seq("id"),
-      org.apache.spark.sql.SaveMode.Append)
-  }
-
-  /** [[minhashDupPairs]] over PRE-computed shingle/band frames. When
-    * `partitionCols` is non-empty the banded frame carries those
-    * columns and the self-join requires them EQUAL — candidates never
-    * form across partitions (the bucket hash is additionally salted
-    * with them in [[bandRows]], so even the band shuffle keys separate
-    * by partition). */
-  private[graft] def minhashDupPairsPre(docs: DataFrame, banded: DataFrame,
-                                        threshold: Double,
-                                        partitionCols: Seq[String] = Nil
-                                       ): DataFrame = {
-    val pcEq = partitionCols
-      .map(c => col(s"l.$c") === col(s"r.$c"))
-      .foldLeft(lit(true))(_ && _)
-    val candidateIds = banded.as("l")
-      .join(banded.as("r"),
-        col("l.band") === col("r.band") &&
-          col("l.bucket") === col("r.bucket") &&
-          col("l.id") < col("r.id") && pcEq)
-      .select(col("l.id").as("id1"), col("r.id").as("id2"))
-      .dropDuplicates("id1", "id2")
-    val shingleSets = docs.select(col("id"), col("shingles"))
-    val candidates = candidateIds
-      .join(shingleSets.withColumnRenamed("id", "id1")
-        .withColumnRenamed("shingles", "sh1"), Seq("id1"))
-      .join(shingleSets.withColumnRenamed("id", "id2")
-        .withColumnRenamed("shingles", "sh2"), Seq("id2"))
-    verifyJaccard(candidates, threshold)
-  }
-
   /** Diagnostic: the number of LSH candidate pairs [[minhashDupPairs]]
     * would exact-verify with these parameters — the pre-verification
     * surface whose size `partitionCols` exists to cut (spec-pinned on a
@@ -376,21 +383,15 @@ object Dedup {
   private[graft] def minhashCandidateCount(df: DataFrame, idCol: String,
       textCol: String, shingleSize: Int = 3, bands: Int = 32,
       rowsPerBand: Int = 4, seed: Long = 42L,
-      partitionCols: Seq[String] = Nil): Long = {
-    val docs = shingleDocs(df, idCol, textCol, shingleSize, partitionCols)
-    val banded = bandRows(docs, bands, rowsPerBand, seed, partitionCols)
-    val pcEq = partitionCols.map(c => col(s"l.$c") === col(s"r.$c"))
-      .foldLeft(lit(true))(_ && _)
-    banded.as("l")
-      .join(banded.as("r"),
-        col("l.band") === col("r.band") &&
-          col("l.bucket") === col("r.bucket") &&
-          col("l.id") < col("r.id") && pcEq)
-      .select(col("l.id").as("id1"), col("r.id").as("id2"))
-      .dropDuplicates("id1", "id2")
-      .count()
-  }
+      partitionCols: Seq[String] = Nil): Long =
+    SignedBatch.sign(df, idCol, textCol, shingleSize, bands, rowsPerBand,
+      seed, partitionCols).candidateCount
 
+  /** (id, [extraCols...], shingles, n_sh) per document — distinct hashed
+    * word shingles (8 bytes each through every downstream shuffle),
+    * empty docs dropped, input widened so the scan uses every core.
+    * Shared by every shingle-based dedup path so tokenization/hashing
+    * can never diverge between them. */
   private def shingleDocs(df: DataFrame, idCol: String, textCol: String,
                           shingleSize: Int,
                           extraCols: Seq[String] = Nil): DataFrame = {
@@ -550,11 +551,9 @@ object Dedup {
                       bands: Int = 32, rowsPerBand: Int = 4,
                       threshold: Double = 0.8,
                       seed: Long = 42L,
-                      partitionCols: Seq[String] = Nil): DataFrame = {
-    val docs = shingleDocs(df, idCol, textCol, shingleSize, partitionCols)
-    val banded = bandRows(docs, bands, rowsPerBand, seed, partitionCols)
-    minhashDupPairsPre(docs, banded, threshold, partitionCols)
-  }
+                      partitionCols: Seq[String] = Nil): DataFrame =
+    SignedBatch.sign(df, idCol, textCol, shingleSize, bands, rowsPerBand,
+      seed, partitionCols).dupPairs(threshold)
 
   /** Cross-lingual near-dup pairs: fold BEFORE MinHash. Diacritic,
     * case, and transliteration variants of the same document ("café
@@ -818,10 +817,8 @@ object Dedup {
                                    textCol: String, table: String,
                                    shingleSize: Int = 3,
                                    buckets: Int = 32): Unit =
-    Bucketing.writeBucketed(
-      invertedIndex(shingleDocs(benchmark, idCol, textCol, shingleSize))
-        .select(col("id"), col("n_sh"), col("sh")),
-      table, buckets, Seq("sh"))
+    writeNgramInvertedIndex(benchmark, idCol, textCol, table, shingleSize,
+      buckets, SaveMode.Overwrite)
 
   /** Append newly-arrived benchmark docs to the inverted index — same
     * replay-idempotency contract as [[appendToFingerprintIndexTable]]:
@@ -834,11 +831,17 @@ object Dedup {
                                       idCol: String, textCol: String,
                                       table: String, shingleSize: Int = 3,
                                       buckets: Int = 32): Unit =
+    writeNgramInvertedIndex(newBenchmark, idCol, textCol, table, shingleSize,
+      buckets, SaveMode.Append)
+
+  private def writeNgramInvertedIndex(df: DataFrame, idCol: String,
+                                      textCol: String, table: String,
+                                      shingleSize: Int, buckets: Int,
+                                      mode: SaveMode): Unit =
     Bucketing.writeBucketed(
-      invertedIndex(shingleDocs(newBenchmark, idCol, textCol, shingleSize))
+      invertedIndex(shingleDocs(df, idCol, textCol, shingleSize))
         .select(col("id"), col("n_sh"), col("sh")),
-      table, buckets, Seq("sh"),
-      org.apache.spark.sql.SaveMode.Append)
+      table, buckets, Seq("sh"), mode)
 
   /** [[crossNgramJaccardPairs]] with the benchmark side read from the
     * persisted inverted index: returns (bench_id, corpus_id, jaccard)
@@ -1411,10 +1414,8 @@ object Dedup {
                               table: String, minMatch: Int = 8,
                               hashedAnchors: Boolean = true,
                               buckets: Int = 32): Unit =
-    Bucketing.writeBucketed(
-      spanGrams(df, idCol, textCol, minMatch, hashedAnchors)
-        .select(col("__gram").as("fp")).distinct(),
-      table, buckets, Seq("fp"))
+    writeSpanGramIndex(df, idCol, textCol, table, minMatch, hashedAnchors,
+      buckets, SaveMode.Overwrite)
 
   /** Append a processed batch's grams to the span index. Replayed appends
     * are harmless (duplicate fp rows only widen the semi-join's match set
@@ -1425,11 +1426,17 @@ object Dedup {
                                  minMatch: Int = 8,
                                  hashedAnchors: Boolean = true,
                                  buckets: Int = 32): Unit =
+    writeSpanGramIndex(newDocs, idCol, textCol, table, minMatch,
+      hashedAnchors, buckets, SaveMode.Append)
+
+  private def writeSpanGramIndex(df: DataFrame, idCol: String,
+                                 textCol: String, table: String,
+                                 minMatch: Int, hashedAnchors: Boolean,
+                                 buckets: Int, mode: SaveMode): Unit =
     Bucketing.writeBucketed(
-      spanGrams(newDocs, idCol, textCol, minMatch, hashedAnchors)
+      spanGrams(df, idCol, textCol, minMatch, hashedAnchors)
         .select(col("__gram").as("fp")).distinct(),
-      table, buckets, Seq("fp"),
-      mode = org.apache.spark.sql.SaveMode.Append)
+      table, buckets, Seq("fp"), mode)
 
   /** [[removeDuplicateSpans]] for one ingestion batch against the
     * persisted gram index: any anchor whose gram exists in HISTORY is

@@ -252,21 +252,16 @@ object Recipe {
                         fingerprintTable: String, minhashTable: String,
                         benchNgramTable: String, buckets: Int = 8): Unit = {
     import org.apache.spark.sql.types._
-    def empty(fields: (String, DataType)*) =
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(fields.map { case (n, t) => StructField(n, t) }))
-    Bucketing.writeBucketed(empty("fp" -> LongType),
-      fingerprintTable, buckets, Seq("fp"))
-    Bucketing.writeBucketed(
-      empty("id" -> LongType, "band" -> IntegerType, "bucket" -> LongType),
-      s"${minhashTable}_bands", buckets, Seq("band", "bucket"))
-    Bucketing.writeBucketed(
-      empty("id" -> LongType, "n_sh" -> IntegerType,
-        "shingles" -> ArrayType(LongType)),
-      s"${minhashTable}_shingles", buckets, Seq("id"))
-    Bucketing.writeBucketed(
-      empty("id" -> LongType, "n_sh" -> IntegerType, "sh" -> LongType),
-      benchNgramTable, buckets, Seq("sh"))
+    // the build functions themselves, on an empty frame: the index
+    // schemas are stated once, by the code that writes every batch
+    val empty = spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](),
+      StructType(Seq(StructField("id", LongType), StructField("__t", StringType))))
+    Dedup.buildFingerprintIndexTable(empty, "__t", fingerprintTable, buckets)
+    Dedup.buildMinHashIndexTable(empty, "id", "__t", minhashTable,
+      buckets = buckets)
+    Dedup.buildNgramInvertedIndexTable(empty, "id", "__t", benchNgramTable,
+      shingleSize = 3, buckets = buckets)
   }
 
   /** Offline maintenance for the [[curateIncremental]] index set: every
@@ -437,20 +432,13 @@ object Recipe {
     // is shingled and MinHash-signed exactly ONCE (the streaming
     // runners' one-signing discipline): the vs-history join, the
     // in-batch pair pass AND the deferred index append below all reuse
-    // these two frames — re-signing from raw text tripled the
-    // per-batch cost and let parameters silently diverge.
-    val docsSh = labeled(session, "shingle ckpt")(
-      Dedup.shingleDocsOf(exact, idCol, "__t",
-        extraCols = Seq(sourceCol)).localCheckpoint())
-    val bandedSh = labeled(session, "band ckpt")(
-      Dedup.bandRowsOf(docsSh,
-        partitionCols = Seq(sourceCol)).localCheckpoint())
-    val vsHist = Dedup.minhashDedupVsIndexPre(exact, idCol,
-      docsSh.select(col("id"), col("n_sh"), col("shingles")),
-      bandedSh.select(col("id"), col("band"), col("bucket")),
-      minhashTable, nearThreshold)
-    val inBatchDrop = Dedup.minhashDupPairsPre(docsSh, bandedSh,
-        nearThreshold, partitionCols = Seq(sourceCol))
+    // this signing, materialized.
+    val signed = Dedup.SignedBatch.sign(exact, idCol, "__t",
+      partitionCols = Seq(sourceCol),
+      materialize = (stage, f) =>
+        labeled(session, s"$stage ckpt")(f.localCheckpoint()))
+    val vsHist = signed.survivorsVsIndex(minhashTable, nearThreshold)
+    val inBatchDrop = signed.dupPairs(nearThreshold)
       .select(col("id2").as(idCol)).distinct()
     val near = labeled(session, "near ckpt")(
       vsHist.join(inBatchDrop, Seq(idCol), "left_anti")
@@ -546,9 +534,6 @@ object Recipe {
     // read. bench is a filter over the checkpointed `near`, so the
     // closure stays valid however late the caller invokes it.
     val append = () => {
-      // reuse the stage-4 signing — restricted to the near survivors —
-      // instead of re-shingling the survivors from raw text
-      val keptIds = near.select(col(idCol).as("id"))
       // the three appends write three INDEPENDENT tables from already-
       // materialized frames: submit them from a small pool so the next
       // append's tasks back-fill executors freed by the previous one's
@@ -561,12 +546,10 @@ object Recipe {
           Dedup.appendToFingerprintIndexTable(exact, "__t",
             fingerprintTable, buckets)),
         () => labeled(session, "append minhash")(
-          Dedup.appendToMinHashIndexTablePre(
-            docsSh.select(col("id"), col("n_sh"), col("shingles"))
-              .join(keptIds, Seq("id"), "left_semi"),
-            bandedSh.select(col("id"), col("band"), col("bucket"))
-              .join(keptIds, Seq("id"), "left_semi"),
-            minhashTable, buckets)),
+          // the stage-4 signing restricted to the near survivors, not a
+          // re-signing of the survivors' raw text
+          signed.restrictTo(near).writeIndex(minhashTable, buckets,
+            org.apache.spark.sql.SaveMode.Append)),
         () => labeled(session, "append bench ngram")(
           Dedup.appendToNgramInvertedIndexTable(bench, idCol, "__t",
             benchNgramTable, shingleSize = 3, buckets = buckets)))

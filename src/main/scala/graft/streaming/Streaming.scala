@@ -3,7 +3,7 @@ package graft.streaming
 import graft.filedf.FileFormat
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming extension.
@@ -558,39 +558,26 @@ object StreamRunner {
                              (sink: (DataFrame, Long) => Unit): Unit =
     runAvailableNowForeachBatchExactlyOnce(stream, checkpoint, store,
         ledgerName) { (batch, id) =>
-      import org.apache.spark.sql.functions.col
-      import graft.operators.Dedup
-      // the batch is shingled and MinHash-signed exactly ONCE: docs and
-      // banded are materialized and every consumer below — the vs-history
-      // join, the in-batch pair pass, and the index append — reuses them.
-      // (Earlier rounds re-signed from raw text in all three places,
-      // tripling the per-batch signature cost; sharing the frames also
-      // makes parameter divergence between the passes impossible.)
-      val docs = Dedup.shingleDocsOf(batch, idCol, textCol).localCheckpoint()
-      val banded = Dedup.bandRowsOf(docs).localCheckpoint()
+      import graft.operators.Dedup.SignedBatch
+      // the batch is shingled and MinHash-signed exactly ONCE and
+      // materialized: the vs-history join, the in-batch pair pass and the
+      // index append below all reuse that one signing
+      val signed = SignedBatch.sign(batch, idCol, textCol,
+        materialize = (_, f) => f.localCheckpoint())
       // localCheckpoint: vsIndex feeds TWO consumers (the survivor frame
       // and the in-batch restriction) — without materialization the
       // expensive index-vs-batch LSH join would execute twice per batch
-      val vsIndex = Dedup
-        .minhashDedupVsIndexPre(batch, idCol, docs, banded, indexTable,
-          threshold)
+      val vsIndex = signed.survivorsVsIndex(indexTable, threshold)
         .localCheckpoint()
-      val vsIds = vsIndex.select(col(idCol).as("id"))
-      val inBatchDups = Dedup
-        .minhashDupPairsPre(
-          docs.join(vsIds, Seq("id"), "left_semi"),
-          banded.join(vsIds, Seq("id"), "left_semi"), threshold)
+      val inBatchDups = signed.restrictTo(vsIndex).dupPairs(threshold)
         .select(col("id2").as(idCol))
         .distinct()
       val survivors = vsIndex
         .join(inBatchDups, Seq(idCol), "left_anti")
         .localCheckpoint()
       sink(survivors, id)
-      val keptIds = survivors.select(col(idCol).as("id"))
-      Dedup.appendToMinHashIndexTablePre(
-        docs.join(keptIds, Seq("id"), "left_semi"),
-        banded.join(keptIds, Seq("id"), "left_semi"),
-        indexTable, indexBuckets)
+      signed.restrictTo(survivors).writeIndex(indexTable,
+        indexBuckets, SaveMode.Append)
     }
 
   /** The WHOLE curation recipe on ingest — the composition a daily

@@ -136,6 +136,20 @@ class DbReaderSpec extends SparkSpec {
     assert(store.get("ib.id").get.valueOpt.contains(100L))
   }
 
+  test("incremental-batch runaway guard: a step of 1 over 150 keys stops " +
+       "at the iteration cap") {
+    val conn = freshConn()
+    writeRows(conn, "rg", (1L to 150L).map(i => (i, "x")))
+    val b = new IncrementalBatchStrategy(1L, store = new InMemoryHwmStore)
+    val reader = DbReader(conn, "rg", hwm = Some(HwmColumn("id")))
+    val e = intercept[IllegalStateException] {
+      Strategy.using(b) { b.foreachBatch(reader.run()) }
+    }
+    assert(e.getMessage.startsWith(
+      s"batch strategy exceeded ${b.MaxIterations} iterations"), e.getMessage)
+    assert(b.iterations == b.MaxIterations + 1)
+  }
+
   test("timestamp HWM: incremental over event time") {
     val conn = freshConn()
     val store = new InMemoryHwmStore

@@ -170,6 +170,39 @@ class DedupIndexSpec extends SparkSpec {
     }
   }
 
+  test("initRecipeIndexes creates every index with the schema and bucket " +
+       "spec its build function writes from data") {
+    val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(10)
+    val (fpI, mhI, bnI) = (s"drift_fp_i_$tag", s"drift_mh_i_$tag", s"drift_bn_i_$tag")
+    val (fpB, mhB, bnB) = (s"drift_fp_b_$tag", s"drift_mh_b_$tag", s"drift_bn_b_$tag")
+    val pairs = Seq(fpI -> fpB, s"${mhI}_bands" -> s"${mhB}_bands",
+      s"${mhI}_shingles" -> s"${mhB}_shingles", bnI -> bnB)
+    def bucketSpec(t: String): Map[String, String] =
+      spark.sql(s"DESCRIBE TABLE EXTENDED $t").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+        .filter { case (k, _) =>
+          Set("Num Buckets", "Bucket Columns", "Sort Columns")(k) }
+    try {
+      Recipe.initRecipeIndexes(spark, fpI, mhI, bnI, buckets = 2)
+      val one = Seq((1L, "s0", "one short document about index schemas"))
+        .toDF("doc_id", "source", "text")
+      Dedup.buildFingerprintIndexTable(one, "text", fpB, buckets = 2)
+      Dedup.buildMinHashIndexTable(one, "doc_id", "text", mhB, buckets = 2,
+        partitionCols = Seq("source"))
+      Dedup.buildNgramInvertedIndexTable(one, "doc_id", "text", bnB,
+        buckets = 2)
+      pairs.foreach { case (init, built) =>
+        assert(spark.table(init).schema === spark.table(built).schema,
+          s"$init vs $built")
+        assert(bucketSpec(init).size === 3, s"$init: ${bucketSpec(init)}")
+        assert(bucketSpec(init) === bucketSpec(built), s"$init vs $built")
+      }
+    } finally pairs.foreach { case (i, b) =>
+      spark.sql(s"DROP TABLE IF EXISTS $i")
+      spark.sql(s"DROP TABLE IF EXISTS $b")
+    }
+  }
+
   test("compactBucketed heals append fragmentation, keeps the bucketed layout") {
     val table = "graft_fp_idx_compact"
     Dedup.buildFingerprintIndexTable(hist, "text", table, buckets = 4)
