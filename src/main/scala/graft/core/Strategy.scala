@@ -51,7 +51,6 @@ object WindowMath {
   * pattern (`Strategy.using(s) { ... }`) — thread-safe and scope-exact.
   */
 sealed trait Strategy {
-  private[core] def enter(): Unit = ()
   /** Called only on clean scope exit (reference hwm_strategy.py:117-119
     * saves the HWM only when the context exits without error). */
   private[core] def exitSuccess(): Unit = ()
@@ -62,7 +61,6 @@ object Strategy {
   def current: Strategy = stack.value
 
   def using[A](s: Strategy)(body: => A): A = stack.withValue(s) {
-    s.enter()
     val result = body
     s.exitSuccess()
     result
@@ -109,7 +107,7 @@ sealed abstract class HwmStrategy(val store: HwmStore) extends Strategy {
         case Some(cur) =>
           h match {
             case _: FileListHwm | _: FileMTimeHwm | _: KeyValueIntHwm => h.withValue(value)
-            case _ => if (WindowMath.lt(cur, HwmCast.align(h, value))) h.withValue(value) else h
+            case _ => if (WindowMath.lt(cur, align(value))) h.withValue(value) else h
           }
         case None => h.withValue(value)
       }
@@ -125,19 +123,19 @@ sealed abstract class HwmStrategy(val store: HwmStore) extends Strategy {
     case None => Edge.unset
   }
 
-  override private[core] def exitSuccess(): Unit = saveHwm()
-}
+  /** The window the reader reads next over `expression`, or None when
+    * there is nothing to read (reference db_reader.py:718-794). `probe`
+    * returns the source's MIN/MAX of `expression` inside a window whose
+    * edges are both inclusive; `>` vs `>=` applies only to the returned
+    * window (db_reader.py:741-746). Call after [[fetchHwm]]. */
+  private[graft] def nextWindow(expression: String,
+                                probe: Window => (Option[Any], Option[Any])): Option[Window]
 
-private object HwmCast {
-  /** Normalize a raw value (from Spark Row) to the HWM's value domain so
-    * comparisons are type-stable. */
-  def align(h: Hwm, v: Any): Any = h match {
-    case _: IntHwm => HwmValue.toLong(v)
-    case _: DecimalHwm => HwmValue.toBigDecimal(v)
-    case _: DateHwm => HwmValue.toLocalDate(v)
-    case _: DateTimeHwm => HwmValue.toInstant(v)
-    case _ => v
-  }
+  /** `v` (a Spark row value or a user literal) in the bound HWM's value
+    * type — the conversion its `withValue` applies. */
+  protected def align(v: Any): Any = hwm.get.withValue(v).valueOpt.get
+
+  override private[core] def exitSuccess(): Unit = saveHwm()
 }
 
 /** Window `(hwm, max]`; first run reads everything then saves the max.
@@ -148,11 +146,19 @@ final class IncrementalStrategy(val offset: Option[Any] = None,
   extends HwmStrategy(store) {
 
   override def startEdge: Edge = (hwm.flatMap(_.valueOpt), offset) match {
-    case (Some(v), Some(off)) =>
-      Edge.exclusive(WindowMath.add(HwmCast.align(hwm.get, v),
-        negate(off)))
-    case (Some(v), None) => Edge.exclusive(HwmCast.align(hwm.get, v))
+    case (Some(v), Some(off)) => Edge.exclusive(WindowMath.add(v, negate(off)))
+    case (Some(v), None) => Edge.exclusive(v)
     case (None, _) => Edge.unset
+  }
+
+  /** `(startEdge, max]`, with `max` probed from the inclusive start so the
+    * HWM matches the frame even if rows arrive mid-read
+    * (db_reader.py:786-792). */
+  private[graft] def nextWindow(expression: String,
+                                probe: Window => (Option[Any], Option[Any])): Option[Window] = {
+    val start = startEdge
+    probe(Window(expression, Edge(start.value)))._2
+      .map(mx => Window(expression, start, Edge.inclusive(align(mx))))
   }
 
   private def negate(step: Any): Any = step match {
@@ -178,65 +184,86 @@ sealed abstract class BatchHwmStrategy(val step: Any, store: HwmStore)
   /** Runaway guard (reference batch_hwm_strategy.py:28). */
   val MaxIterations = 100
 
-  @volatile private[graft] var start: Option[Any] = None
-  @volatile private[graft] var stop: Option[Any] = None
-  @volatile private[graft] var left: Option[Any] = None
-  @volatile private[graft] var initialized = false
-  @volatile private[graft] var isFirstBatch = true
+  /** End of the range; None until the range is seeded. */
+  @volatile private var stop: Option[Any] = None
+  /** Start edge of the next window; None before seeding and once the
+    * range is covered. */
+  @volatile private var next: Option[Edge] = None
   @volatile private[graft] var iterations = 0
 
-  @volatile private[graft] var startExclusive = false
+  /** The range's first edge as far as the strategy itself knows it;
+    * an unset value is probed as the source MIN. */
+  protected def firstEdge: Edge
+  /** The range's end as far as the strategy itself knows it; None is
+    * probed as the source MAX. */
+  protected def lastValue: Option[Any]
 
-  /** Called by the reader once min/max are known. `exclusiveStart` marks a
-    * start seeded from a STORED HWM, whose row was already consumed by the
+  /** Seed the range `startV .. stopV`. `exclusiveStart` marks a start
+    * seeded from a STORED HWM, whose row was already consumed by the
     * previous run: the reference renders that edge with `>` because
     * `HWMStrategy.current` is exclusive when the HWM is set
     * (hwm_strategy.py:24-31), and `BatchHWMStrategy.current` only falls
     * back to the inclusive `start` when it is not
     * (batch_hwm_strategy.py:98-106). A probed MIN or explicit start stays
-    * inclusive. */
+    * inclusive. Later calls are no-ops. */
   private[graft] def initialize(startV: Any, stopV: Any,
                                 exclusiveStart: Boolean = false): Unit =
     synchronized {
-      if (!initialized) {
+      if (stop.isEmpty) {
         if (WindowMath.lt(stopV, startV))
           throw new IllegalStateException(s"batch window stop $stopV < start $startV")
-        start = Some(startV); stop = Some(stopV); left = Some(startV)
-        startExclusive = exclusiveStart
-        initialized = true
+        stop = Some(stopV)
+        next = Some(Edge(Some(startV), including = !exclusiveStart))
       }
     }
 
   private[graft] def currentWindow(expression: String): Window = {
-    val l = left.getOrElse(throw new IllegalStateException("batch not initialized"))
-    val s = stop.get
-    val right = WindowMath.min(WindowMath.add(l, step), s)
-    Window(expression,
-      startFrom = if (isFirstBatch && !startExclusive) Edge.inclusive(l)
-                  else Edge.exclusive(l),
-      stopAt = Edge.inclusive(right))
+    val from = next.getOrElse(throw new IllegalStateException(
+      "no batch window: range not seeded or already covered"))
+    Window(expression, from,
+      Edge.inclusive(WindowMath.min(WindowMath.add(from.value.get, step), stop.get)))
   }
 
+  /** Seeds the range on the first call — probing only the edges
+    * [[firstEdge]]/[[lastValue]] leave unset; an empty source leaves it
+    * unseeded — then returns the current window until the range is
+    * covered. */
+  private[graft] def nextWindow(expression: String,
+                                probe: Window => (Option[Any], Option[Any])): Option[Window] =
+    synchronized {
+      if (stop.isEmpty) {
+        val first = firstEdge
+        val range = (first.value, lastValue) match {
+          case (Some(s), Some(e)) => Some((s, e))
+          case (s, e) => probe(Window(expression, Edge(s), Edge(e))) match {
+            case (Some(mn), Some(mx)) => Some((s.getOrElse(align(mn)), e.getOrElse(align(mx))))
+            case _ => None
+          }
+        }
+        range.foreach { case (s, e) => initialize(s, e, exclusiveStart = !first.including) }
+      }
+      next.map(_ => currentWindow(expression))
+    }
+
+  /** Move past the current window; true once the range is covered. */
   private[graft] def advance(expression: String): Boolean = synchronized {
     iterations += 1
     if (iterations > MaxIterations)
       throw new IllegalStateException(
         s"batch strategy exceeded $MaxIterations iterations — check step sign/size")
-    if (!initialized) return false
-    val w = currentWindow(expression)
-    // Monotonicity check (reference batch_hwm_strategy.py:111-127).
-    if (WindowMath.lt(w.stopAt.value.get, left.get))
-      throw new IllegalStateException("batch window is not advancing")
-    left = w.stopAt.value
-    isFirstBatch = false
+    if (stop.isEmpty) return false
+    next.foreach { from =>
+      val right = currentWindow(expression).stopAt.value.get
+      // Monotonicity check (reference batch_hwm_strategy.py:111-127).
+      if (WindowMath.lt(right, from.value.get))
+        throw new IllegalStateException("batch window is not advancing")
+      next = if (WindowMath.lt(right, stop.get)) Some(Edge.exclusive(right)) else None
+    }
     // each completed batch persists the HWM (reference
     // incremental_strategy.py:572-574); a snapshot batch's save is a no-op
     saveHwm()
-    !WindowMath.lt(left.get, stop.get) // true = done
+    next.isEmpty
   }
-
-  private[graft] def exhausted: Boolean =
-    initialized && !WindowMath.lt(left.get, stop.get)
 
   /** Run `body` once per batch window until the range is covered. */
   def foreachBatch[A](body: => A): Seq[A] = {
@@ -244,7 +271,7 @@ sealed abstract class BatchHwmStrategy(val step: Any, store: HwmStore)
     var done = false
     while (!done) {
       out += body
-      done = if (!initialized) true // reader found empty source: single batch
+      done = if (stop.isEmpty) true // reader found empty source: single batch
              else advance(hwm.map(_.expression).getOrElse(""))
     }
     out.result()
@@ -259,6 +286,8 @@ final class SnapshotBatchStrategy(step: Any,
                                   store: HwmStore = HwmStore.current)
   extends BatchHwmStrategy(step, store) {
   override def saveHwm(): Unit = () // never persists (snapshot_strategy.py:96)
+  protected def firstEdge: Edge = Edge(explicitStart.map(align))
+  protected def lastValue: Option[Any] = explicitStop.map(align)
 }
 
 object SnapshotBatchStrategy {
@@ -270,7 +299,10 @@ object SnapshotBatchStrategy {
   * (reference incremental_strategy.py:414). */
 final class IncrementalBatchStrategy(step: Any,
                                      store: HwmStore = HwmStore.current)
-  extends BatchHwmStrategy(step, store)
+  extends BatchHwmStrategy(step, store) {
+  protected def firstEdge: Edge = startEdge
+  protected def lastValue: Option[Any] = None
+}
 
 object IncrementalBatchStrategy {
   def apply(step: Any): IncrementalBatchStrategy = new IncrementalBatchStrategy(step)

@@ -56,25 +56,18 @@ final case class FileDFWriter(format: FileFormat,
 
   def run(df: DataFrame): Unit = {
     require(!df.isStreaming, "FileDFWriter is batch-only; use graft.streaming for streams")
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    val mode = ifExists match {
-      case DirIfExists.Append => "append"
-      case DirIfExists.ReplaceOverlappingPartitions =>
-        spark.conf.set(key, "dynamic"); "overwrite"
-      case DirIfExists.ReplaceEntireDirectory =>
-        spark.conf.set(key, "static"); "overwrite"
-      case DirIfExists.SkipEntireDirectory => "ignore"
-      case DirIfExists.Error => "error"
+    // a per-write option, not the session conf: concurrent writers on one
+    // session must not see each other's overwrite mode
+    val (mode, overwriteMode) = ifExists match {
+      case DirIfExists.Append => ("append", None)
+      case DirIfExists.ReplaceOverlappingPartitions => ("overwrite", Some("dynamic"))
+      case DirIfExists.ReplaceEntireDirectory => ("overwrite", Some("static"))
+      case DirIfExists.SkipEntireDirectory => ("ignore", None)
+      case DirIfExists.Error => ("error", None)
     }
-    try {
-      var w = format.applyToWriter(df.write).options(options).mode(mode)
-      if (partitionBy.nonEmpty) w = w.partitionBy(partitionBy: _*)
-      w.save(targetPath)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    var w = format.applyToWriter(df.write).options(options).mode(mode)
+    overwriteMode.foreach(m => w = w.option("partitionOverwriteMode", m))
+    if (partitionBy.nonEmpty) w = w.partitionBy(partitionBy: _*)
+    w.save(targetPath)
   }
 }

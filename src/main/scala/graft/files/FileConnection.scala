@@ -151,8 +151,22 @@ final class LocalFileConnection extends FileConnection {
   */
 final class FtpFileConnection(host: String, port: Int = 21,
                               user: String = "anonymous",
-                              password: String = "") extends FileConnection {
-  private val inner: HadoopFsConnection = {
+                              password: String = "")
+  extends HadoopFsConnection(s"ftp://$host:$port/",
+    FtpFileConnection.conf(host, port, user, password)) {
+
+  /** A real round trip (root listing), not FileSystem.getStatus — whose
+    * default implementation answers from the client without touching the
+    * server at all. */
+  override def check(): this.type = {
+    require(isDir("/"), s"ftp://$host:$port/ root not listable")
+    this
+  }
+}
+
+object FtpFileConnection {
+  private def conf(host: String, port: Int, user: String,
+                   password: String): Configuration = {
     val conf = new Configuration()
     conf.set("fs.ftp.host", host)
     conf.setInt("fs.ftp.host.port", port)
@@ -163,34 +177,15 @@ final class FtpFileConnection(host: String, port: Int = 21,
     // one FileSystem per (host, port, credentials) — the JVM-wide cache
     // would hand every FtpFileConnection for a host the first credentials
     conf.setBoolean("fs.ftp.impl.disable.cache", true)
-    new HadoopFsConnection(s"ftp://$host:$port/", conf)
+    conf
   }
-
-  /** A real round trip (root listing), not FileSystem.getStatus — whose
-    * default implementation answers from the client without touching the
-    * server at all. */
-  def check(): this.type = {
-    require(inner.isDir("/"), s"ftp://$host:$port/ root not listable")
-    this
-  }
-  def exists(path: String): Boolean = inner.exists(path)
-  def isDir(path: String): Boolean = inner.isDir(path)
-  def stat(path: String): PathStat = inner.stat(path)
-  def listDir(path: String): Seq[RemoteEntry] = inner.listDir(path)
-  def mkdirs(path: String): Unit = inner.mkdirs(path)
-  def removeFile(path: String): Unit = inner.removeFile(path)
-  def removeDir(path: String, recursive: Boolean): Unit = inner.removeDir(path, recursive)
-  def renameFile(source: String, target: String): Unit = inner.renameFile(source, target)
-  def downloadFile(remote: String, local: Path): Unit = inner.downloadFile(remote, local)
-  def uploadFile(local: Path, remote: String): Unit = inner.uploadFile(local, remote)
-  def open(path: String): InputStream = inner.open(path)
 }
 
 /** Hadoop-FileSystem-backed client: one implementation for `file://`,
   * `hdfs://`, `s3a://` (SURVEY §2.3 — Hadoop FS covers HDFS+S3+local in one
   * SPI, replacing the reference's per-protocol Python clients). */
-final class HadoopFsConnection(baseUri: String,
-                               conf: Configuration = new Configuration())
+class HadoopFsConnection(baseUri: String,
+                         conf: Configuration = new Configuration())
   extends FileConnection {
   private val fs: FileSystem = FileSystem.get(URI.create(baseUri), conf)
   private def hp(s: String) = new HPath(s)

@@ -17,17 +17,19 @@ final case class HwmColumn(expression: String, name: Option[String] = None) {
   * windowed by the active [[graft.core.Strategy]].
   *
   * Port of the reference's DBReader semantics (onetl/db/db_reader/
-  * db_reader.py:52,550-794), with the window-planning subtleties kept:
+  * db_reader.py:52,550-794). The active strategy plans the window
+  * (`HwmStrategy.nextWindow`); the reader pushes it to the source:
   *
   *  - start/stop both known → no MIN/MAX probe (db_reader.py:728-731);
   *  - MIN/MAX fetched with both edges INCLUSIVE; `>` vs `>=` applied only in
   *    the final dataframe query (db_reader.py:741-746);
-  *  - empty source → `limit=0` so an *empty* frame (not an unfiltered one)
-  *    returns (db_reader.py:752-756);
+  *  - nothing to read (empty source, covered batch range) → `limit=0` so an
+  *    *empty* frame (not an unfiltered one) returns (db_reader.py:752-756);
   *  - IncrementalStrategy pins `stop_at` to the observed max so the HWM
   *    matches dataframe content even if rows arrive mid-read (:786-792);
   *  - HWM is updated with the window stop *before* the lazy read executes
   *    (:592-595) — intentional eager-update semantics;
+  *  - `hasData` checks the same window `run()` reads next;
   *  - HWM without a HwmStrategy (and vice versa) is a usage error
   *    (:611-624).
   */
@@ -59,13 +61,14 @@ final case class DbReader(connection: DbConnection,
       s"${connection.getClass.getSimpleName} -> DbReader.run($source)") {
       graft.hooks.GraftListeners.fireBeforeRead(source)
       val strategy = checkStrategy()
-      val (window, limit) = calculateWindowAndLimit(strategy)
+      val planned = strategy.map(nextWindow)
       for {
         s <- strategy
-        w <- window
+        w <- planned.flatten
         stop <- w.stopAt.value
       } s.updateHwm(stop)
-      graft.hooks.GraftListeners.fireAfterRead(source, read(window, limit))
+      val limit = if (planned.contains(None)) Some(0) else None
+      graft.hooks.GraftListeners.fireAfterRead(source, read(planned.flatten, limit))
     }
 
   /** Single-pass incremental read: capture the HWM with a Spark
@@ -101,7 +104,7 @@ final case class DbReader(connection: DbConnection,
     }
     graft.hooks.GraftListeners.fireBeforeRead(source)
     val col = hwm.get
-    val bound = inc.fetchHwm(hwmTemplate)
+    inc.fetchHwm(hwmTemplate)
     val window = Window(col.expression, startFrom = inc.startEdge)
     val obs = Observation(s"graft_hwm_${source}_${col.expression}")
     val df = graft.hooks.GraftListeners
@@ -118,13 +121,13 @@ final case class DbReader(connection: DbConnection,
         case _: java.util.concurrent.TimeoutException => Left("timeout")
       }
     observedMax match {
-      case Right(Some(mx)) => inc.updateHwm(bound.withValue(mx).valueOpt.get)
+      case Right(Some(mx)) => inc.updateHwm(mx)
       case Right(None) => // window was empty: keep the HWM
       case Left(_) =>
         // a late/dropped listener event is NOT the same as "no rows ran" —
         // be loud, because a stale HWM means the next run re-reads rows
-        System.err.println(
-          s"[graft] WARNING: observation for $source.${col.expression} not " +
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"observation for $source.${col.expression} not " +
             "delivered within 30s (listener bus busy, or the action never " +
             "materialized the frame) — HWM left unchanged; the next " +
             "incremental run will re-read this window")
@@ -132,15 +135,12 @@ final case class DbReader(connection: DbConnection,
     result
   }
 
-  /** `LIMIT 1` existence probe under the current window
-    * (reference db_reader.py:452-512: limit=1 then take(1)). */
-  def hasData: Boolean = {
-    val strategy = checkStrategy()
-    val window = strategy.map { s =>
-      s.fetchHwm(hwmTemplate)
-      Window(hwm.get.expression, startFrom = s.startEdge)
-    }
-    read(window, Some(1)).take(1).nonEmpty
+  /** `LIMIT 1` existence probe under the window `run()` reads next
+    * (reference db_reader.py:452-512: limit=1 then take(1)); finding that
+    * window may take a MIN/MAX probe. */
+  def hasData: Boolean = checkStrategy().map(nextWindow) match {
+    case Some(None) => false // the strategy has nothing left to read
+    case planned => read(planned.flatten, Some(1)).take(1).nonEmpty
   }
 
   def raiseIfNoData(): Unit =
@@ -168,68 +168,13 @@ final case class DbReader(connection: DbConnection,
       None
   }
 
-  /** Port of db_reader.py:718-794. Returns (window, forced-limit). */
-  private def calculateWindowAndLimit(
-      strategyOpt: Option[HwmStrategy]): (Option[Window], Option[Int]) = {
-    val strategy = strategyOpt.getOrElse(return (None, None))
-    val col = hwm.get
-    val bound = strategy.fetchHwm(hwmTemplate)
-    val expr = col.expression
-
-    def align(v: Any): Any = bound.withValue(v).valueOpt.get
-
-    strategy match {
-      case b: BatchHwmStrategy =>
-        if (b.initialized) {
-          if (b.exhausted) return (Some(Window(expr,
-            Edge.exclusive(b.stop.get), Edge.inclusive(b.stop.get))), Some(0))
-          return (Some(b.currentWindow(expr)), None)
-        }
-        val explicitStart = b match {
-          case sb: SnapshotBatchStrategy => sb.explicitStart.map(align)
-          case _: IncrementalBatchStrategy => bound.valueOpt.map(align)
-        }
-        val explicitStop = b match {
-          case sb: SnapshotBatchStrategy => sb.explicitStop.map(align)
-          case _ => None
-        }
-        // a start seeded from the stored HWM was already consumed by the
-        // previous run → the first batch edge must be exclusive (reference
-        // hwm_strategy.py:24-31 via batch_hwm_strategy.py:98-106)
-        val startIsStoredHwm =
-          b.isInstanceOf[IncrementalBatchStrategy] && explicitStart.nonEmpty
-        (explicitStart, explicitStop) match {
-          case (Some(s0), Some(s1)) =>
-            b.initialize(s0, s1, exclusiveStart = startIsStoredHwm)
-            (Some(b.currentWindow(expr)), None)
-          case _ =>
-            val probe = Window(expr,
-              startFrom = Edge(explicitStart, including = true),
-              stopAt = Edge(explicitStop, including = true))
-            val (minV, maxV) = minMax(Some(probe))
-            (minV, maxV) match {
-              case (Some(mn), Some(mx)) =>
-                b.initialize(explicitStart.getOrElse(align(mn)),
-                             explicitStop.getOrElse(align(mx)),
-                             exclusiveStart = startIsStoredHwm)
-                (Some(b.currentWindow(expr)), None)
-              case _ => (None, Some(0)) // empty source → empty frame
-            }
-        }
-
-      case inc: IncrementalStrategy =>
-        val start = inc.startEdge
-        val probe = Window(expr, startFrom = Edge(start.value, including = true))
-        val (_, maxV) = minMax(Some(probe))
-        maxV match {
-          case Some(mx) =>
-            (Some(Window(expr, start, Edge.inclusive(align(mx)))), None)
-          case None => (None, Some(0))
-        }
-    }
+  /** The window `s` plans next, after binding it to this reader's HWM. */
+  private def nextWindow(s: HwmStrategy): Option[Window] = {
+    s.fetchHwm(hwmTemplate)
+    s.nextWindow(hwm.get.expression, minMax)
   }
 
-  private def minMax(window: Option[Window]): (Option[Any], Option[Any]) =
+  private def minMax(window: Window): (Option[Any], Option[Any]) =
     connection.getMinMaxValues(source, hwm.get.expression,
-      connection.dialect.applyWindow(where, window))
+      connection.dialect.applyWindow(where, Some(window)))
 }

@@ -107,6 +107,26 @@ class FileDFSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static") != "dynamic")
   }
 
+  test("replace modes override the session's partitionOverwriteMode and leave it alone") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val patch = Seq((99L, "omega", "2024-01-03")).toDF("id", "name", "day")
+    def days(dir: String): Set[String] =
+      FileDFReader(spark, Parquet(), dir).run().select($"day").as[String].collect().toSet
+    try {
+      for ((session, ifExists, left) <- Seq(
+             ("dynamic", DirIfExists.ReplaceEntireDirectory, Set("2024-01-03")),
+             ("static", DirIfExists.ReplaceOverlappingPartitions,
+              Set("2024-01-01", "2024-01-02", "2024-01-03")))) {
+        spark.conf.set(key, session)
+        val dir = tmpDir(s"overwrite-$session")
+        FileDFWriter(Parquet(), dir, DirIfExists.ReplaceEntireDirectory, Seq("day")).run(sample)
+        FileDFWriter(Parquet(), dir, ifExists, Seq("day")).run(patch)
+        assert(days(dir) == left, s"$ifExists under a $session session")
+        assert(spark.conf.get(key) == session)
+      }
+    } finally spark.conf.unset(key)
+  }
+
   test("column codecs: from/to csv + json + xml") {
     val schema = StructType(Seq(StructField("a", IntegerType), StructField("b", StringType)))
     val df = Seq("1,x", "2,y").toDF("raw")

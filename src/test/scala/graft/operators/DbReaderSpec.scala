@@ -183,6 +183,21 @@ class DbReaderSpec extends SparkSpec {
     }
   }
 
+  test("hasData checks the batch window run() reads") {
+    val conn = freshConn()
+    writeRows(conn, "hb", (1L to 100L).map(i => (i, "x")))
+    val reader = DbReader(conn, "hb", hwm = Some(HwmColumn("id")))
+    // an explicit range past every key: each batch reads nothing
+    val beyond = new SnapshotBatchStrategy(25L, Some(200L), Some(300L))
+    val counts = Strategy.using(beyond) {
+      assert(!reader.hasData)
+      beyond.foreachBatch(reader.run().count())
+    }
+    assert(counts.nonEmpty && counts.forall(_ == 0), s"batches: $counts")
+    val inside = new SnapshotBatchStrategy(25L, Some(10L), Some(60L))
+    Strategy.using(inside) { assert(reader.hasData) }
+  }
+
   test("writer: ifExists modes on file tables + metrics") {
     val conn = freshConn()
     writeRows(conn, "w", (1L to 10L).map(i => (i, "x")))
