@@ -205,15 +205,18 @@ sealed abstract class BatchHwmStrategy(val step: Any, store: HwmStore)
     * (hwm_strategy.py:24-31), and `BatchHWMStrategy.current` only falls
     * back to the inclusive `start` when it is not
     * (batch_hwm_strategy.py:98-106). A probed MIN or explicit start stays
-    * inclusive. Later calls are no-ops. */
+    * inclusive. An exclusive start at or past `stopV` seeds a range with
+    * no window: the stored HWM already covers the source. Later calls are
+    * no-ops. */
   private[graft] def initialize(startV: Any, stopV: Any,
                                 exclusiveStart: Boolean = false): Unit =
     synchronized {
       if (stop.isEmpty) {
-        if (WindowMath.lt(stopV, startV))
+        val covered = exclusiveStart && !WindowMath.lt(startV, stopV)
+        if (!covered && WindowMath.lt(stopV, startV))
           throw new IllegalStateException(s"batch window stop $stopV < start $startV")
         stop = Some(stopV)
-        next = Some(Edge(Some(startV), including = !exclusiveStart))
+        next = if (covered) None else Some(Edge(Some(startV), including = !exclusiveStart))
       }
     }
 

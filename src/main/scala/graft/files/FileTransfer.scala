@@ -1,6 +1,7 @@
 package graft.files
 
-import java.nio.file.{Files, Path, Paths}
+import java.io.FileNotFoundException
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
 import java.util.concurrent.Executors
 
 import scala.concurrent.duration.Duration
@@ -68,7 +69,10 @@ private object TransferPool {
   *
   * Port of reference onetl/file/file_downloader/file_downloader.py:
   *  - files are downloaded to `<target>/.<name>.tmp` then atomically
-  *    renamed (:865-878), so readers never see partial files;
+  *    renamed (:865-878), so readers never see partial files; a failed
+  *    download deletes its temp file;
+  *  - a listed file that is gone by the time it is fetched is `missing`,
+  *    told apart by the connection's not-found exception, not a STAT;
   *  - `ifExists` ERROR/IGNORE/REPLACE_FILE/REPLACE_ENTIRE_DIRECTORY
   *    (options.py:35);
   *  - with a file HWM under an Incremental strategy, already-seen files are
@@ -133,19 +137,17 @@ final case class FileDownloader(connection: FileConnection,
       val outcomes = TransferPool.run(files, workers) { e =>
         val rel = e.path.stripPrefix(sourcePath.stripSuffix("/")).stripPrefix("/")
         val dest = Paths.get(targetPath, rel)
-        if (!connection.exists(e.path)) ("missing", e.path)
-        else if (Files.exists(dest) && ifExists == FileIfExists.Ignore) ("skipped", e.path)
+        if (Files.exists(dest) && ifExists == FileIfExists.Ignore) ("skipped", e.path)
         else if (Files.exists(dest) && ifExists == FileIfExists.Error)
           throw new IllegalStateException(s"target $dest already exists")
         else {
           Files.createDirectories(dest.getParent)
-          val tmp = dest.getParent.resolve("." + dest.getFileName + ".tmp")
-          connection.downloadFile(e.path, tmp)
-          Files.move(tmp, dest, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          if (deleteSource) connection.removeFile(e.path)
-          transferred.add(e)
-          ("ok", dest.toString)
+          if (!fetch(e.path, dest)) ("missing", e.path)
+          else {
+            if (deleteSource) connection.removeFile(e.path)
+            transferred.add(e)
+            ("ok", dest.toString)
+          }
         }
       }
       FileTransferResult.collect(files, outcomes)
@@ -159,6 +161,29 @@ final case class FileDownloader(connection: FileConnection,
         }
         s.saveHwm()
       }
+    }
+  }
+
+  /** Copy `remote` to `dest` through the hidden `<dest dir>/.<name>.tmp`.
+    * False when the source is gone: the walk listed it, so it was removed
+    * since, and the connection's `NoSuchFileException` or
+    * `FileNotFoundException` says so without a STAT per file. The temp
+    * file never outlives a failure; a cleanup error rides on the cause as
+    * suppressed. */
+  private def fetch(remote: String, dest: Path): Boolean = {
+    val tmp = dest.getParent.resolve("." + dest.getFileName + ".tmp")
+    try {
+      val found =
+        try { connection.downloadFile(remote, tmp); true }
+        catch { case _: NoSuchFileException | _: FileNotFoundException => false }
+      if (found) Files.move(tmp, dest, StandardCopyOption.REPLACE_EXISTING,
+        StandardCopyOption.ATOMIC_MOVE)
+      else Files.deleteIfExists(tmp)
+      found
+    } catch {
+      case t: Throwable =>
+        try Files.deleteIfExists(tmp) catch { case c: Throwable => t.addSuppressed(c) }
+        throw t
     }
   }
 }

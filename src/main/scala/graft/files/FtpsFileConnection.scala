@@ -1,6 +1,6 @@
 package graft.files
 
-import java.io.{BufferedReader, IOException, InputStream, InputStreamReader, PrintWriter}
+import java.io.{BufferedReader, FileNotFoundException, IOException, InputStream, InputStreamReader, PrintWriter}
 import java.net.Socket
 import java.nio.file.{Files, Path}
 import java.time.Instant
@@ -129,14 +129,18 @@ final class FtpsFileConnection(host: String, port: Int,
 
   /** Data-channel command: PASV + connect, send `cmd`, expect 150, THEN
     * TLS-handshake the data socket (the server wraps on accept), stream,
-    * expect 226 — the RFC 959/4217 transfer sequence. */
+    * expect 226 — the RFC 959/4217 transfer sequence. A 550 (file
+    * unavailable) in place of the 150 is a `FileNotFoundException`. */
   private def withData[A](cmd: String)(body: Socket => A): A = synchronized {
     ensureConnected()
     val plain = openData()
     var data: Socket = plain
     try {
       sendRaw(cmd)
-      expect(readReply(), 1, cmd.takeWhile(_ != ' ')) // 150
+      val opened = readReply()
+      if (opened._1 == 550)
+        throw new FileNotFoundException(s"FTPS $cmd: ${opened._2.headOption.getOrElse("")}")
+      expect(opened, 1, cmd.takeWhile(_ != ' ')) // 150
       data = tlsWrap(plain, plain.getPort)
       val result = body(data)
       data.close()

@@ -1,6 +1,5 @@
 package graft.files
 
-import java.io.EOFException
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
@@ -17,8 +16,11 @@ import SftpProtocol._
   * Handles: INIT/VERSION, REALPATH, STAT/LSTAT, OPENDIR/READDIR/CLOSE,
   * OPEN/READ/WRITE/CLOSE (offset-addressed chunks), MKDIR, RMDIR,
   * REMOVE, RENAME. One thread per session; handles are opaque counters.
+  * READDIR pages a listing at 100 names per reply, as OpenSSH's
+  * sftp-server does.
   */
 final class MiniSftpServer(root: Path) {
+  private val ReaddirPage = 100
   private val listener = new ServerSocket(0, 16, InetAddress.getLoopbackAddress)
   @volatile private var running = true
 
@@ -60,15 +62,17 @@ final class MiniSftpServer(root: Path) {
   }
 
   private final class Session(socket: Socket) {
+    // replies leave in one write; without NODELAY a reply sent as several
+    // segments would still wait on Nagle for the client's delayed ACK
+    socket.setTcpNoDelay(true)
     private val in = socket.getInputStream
     private val out = socket.getOutputStream
     private var nextHandle = 0
     private val fileHandles = scala.collection.mutable.Map[String, Path]()
-    // dir handles page their listing once; a second READDIR returns EOF
-    private val dirHandles = scala.collection.mutable.Map[String, Option[Seq[Path]]]()
+    // dir handle -> the entries its READDIRs have not sent yet
+    private val dirHandles = scala.collection.mutable.Map[String, Seq[Path]]()
 
-    private def reply(tpe: Int, b: PacketBuilder): Unit =
-      writePacket(out, tpe, b.result())
+    private def reply(tpe: Int, b: PacketBuilder): Unit = writePacket(out, tpe, b)
 
     private def status(id: Long, code: Int, msg: String): Unit =
       reply(FXP_STATUS, new PacketBuilder().u32(id).u32(code).string(msg).string("en"))
@@ -105,22 +109,23 @@ final class MiniSftpServer(root: Path) {
                   b.result().sortBy(_.toString)
                 } finally s.close()
                 val h = freshHandle()
-                dirHandles(h) = Some(kids)
+                dirHandles(h) = kids
                 reply(FXP_HANDLE, new PacketBuilder().u32(id).string(h))
               }
             case FXP_READDIR =>
               val id = r.u32(); val h = new String(r.bytes())
               dirHandles.get(h) match {
-                case Some(Some(kids)) =>
-                  dirHandles(h) = None // next READDIR → EOF
-                  val b = new PacketBuilder().u32(id).u32(kids.length)
-                  kids.foreach { k =>
+                case Some(kids) if kids.nonEmpty =>
+                  val (page, rest) = kids.splitAt(ReaddirPage)
+                  dirHandles(h) = rest
+                  val b = new PacketBuilder().u32(id).u32(page.length)
+                  page.foreach { k =>
                     b.string(k.getFileName.toString)
                       .string(k.getFileName.toString) // longname
                       .attrs(attrsOf(k))
                   }
                   reply(FXP_NAME, b)
-                case Some(None) => status(id, FX_EOF, "end of dir")
+                case Some(_) => status(id, FX_EOF, "end of dir")
                 case None => status(id, FX_FAILURE, "bad handle")
               }
             case FXP_OPEN =>
@@ -205,8 +210,8 @@ final class MiniSftpServer(root: Path) {
           }
         }
       } catch {
-        case _: EOFException => // client closed
-        case _: java.net.SocketException => // client closed
+        // client closed, or sent a frame readPacket refuses
+        case _: java.io.IOException =>
       } finally socket.close()
     }
   }

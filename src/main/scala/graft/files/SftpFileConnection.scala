@@ -1,7 +1,7 @@
 package graft.files
 
 import java.io.{IOException, InputStream}
-import java.nio.file.{Files, Path => JPath}
+import java.nio.file.{Files, NoSuchFileException, Path => JPath}
 import java.time.Instant
 
 import SftpProtocol._
@@ -15,11 +15,13 @@ import SftpProtocol._
   * JSch/MINA on a JVM deployment, loopback TCP in this container's
   * tests).
   *
-  * One outstanding request at a time: transfers of one file are
-  * sequential chunked reads/writes (32 KiB frames, the interoperable SFTP
-  * chunk ceiling); parallelism across files comes from the transfer
-  * engine's worker pool, each worker holding its own connection via
-  * `newTransport`.
+  * One outstanding request at a time: `call` is `synchronized`, and every
+  * call goes through ONE lazily opened transport (`newTransport` runs once
+  * per connection). Transfers of one file are sequential chunked
+  * reads/writes (32 KiB frames, the interoperable SFTP chunk ceiling), and
+  * transfer-engine workers sharing this connection take turns on the
+  * channel; open one connection per worker to transfer files in parallel.
+  * Each request leaves in one write (see [[SftpProtocol.writePacket]]).
   */
 final class SftpFileConnection(newTransport: () => SftpTransport) extends FileConnection {
   private val ChunkSize = 32 * 1024
@@ -27,7 +29,7 @@ final class SftpFileConnection(newTransport: () => SftpTransport) extends FileCo
   private lazy val transport: SftpTransport = {
     val t = newTransport()
     // §4 version handshake: INIT(client version) -> VERSION(server version)
-    writePacket(t.output, FXP_INIT, new PacketBuilder().u32(ProtocolVersion).result())
+    writePacket(t.output, FXP_INIT, new PacketBuilder().u32(ProtocolVersion))
     val (tpe, payload) = readPacket(t.input)
     if (tpe != FXP_VERSION)
       throw new IOException(s"SFTP handshake: expected VERSION, got packet $tpe")
@@ -47,7 +49,7 @@ final class SftpFileConnection(newTransport: () => SftpTransport) extends FileCo
       val id = freshId()
       val b = new PacketBuilder().u32(id)
       body(b)
-      writePacket(transport.output, tpe, b.result())
+      writePacket(transport.output, tpe, b)
       val (rtpe, payload) = readPacket(transport.input)
       val r = new PacketReader(payload)
       val gotId = r.u32()
@@ -167,13 +169,18 @@ final class SftpFileConnection(newTransport: () => SftpTransport) extends FileCo
     expectOk(tpe, r, s"RENAME $source -> $target")
   }
 
+  /** An absent file is a `NoSuchFileException`, so a caller can tell it
+    * from a failed transfer without a STAT first. */
   private def openHandle(path: String, pflags: Int): Array[Byte] = {
     val (tpe, r) = call(FXP_OPEN, _.string(path).u32(pflags).attrs(Attrs()))
-    if (tpe != FXP_HANDLE) {
-      val detail = if (tpe == FXP_STATUS) statusCode(r).toString() else s"packet $tpe"
-      throw new IOException(s"OPEN $path: $detail")
+    tpe match {
+      case FXP_HANDLE => r.bytes()
+      case FXP_STATUS =>
+        val (code, msg) = statusCode(r)
+        if (code == FX_NO_SUCH_FILE) throw new NoSuchFileException(path, null, msg)
+        throw new IOException(s"OPEN $path: SFTP status $code $msg")
+      case other => throw new IOException(s"OPEN $path: unexpected packet $other")
     }
-    r.bytes()
   }
 
   private def closeHandle(handle: Array[Byte], what: String): Unit = {
@@ -243,10 +250,9 @@ final class SftpFileConnection(newTransport: () => SftpTransport) extends FileCo
       var offset = 0L
       var n = in.read(buf)
       while (n > 0) {
-        val written = offset // capture: the builder lambda runs per-call
-        val chunk = java.util.Arrays.copyOf(buf, n)
+        val (written, len) = (offset, n) // capture: the builder lambda runs per-call
         val (tpe, r) = call(FXP_WRITE,
-          b => { b.bytes(handle).u64(written).bytes(chunk); () })
+          b => { b.bytes(handle).u64(written).u32(len).raw(buf, 0, len); () })
         expectOk(tpe, r, s"WRITE $remote")
         offset += n
         n = in.read(buf)

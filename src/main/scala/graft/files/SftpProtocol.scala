@@ -1,6 +1,6 @@
 package graft.files
 
-import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, InputStream, OutputStream}
+import java.io.{EOFException, IOException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** SFTP version-3 packet codec (draft-ietf-secsh-filexfer-02 — the
@@ -45,17 +45,44 @@ object SftpProtocol {
     def isDir: Boolean = permissions.exists(p => (p & 0xF000) == S_IFDIR)
   }
 
+  /** Frame header: uint32 length (of type + payload), then the type byte. */
+  private val HeaderSize = 5
+
+  /** Largest frame length a peer may announce: OpenSSH's
+    * `SFTP_MAX_MSG_LENGTH`. A larger claim is refused before anything is
+    * allocated for it. */
+  private val MaxFrameLength = 256 * 1024
+
   /** Growable big-endian packet writer mirroring the wire grammar:
-    * byte / uint32 / uint64 / string (uint32 length + bytes). */
+    * byte / uint32 / uint64 / string (uint32 length + bytes). The first
+    * `HeaderSize` bytes of its buffer are kept for the frame header,
+    * which [[writePacket]] fills in, so a whole frame leaves in one write. */
   final class PacketBuilder {
-    private val buf = new ByteArrayOutputStream()
-    private val out = new DataOutputStream(buf)
-    def byte(b: Int): this.type = { out.writeByte(b); this }
-    def u32(v: Long): this.type = { out.writeInt(v.toInt); this }
-    def u64(v: Long): this.type = { out.writeLong(v); this }
+    private var buf = new Array[Byte](256)
+    private var end = HeaderSize
+
+    /** Reserve `n` bytes at the end; returns their offset. */
+    private def claim(n: Int): Int = {
+      if (end + n > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, end + n))
+      val at = end
+      end += n
+      at
+    }
+    private def put32(at: Int, v: Long): Unit = {
+      buf(at) = (v >>> 24).toByte; buf(at + 1) = (v >>> 16).toByte
+      buf(at + 2) = (v >>> 8).toByte; buf(at + 3) = v.toByte
+    }
+
+    // claim before touching `buf`: claiming may replace the array
+    def byte(b: Int): this.type = { val at = claim(1); buf(at) = b.toByte; this }
+    def u32(v: Long): this.type = { put32(claim(4), v); this }
+    def u64(v: Long): this.type = u32(v >>> 32).u32(v)
     def string(s: String): this.type = bytes(s.getBytes(UTF_8))
-    def bytes(b: Array[Byte]): this.type = { out.writeInt(b.length); out.write(b); this }
-    def raw(b: Array[Byte], off: Int, len: Int): this.type = { out.write(b, off, len); this }
+    def bytes(b: Array[Byte]): this.type = u32(b.length).raw(b, 0, b.length)
+    def raw(b: Array[Byte], off: Int, len: Int): this.type = {
+      val at = claim(len); System.arraycopy(b, off, buf, at, len); this
+    }
     def attrs(a: Attrs): this.type = {
       var flags = 0
       if (a.size.isDefined) flags |= ATTR_SIZE
@@ -67,22 +94,42 @@ object SftpProtocol {
       a.mtimeSec.foreach { m => u32(m); u32(m) } // atime, mtime
       this
     }
-    def result(): Array[Byte] = buf.toByteArray
+
+    /** Write the frame `uint32 length, byte type, payload` with ONE
+      * `write`. Split writes cost a round trip each on TCP: Nagle holds
+      * every segment after the first until the peer ACKs, and the peer
+      * delays that ACK by up to ~40 ms. */
+    private[SftpProtocol] def writeFrame(out: OutputStream, tpe: Int): Unit = {
+      put32(0, end - HeaderSize + 1)
+      buf(4) = tpe.toByte
+      out.write(buf, 0, end)
+      out.flush()
+    }
   }
 
-  /** Cursor over a received packet payload. */
+  /** Cursor over a received packet payload. A field that runs past the
+    * payload is an IOException, never a zero-padded or partial value. */
   final class PacketReader(data: Array[Byte]) {
     private var pos = 0
+    /** Offset of the next `n` bytes, which must lie inside the payload. */
+    private def take(n: Long): Int = {
+      if (n < 0 || n > remaining)
+        throw new IOException(
+          s"truncated SFTP packet: field of $n bytes at offset $pos, $remaining left")
+      val at = pos
+      pos += n.toInt
+      at
+    }
     def u32(): Long = {
-      val v = ((data(pos) & 0xffL) << 24) | ((data(pos + 1) & 0xffL) << 16) |
-        ((data(pos + 2) & 0xffL) << 8) | (data(pos + 3) & 0xffL)
-      pos += 4; v
+      val at = take(4)
+      ((data(at) & 0xffL) << 24) | ((data(at + 1) & 0xffL) << 16) |
+        ((data(at + 2) & 0xffL) << 8) | (data(at + 3) & 0xffL)
     }
     def u64(): Long = (u32() << 32) | u32()
     def bytes(): Array[Byte] = {
-      val n = u32().toInt
-      val b = java.util.Arrays.copyOfRange(data, pos, pos + n)
-      pos += n; b
+      val n = u32()
+      val at = take(n)
+      java.util.Arrays.copyOfRange(data, at, pos)
     }
     def string(): String = new String(bytes(), UTF_8)
     def attrs(): Attrs = {
@@ -96,24 +143,27 @@ object SftpProtocol {
     def remaining: Int = data.length - pos
   }
 
-  /** Frame a packet: uint32 length, byte type, payload. */
-  def writePacket(out: OutputStream, tpe: Int, payload: Array[Byte]): Unit = {
-    val d = new DataOutputStream(out)
-    d.writeInt(payload.length + 1)
-    d.writeByte(tpe)
-    d.write(payload)
-    d.flush()
+  /** Send the packet `b` holds as frame type `tpe`, in one write. */
+  def writePacket(out: OutputStream, tpe: Int, b: PacketBuilder): Unit =
+    b.writeFrame(out, tpe)
+
+  /** Read one framed packet: the header with one read, the payload with
+    * one more. EOFException on orderly close; IOException on a length
+    * outside `1..MaxFrameLength`, raised before the payload is allocated. */
+  def readPacket(in: InputStream): (Int, Array[Byte]) = {
+    val header = readExactly(in, HeaderSize)
+    val len = new PacketReader(header).u32()
+    if (len < 1 || len > MaxFrameLength)
+      throw new IOException(
+        s"SFTP frame length $len outside 1..$MaxFrameLength")
+    (header(4) & 0xff, readExactly(in, len.toInt - 1))
   }
 
-  /** Read one framed packet; EOFException on orderly close. */
-  def readPacket(in: InputStream): (Int, Array[Byte]) = {
-    val d = new DataInputStream(in)
-    val len = d.readInt()
-    if (len < 1) throw new EOFException(s"bad SFTP frame length $len")
-    val tpe = d.readUnsignedByte()
-    val payload = new Array[Byte](len - 1)
-    d.readFully(payload)
-    (tpe, payload)
+  private def readExactly(in: InputStream, n: Int): Array[Byte] = {
+    val b = new Array[Byte](n)
+    val got = in.readNBytes(b, 0, n)
+    if (got < n) throw new EOFException(s"SFTP channel closed after $got of $n bytes")
+    b
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.files
 
-import java.io.{ByteArrayInputStream, InputStream}
+import java.io.{ByteArrayInputStream, FileNotFoundException, InputStream}
 import java.net.{URI, URLDecoder, URLEncoder}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
@@ -166,9 +166,13 @@ final class WebDavFileConnection(host: String, port: Int,
       .header("Overwrite", "T").build(),
       HttpResponse.BodyHandlers.discarding()), 201, 204)
 
+  /** Only a 200 body lands in `local`; a 404 is a `FileNotFoundException`. */
   def downloadFile(remote: String, local: Path): Unit = {
-    val resp = send(req(remote).GET().build(),
-      HttpResponse.BodyHandlers.ofFile(local))
+    val resp = send(req(remote).GET().build(), (info: HttpResponse.ResponseInfo) =>
+      if (info.statusCode == 200) HttpResponse.BodySubscribers.ofFile(local)
+      else HttpResponse.BodySubscribers.replacing(local))
+    if (resp.statusCode() == 404)
+      throw new FileNotFoundException(s"WebDAV GET ${resp.request.uri} -> 404")
     expect(resp, 200)
   }
 

@@ -181,4 +181,12 @@ class FileTransferSpec extends AnyFunSuite {
       ifExists = FileIfExists.ReplaceFile).run()
     assert(r.successful.size == 4)
   }
+
+  test("a source deleted after the walk is missing, not failed: local and hadoop FS") {
+    val root = Paths.get(tmp("vanish-src"))
+    VanishAfterListing.assertMissingNotFailed(new LocalFileConnection, root, "v",
+      root.resolve("v").toString)
+    VanishAfterListing.assertMissingNotFailed(new HadoopFsConnection("file:///"), root, "v",
+      root.resolve("v").toString)
+  }
 }

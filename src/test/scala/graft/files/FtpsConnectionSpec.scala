@@ -114,4 +114,8 @@ class FtpsConnectionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Files.readString(java.nio.file.Paths.get(loc, "top.csv")) === "k,v\n1,a\n")
     assert(Files.readString(java.nio.file.Paths.get(loc, "sub/inner.csv")) === "k,v\n2,b\n")
   }
+
+  test("a source deleted after the walk is missing, not failed") {
+    VanishAfterListing.assertMissingNotFailed(c, root, "vanish", "/vanish")
+  }
 }

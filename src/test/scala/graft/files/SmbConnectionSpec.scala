@@ -102,4 +102,8 @@ class SmbConnectionSpec extends AnyFunSuite {
     // plain nested paths still resolve
     assert(share.stat("top.csv").isDefined)
   }
+
+  test("a source deleted after the walk is missing, not failed") {
+    VanishAfterListing.assertMissingNotFailed(c, root, "vanish", "/vanish")
+  }
 }

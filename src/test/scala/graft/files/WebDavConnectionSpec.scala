@@ -123,4 +123,8 @@ class WebDavConnectionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(WebDavFileConnection.secureParse(ok)
       .getElementsByTagNameNS("DAV:", "response").getLength === 1)
   }
+
+  test("a source deleted after the walk is missing, not failed") {
+    VanishAfterListing.assertMissingNotFailed(c, root, "vanish", "/vanish")
+  }
 }

@@ -136,6 +136,31 @@ class DbReaderSpec extends SparkSpec {
     assert(store.get("ib.id").get.valueOpt.contains(100L))
   }
 
+  test("incremental-batch with the stored HWM at the source max reads nothing") {
+    val dir = tmpDir("dbreader-covered")
+    val reads = Seq.newBuilder[(Seq[String], Option[Int])]
+    val conn = new FileTableConnection(spark, dir) {
+      override def readSourceAsDf(source: String, columns: Seq[String],
+                                  where: Seq[String], hint: Option[String],
+                                  limit: Option[Int],
+                                  dfSchema: Option[org.apache.spark.sql.types.StructType]) = {
+        reads += ((where, limit))
+        super.readSourceAsDf(source, columns, where, hint, limit, dfSchema)
+      }
+    }
+    writeRows(conn, "cv", (1L to 100L).map(i => (i, "x")))
+    val store = new InMemoryHwmStore
+    store.set(IntHwm("cv.id", "cv", "id", Some(100L)))
+    val b = new IncrementalBatchStrategy(40L, store = store)
+    val counts = Strategy.using(b) {
+      b.foreachBatch(DbReader(conn, "cv", hwm = Some(HwmColumn("id"))).run().count())
+    }
+    assert(counts == Seq(0L))
+    // no window (100, 100] pushed to the source: an empty read, limit 0
+    assert(reads.result() == Seq((Seq.empty[String], Some(0))))
+    assert(store.get("cv.id").get.valueOpt.contains(100L))
+  }
+
   test("incremental-batch runaway guard: a step of 1 over 150 keys stops " +
        "at the iteration cap") {
     val conn = freshConn()
