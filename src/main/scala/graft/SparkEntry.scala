@@ -1879,7 +1879,6 @@ object SparkEntry {
       // SUMS double-count under replay, so the ledger is load-bearing);
       // the fold equals whole-corpus counters EXACTLY, checked by the
       // same probe oracle as the batch gate
-      import org.apache.spark.sql.types._
       val docs = DbReader(conn(s, dir), "documents").run()
         .select(col("doc_id"), col("text"))
       val mx = docs.agg(max(col("doc_id"))).first.getLong(0)

@@ -1,10 +1,10 @@
 package graft.connections
 
 import java.time.format.DateTimeFormatter
-import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
+import java.time.{Instant, LocalDate, ZoneOffset}
 
-import graft.core.{Edge, Window}
-import graft.dialects.{Dialect, GenericDialect}
+import graft.core.Edge
+import graft.dialects.Dialect
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 

@@ -151,15 +151,24 @@ final class IncrementalStrategy(val offset: Option[Any] = None,
     case (None, _) => Edge.unset
   }
 
+  /** The window last planned and the start edge it was planned from. */
+  @volatile private var planned: Option[(Edge, Option[Window])] = None
+
   /** `(startEdge, max]`, with `max` probed from the inclusive start so the
     * HWM matches the frame even if rows arrive mid-read
-    * (db_reader.py:786-792). */
+    * (db_reader.py:786-792). The plan holds until [[updateHwm]] moves the
+    * start edge, so `hasData` then `run()` probe once. */
   private[graft] def nextWindow(expression: String,
-                                probe: Window => (Option[Any], Option[Any])): Option[Window] = {
-    val start = startEdge
-    probe(Window(expression, Edge(start.value)))._2
-      .map(mx => Window(expression, start, Edge.inclusive(align(mx))))
-  }
+                                probe: Window => (Option[Any], Option[Any])): Option[Window] =
+    synchronized {
+      val start = startEdge
+      planned.collect { case (`start`, w) => w }.getOrElse {
+        val w = probe(Window(expression, Edge(start.value)))._2
+          .map(mx => Window(expression, start, Edge.inclusive(align(mx))))
+        planned = Some((start, w))
+        w
+      }
+    }
 
   private def negate(step: Any): Any = step match {
     case l: Long => -l

@@ -2,9 +2,7 @@ package graft.core
 
 /** One edge of a read window: optional value + inclusivity flag.
   * Mirrors reference onetl/hwm/window.py:9-14. */
-final case class Edge(value: Option[Any] = None, including: Boolean = true) {
-  def isSet: Boolean = value.isDefined
-}
+final case class Edge(value: Option[Any] = None, including: Boolean = true)
 
 object Edge {
   val unset: Edge = Edge(None, including = true)

@@ -28,9 +28,6 @@ case class ToAvroBinary(child: Expression) extends UnaryExpression {
   @transient private lazy val enc =
     new GraftAvroBridge.RowEncoder(child.dataType, jsonSchema)
 
-  /** The writer's Avro record schema (JSON) — what a reader needs. */
-  def avroSchemaJson: String = jsonSchema
-
   protected override def nullSafeEval(input: Any): Any = enc.encode(input)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val codec = ctx.addReferenceObj("avroEnc", enc,

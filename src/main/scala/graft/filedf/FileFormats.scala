@@ -1,6 +1,6 @@
 package graft.filedf
 
-import org.apache.spark.sql.{Column, DataFrameReader, DataFrameWriter, Row}
+import org.apache.spark.sql.{Column, DataFrameReader, DataFrameWriter}
 
 /** File formats for FileDFReader/FileDFWriter.
   *
@@ -133,9 +133,6 @@ object ColumnCodecs {
   def parseXmlColumn(col: Column, schema: StructType,
                      options: Map[String, String] = Map.empty): Column =
     from_xml(col, schema, j(options))
-  def serializeXmlColumn(col: Column,
-                         options: Map[String, String] = Map.empty): Column =
-    to_xml(col, j(options))
 
   /** Avro codecs (reference avro.py:326,430) over a binary column; the
     * Avro writer record schema is the usual JSON record definition. Built

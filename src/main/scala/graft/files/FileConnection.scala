@@ -1,12 +1,12 @@
 package graft.files
 
-import java.io.InputStream
+import java.io.{FileNotFoundException, InputStream}
 import java.net.URI
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.Instant
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, FileUtil, Path => HPath}
 
 /** Stat of a remote entry (reference onetl/impl/remote_path_stat.py). */
 final case class PathStat(size: Long, mtime: Instant)
@@ -57,6 +57,9 @@ trait FileConnection {
   def mkdirs(path: String): Unit
   def removeFile(path: String): Unit
   def removeDir(path: String, recursive: Boolean = false): Unit
+  /** Rename `source` to `target`, replacing an existing `target` file:
+    * the transfer engine renames each copied temp file over its target,
+    * and the mover renames each source onto its target. */
   def renameFile(source: String, target: String): Unit
   def downloadFile(remote: String, local: Path): Unit
   def uploadFile(local: Path, remote: String): Unit
@@ -91,6 +94,34 @@ trait FileConnection {
   }
 }
 
+/** Base of the remote protocol clients: the directory-tree algorithms,
+  * `mkdirs` (a parent walk) and recursive `removeDir`, on top of each
+  * protocol's one-level [[mkdir]] and [[rmdir]]. */
+abstract class RemoteFileConnection extends FileConnection {
+  /** Create the directory `path`; its parent exists. */
+  protected def mkdir(path: String): Unit
+  /** Remove the empty directory `path`. */
+  protected def rmdir(path: String): Unit
+
+  /** Creates `path` and its missing parents, walking up only while a
+    * directory is missing: an existing `path` costs one STAT. */
+  def mkdirs(path: String): Unit = {
+    val dir = "/" + path.split('/').filter(_.nonEmpty).mkString("/")
+    if (dir != "/" && !exists(dir)) {
+      mkdirs(dir.substring(0, dir.lastIndexOf('/')))
+      mkdir(dir)
+    }
+  }
+
+  def removeDir(path: String, recursive: Boolean): Unit = {
+    if (recursive)
+      listDir(path).foreach { e =>
+        if (e.isDir) removeDir(e.path, recursive = true) else removeFile(e.path)
+      }
+    rmdir(path)
+  }
+}
+
 /** `java.nio`-backed local client (reference's LocalFS side of transfers). */
 final class LocalFileConnection extends FileConnection {
   private def p(s: String): Path = Paths.get(s)
@@ -117,8 +148,11 @@ final class LocalFileConnection extends FileConnection {
       try s.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
       finally s.close()
     }
+  /** An atomic replace: a reader sees the old target or the new one,
+    * never neither. */
   def renameFile(source: String, target: String): Unit =
-    Files.move(p(source), p(target), StandardCopyOption.ATOMIC_MOVE)
+    Files.move(p(source), p(target), StandardCopyOption.REPLACE_EXISTING,
+      StandardCopyOption.ATOMIC_MOVE)
   def downloadFile(remote: String, local: Path): Unit =
     Files.copy(p(remote), local, StandardCopyOption.REPLACE_EXISTING)
   def uploadFile(local: Path, remote: String): Unit =
@@ -162,6 +196,13 @@ final class FtpFileConnection(host: String, port: Int = 21,
     require(isDir("/"), s"ftp://$host:$port/ root not listable")
     this
   }
+
+  /** Hadoop's FTP file system renames only within one directory, so a
+    * move to another directory is a stream copy and a delete. */
+  override def renameFile(source: String, target: String): Unit =
+    if (hp(source).getParent == hp(target).getParent) super.renameFile(source, target)
+    else if (!FileUtil.copy(fs, hp(source), fs, hp(target), true, true, conf))
+      throw new java.io.IOException(s"move $source -> $target: source not deleted")
 }
 
 object FtpFileConnection {
@@ -185,10 +226,10 @@ object FtpFileConnection {
   * `hdfs://`, `s3a://` (SURVEY §2.3 — Hadoop FS covers HDFS+S3+local in one
   * SPI, replacing the reference's per-protocol Python clients). */
 class HadoopFsConnection(baseUri: String,
-                         conf: Configuration = new Configuration())
+                         protected val conf: Configuration = new Configuration())
   extends FileConnection {
-  private val fs: FileSystem = FileSystem.get(URI.create(baseUri), conf)
-  private def hp(s: String) = new HPath(s)
+  protected val fs: FileSystem = FileSystem.get(URI.create(baseUri), conf)
+  protected def hp(s: String) = new HPath(s)
 
   def check(): this.type = { fs.getStatus; this }
   def exists(path: String): Boolean = fs.exists(hp(path))
@@ -206,8 +247,17 @@ class HadoopFsConnection(baseUri: String,
   def mkdirs(path: String): Unit = fs.mkdirs(hp(path))
   def removeFile(path: String): Unit = fs.delete(hp(path), false)
   def removeDir(path: String, recursive: Boolean): Unit = fs.delete(hp(path), recursive)
+  /** Hadoop's `rename` refuses an existing target: it returns false, or
+    * throws `FileAlreadyExistsException` (FTP). Then an existing target
+    * file is deleted and the rename retried. */
   def renameFile(source: String, target: String): Unit = {
-    if (!fs.rename(hp(source), hp(target)))
+    val (src, dst) = (hp(source), hp(target))
+    def isFile(p: HPath) =
+      try fs.getFileStatus(p).isFile catch { case _: FileNotFoundException => false }
+    val renamed =
+      try fs.rename(src, dst) catch { case _: FileAlreadyExistsException => false }
+    if (!renamed && !(fs.exists(src) && isFile(dst) && fs.delete(dst, false) &&
+        fs.rename(src, dst)))
       throw new java.io.IOException(s"rename $source -> $target failed")
   }
   def downloadFile(remote: String, local: Path): Unit =

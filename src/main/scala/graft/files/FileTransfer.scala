@@ -1,7 +1,7 @@
 package graft.files
 
 import java.io.FileNotFoundException
-import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, NoSuchFileException, Paths}
 import java.util.concurrent.Executors
 
 import scala.concurrent.duration.Duration
@@ -36,20 +36,6 @@ final case class FileTransferResult(successful: Seq[String] = Nil,
     successful.isEmpty && failed.isEmpty && skipped.isEmpty && missing.isEmpty
 }
 
-object FileTransferResult {
-  /** Sort each file's worker outcome — `("ok" | "skipped" | "missing",
-    * path)` or a failure — into the result's four lists. */
-  private[files] def collect(files: Seq[RemoteEntry],
-                             outcomes: Seq[Try[(String, String)]]): FileTransferResult = {
-    val zipped = files.zip(outcomes)
-    FileTransferResult(
-      successful = zipped.collect { case (_, Success(("ok", p))) => p },
-      failed = zipped.collect { case (e, Failure(t)) => (e.path, t) },
-      skipped = zipped.collect { case (_, Success(("skipped", p))) => p },
-      missing = zipped.collect { case (_, Success(("missing", p))) => p })
-  }
-}
-
 private object TransferPool {
   /** Bounded pool per run (reference file_downloader.py:795-828 uses a
     * ThreadPoolExecutor(workers)). */
@@ -64,13 +50,81 @@ private object TransferPool {
   }
 }
 
-/** Remote FS → local FS bulk copy: walk + filter + limit + HWM + thread
-  * pool + temp-file atomicity + per-file statuses.
+/** The per-file step of [[FileDownloader]], [[FileUploader]] and
+  * [[FileMover]] (reference file_downloader.py:830-878 and its uploader
+  * and mover twins). `put` lands one walked file at a path of `dest`:
+  *  - each file keeps its path relative to `sourceRoot` under `targetRoot`;
+  *  - `ReplaceEntireDirectory` clears `targetRoot` once, before any file;
+  *  - each distinct target directory gets one `mkdirs`, before the pool;
+  *  - the target is STATed only under `Error` and `Ignore`;
+  *  - a copy (`viaTemp`) lands at `<dir>/.<name>.tmp` and is renamed over
+  *    the target (`renameFile` replaces), so readers never see a partial
+  *    file; a move lands on the target directly;
+  *  - a `put` that throws `NoSuchFileException` or `FileNotFoundException`
+  *    reports the file `missing`: the walk listed it, so it was removed
+  *    since;
+  *  - a failed copy deletes its temp file, and a cleanup error rides on
+  *    the cause as suppressed;
+  *  - `finish` runs after a file lands (delete the source, record it). */
+private object TransferEngine {
+  def run(files: Seq[RemoteEntry], sourceRoot: String, targetRoot: String,
+          dest: FileConnection, workers: Int, ifExists: FileIfExists,
+          viaTemp: Boolean, finish: RemoteEntry => Unit = _ => ())
+         (put: (RemoteEntry, String) => Unit): FileTransferResult = {
+    if (ifExists == FileIfExists.ReplaceEntireDirectory && dest.exists(targetRoot))
+      dest.removeDir(targetRoot, recursive = true)
+    val base = sourceRoot.stripSuffix("/")
+    val targets = files.map(e =>
+      s"${targetRoot.stripSuffix("/")}/${e.path.stripPrefix(base).stripPrefix("/")}")
+    (targetRoot +: targets.map(parent)).distinct.foreach(dest.mkdirs)
+    val checkTarget = ifExists == FileIfExists.Error || ifExists == FileIfExists.Ignore
+    val outcomes = TransferPool.run(files.zip(targets), workers) { case (e, target) =>
+      if (checkTarget && dest.exists(target)) {
+        if (ifExists == FileIfExists.Ignore) ("skipped", e.path)
+        else throw new IllegalStateException(s"target $target already exists")
+      } else {
+        val cut = target.lastIndexOf('/') + 1
+        val landing =
+          if (viaTemp) s"${target.substring(0, cut)}.${target.substring(cut)}.tmp" else target
+        try {
+          val found =
+            try { put(e, landing); true }
+            catch { case _: NoSuchFileException | _: FileNotFoundException => false }
+          if (!found) {
+            if (viaTemp) discard(dest, landing)
+            ("missing", e.path)
+          } else {
+            if (viaTemp) dest.renameFile(landing, target)
+            finish(e)
+            ("ok", target)
+          }
+        } catch {
+          case t: Throwable if viaTemp =>
+            try discard(dest, landing) catch { case c: Throwable => t.addSuppressed(c) }
+            throw t
+        }
+      }
+    }
+    val zipped = files.zip(outcomes)
+    def tagged(tag: String) = zipped.collect { case (_, Success((`tag`, p))) => p }
+    FileTransferResult(tagged("ok"), zipped.collect { case (e, Failure(t)) => (e.path, t) },
+      tagged("skipped"), tagged("missing"))
+  }
+
+  private def parent(path: String): String = path.lastIndexOf('/') match {
+    case 0 => "/"
+    case i => path.substring(0, i)
+  }
+
+  private def discard(dest: FileConnection, tmp: String): Unit =
+    if (dest.exists(tmp)) dest.removeFile(tmp)
+}
+
+/** Remote FS → local FS bulk copy: walk + filter + limit + HWM + the
+  * shared [[TransferEngine]].
   *
   * Port of reference onetl/file/file_downloader/file_downloader.py:
-  *  - files are downloaded to `<target>/.<name>.tmp` then atomically
-  *    renamed (:865-878), so readers never see partial files; a failed
-  *    download deletes its temp file;
+  *  - files land through a temp file renamed over the target (:865-878);
   *  - a listed file that is gone by the time it is fetched is `missing`,
   *    told apart by the connection's not-found exception, not a STAT;
   *  - `ifExists` ERROR/IGNORE/REPLACE_FILE/REPLACE_ENTIRE_DIRECTORY
@@ -91,8 +145,6 @@ final case class FileDownloader(connection: FileConnection,
                                 deleteSource: Boolean = false,
                                 hwmName: Option[String] = None,
                                 hwmByMtime: Boolean = false) {
-
-  private val local = new LocalFileConnection
 
   private def strategyHwm: Option[HwmStrategy] = Strategy.current match {
     case b: graft.core.BatchHwmStrategy =>
@@ -128,29 +180,13 @@ final case class FileDownloader(connection: FileConnection,
   def run(): FileTransferResult = {
     val strategy = strategyHwm
     val files = viewFiles()
-    if (ifExists == FileIfExists.ReplaceEntireDirectory && local.exists(targetPath))
-      local.removeDir(targetPath, recursive = true)
-    Files.createDirectories(Paths.get(targetPath))
-
     val transferred = new java.util.concurrent.ConcurrentLinkedQueue[RemoteEntry]()
     try {
-      val outcomes = TransferPool.run(files, workers) { e =>
-        val rel = e.path.stripPrefix(sourcePath.stripSuffix("/")).stripPrefix("/")
-        val dest = Paths.get(targetPath, rel)
-        if (Files.exists(dest) && ifExists == FileIfExists.Ignore) ("skipped", e.path)
-        else if (Files.exists(dest) && ifExists == FileIfExists.Error)
-          throw new IllegalStateException(s"target $dest already exists")
-        else {
-          Files.createDirectories(dest.getParent)
-          if (!fetch(e.path, dest)) ("missing", e.path)
-          else {
-            if (deleteSource) connection.removeFile(e.path)
-            transferred.add(e)
-            ("ok", dest.toString)
-          }
-        }
-      }
-      FileTransferResult.collect(files, outcomes)
+      TransferEngine.run(files, sourcePath, targetPath, new LocalFileConnection,
+        workers, ifExists, viaTemp = true, finish = e => {
+          if (deleteSource) connection.removeFile(e.path)
+          transferred.add(e)
+        })((e, landing) => connection.downloadFile(e.path, Paths.get(landing)))
     } finally {
       // HWM updated+saved even on partial failure (reference :771-775).
       strategy.foreach { s =>
@@ -161,29 +197,6 @@ final case class FileDownloader(connection: FileConnection,
         }
         s.saveHwm()
       }
-    }
-  }
-
-  /** Copy `remote` to `dest` through the hidden `<dest dir>/.<name>.tmp`.
-    * False when the source is gone: the walk listed it, so it was removed
-    * since, and the connection's `NoSuchFileException` or
-    * `FileNotFoundException` says so without a STAT per file. The temp
-    * file never outlives a failure; a cleanup error rides on the cause as
-    * suppressed. */
-  private def fetch(remote: String, dest: Path): Boolean = {
-    val tmp = dest.getParent.resolve("." + dest.getFileName + ".tmp")
-    try {
-      val found =
-        try { connection.downloadFile(remote, tmp); true }
-        catch { case _: NoSuchFileException | _: FileNotFoundException => false }
-      if (found) Files.move(tmp, dest, StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
-      else Files.deleteIfExists(tmp)
-      found
-    } catch {
-      case t: Throwable =>
-        try Files.deleteIfExists(tmp) catch { case c: Throwable => t.addSuppressed(c) }
-        throw t
     }
   }
 }
@@ -203,30 +216,15 @@ final case class FileUploader(connection: FileConnection,
 
   def viewFiles(): Seq[RemoteEntry] = local.walk(localPath, filters, limits)._1
 
-  def run(): FileTransferResult = {
-    val files = viewFiles()
-    if (ifExists == FileIfExists.ReplaceEntireDirectory && connection.exists(targetPath))
-      connection.removeDir(targetPath, recursive = true)
-    connection.mkdirs(targetPath)
-    val outcomes = TransferPool.run(files, workers) { e =>
-      val rel = e.path.stripPrefix(localPath.stripSuffix("/")).stripPrefix("/")
-      val dest = s"${targetPath.stripSuffix("/")}/$rel"
-      val destDir = dest.substring(0, dest.lastIndexOf('/'))
-      if (!local.exists(e.path)) ("missing", e.path)
-      else if (connection.exists(dest) && ifExists == FileIfExists.Ignore) ("skipped", e.path)
-      else if (connection.exists(dest) && ifExists == FileIfExists.Error)
-        throw new IllegalStateException(s"target $dest already exists")
-      else {
-        connection.mkdirs(destDir)
-        val tmp = s"$destDir/.${dest.substring(dest.lastIndexOf('/') + 1)}.tmp"
-        connection.uploadFile(Paths.get(e.path), tmp)
-        connection.renameFile(tmp, dest)
-        if (deleteLocal) local.removeFile(e.path)
-        ("ok", dest)
-      }
+  def run(): FileTransferResult =
+    TransferEngine.run(viewFiles(), localPath, targetPath, connection, workers,
+      ifExists, viaTemp = true, finish = e => if (deleteLocal) local.removeFile(e.path)) {
+      (e, landing) =>
+        val source = Paths.get(e.path)
+        // a local check: an absent source must not open a remote temp file
+        if (!Files.exists(source)) throw new NoSuchFileException(e.path)
+        connection.uploadFile(source, landing)
     }
-    FileTransferResult.collect(files, outcomes)
-  }
 }
 
 /** remote → remote rename within one connection
@@ -242,24 +240,12 @@ final case class FileMover(connection: FileConnection,
 
   def viewFiles(): Seq[RemoteEntry] = connection.walk(sourcePath, filters, limits)._1
 
-  def run(): FileTransferResult = {
-    val files = viewFiles()
-    connection.mkdirs(targetPath)
-    val outcomes = TransferPool.run(files, workers) { e =>
-      val rel = e.path.stripPrefix(sourcePath.stripSuffix("/")).stripPrefix("/")
-      val dest = s"${targetPath.stripSuffix("/")}/$rel"
-      val destDir = dest.substring(0, dest.lastIndexOf('/'))
-      if (!connection.exists(e.path)) ("missing", e.path)
-      else if (connection.exists(dest) && ifExists == FileIfExists.Ignore) ("skipped", e.path)
-      else if (connection.exists(dest) && ifExists == FileIfExists.Error)
-        throw new IllegalStateException(s"target $dest already exists")
-      else {
-        connection.mkdirs(destDir)
-        if (connection.exists(dest)) connection.removeFile(dest)
-        connection.renameFile(e.path, dest)
-        ("ok", dest)
-      }
+  def run(): FileTransferResult =
+    TransferEngine.run(viewFiles(), sourcePath, targetPath, connection, workers,
+      ifExists, viaTemp = false) { (e, target) =>
+      // one STAT: not every connection's renameFile reports an absent
+      // source as a typed not-found
+      if (!connection.exists(e.path)) throw new NoSuchFileException(e.path)
+      connection.renameFile(e.path, target)
     }
-    FileTransferResult.collect(files, outcomes)
-  }
 }

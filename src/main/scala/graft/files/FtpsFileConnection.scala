@@ -28,10 +28,13 @@ import javax.net.ssl.{SSLContext, SSLSocket}
   * The `sslContext` carries trust configuration: a production caller
   * verifies the server chain; tests inject a context trusting the in-JVM
   * server's self-signed certificate.
+  *
+  * `renameFile` is RNFR + RNTO, so it replaces an existing target only
+  * where the server does; [[MiniFtpServer]] replaces.
   */
 final class FtpsFileConnection(host: String, port: Int,
                                user: String, password: String,
-                               sslContext: SSLContext) extends FileConnection {
+                               sslContext: SSLContext) extends RemoteFileConnection {
 
   private val mdtm = DateTimeFormatter.ofPattern("yyyyMMddHHmmss", Locale.US)
     .withZone(ZoneOffset.UTC)
@@ -200,24 +203,9 @@ final class FtpsFileConnection(host: String, port: Int,
     }.sortBy(_.path)
   }
 
-  def mkdirs(path: String): Unit = {
-    val segs = path.split('/').filter(_.nonEmpty)
-    segs.indices.foreach { i =>
-      val prefix = "/" + segs.take(i + 1).mkString("/")
-      if (!exists(prefix)) command(s"MKD $prefix", 2)
-    }
-  }
-
+  protected def mkdir(path: String): Unit = { command(s"MKD $path", 2); () }
+  protected def rmdir(path: String): Unit = { command(s"RMD $path", 2); () }
   def removeFile(path: String): Unit = { command(s"DELE $path", 2); () }
-
-  def removeDir(path: String, recursive: Boolean): Unit = {
-    if (recursive)
-      listDir(path).foreach { e =>
-        if (e.isDir) removeDir(e.path, recursive = true) else removeFile(e.path)
-      }
-    command(s"RMD $path", 2)
-    ()
-  }
 
   def renameFile(source: String, target: String): Unit = {
     command(s"RNFR $source", 3)

@@ -1,6 +1,6 @@
 package graft.files
 
-import java.io.{BufferedReader, InputStreamReader, OutputStream, PrintWriter}
+import java.io.{BufferedReader, InputStreamReader, PrintWriter}
 import java.net.{InetAddress, ServerSocket, Socket, SocketTimeoutException}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.ZoneId

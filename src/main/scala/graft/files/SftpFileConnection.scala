@@ -22,8 +22,13 @@ import SftpProtocol._
   * transfer-engine workers sharing this connection take turns on the
   * channel; open one connection per worker to transfer files in parallel.
   * Each request leaves in one write (see [[SftpProtocol.writePacket]]).
+  *
+  * `renameFile` is one RENAME, so it replaces an existing target only
+  * where the server does: strict SFTP v3 servers refuse a RENAME over an
+  * existing file (draft-ietf-secsh-filexfer-02 §6.5). [[MiniSftpServer]]
+  * replaces.
   */
-final class SftpFileConnection(newTransport: () => SftpTransport) extends FileConnection {
+final class SftpFileConnection(newTransport: () => SftpTransport) extends RemoteFileConnection {
   private val ChunkSize = 32 * 1024
 
   private lazy val transport: SftpTransport = {
@@ -139,15 +144,9 @@ final class SftpFileConnection(newTransport: () => SftpTransport) extends FileCo
     out.result().sortBy(_.path)
   }
 
-  def mkdirs(path: String): Unit = {
-    val segs = path.split('/').filter(_.nonEmpty)
-    segs.indices.foreach { i =>
-      val prefix = "/" + segs.take(i + 1).mkString("/")
-      if (!exists(prefix)) {
-        val (tpe, r) = call(FXP_MKDIR, _.string(prefix).attrs(Attrs()))
-        expectOk(tpe, r, s"MKDIR $prefix")
-      }
-    }
+  protected def mkdir(path: String): Unit = {
+    val (tpe, r) = call(FXP_MKDIR, _.string(path).attrs(Attrs()))
+    expectOk(tpe, r, s"MKDIR $path")
   }
 
   def removeFile(path: String): Unit = {
@@ -155,11 +154,7 @@ final class SftpFileConnection(newTransport: () => SftpTransport) extends FileCo
     expectOk(tpe, r, s"REMOVE $path")
   }
 
-  def removeDir(path: String, recursive: Boolean): Unit = {
-    if (recursive)
-      listDir(path).foreach { e =>
-        if (e.isDir) removeDir(e.path, recursive = true) else removeFile(e.path)
-      }
+  protected def rmdir(path: String): Unit = {
     val (tpe, r) = call(FXP_RMDIR, _.string(path))
     expectOk(tpe, r, s"RMDIR $path")
   }

@@ -30,7 +30,7 @@ trait SmbShare extends AutoCloseable {
   def delete(path: String): Unit
   /** Delete a directory; non-empty fails (STATUS_DIRECTORY_NOT_EMPTY). */
   def rmdir(path: String): Unit
-  /** FileRenameInformation; `replace = false` mirrors ReplaceIfExists=0:
+  /** FileRenameInformation with ReplaceIfExists = `replace`; with false,
     * an existing target fails (STATUS_OBJECT_NAME_COLLISION). */
   def rename(source: String, target: String, replace: Boolean): Unit
   def read(path: String): InputStream
@@ -67,12 +67,9 @@ object SmbFileConnection {
     }
     segs.mkString("\\")
   }
-
-  private def fromWire(wire: String): String =
-    "/" + wire.split('\\').filter(_.nonEmpty).mkString("/")
 }
 
-final class SmbFileConnection(newShare: () => SmbShare) extends FileConnection {
+final class SmbFileConnection(newShare: () => SmbShare) extends RemoteFileConnection {
   import SmbFileConnection._
 
   private lazy val share: SmbShare = newShare()
@@ -95,26 +92,12 @@ final class SmbFileConnection(newShare: () => SmbShare) extends FileConnection {
     }.sortBy(_.path)
   }
 
-  def mkdirs(path: String): Unit = {
-    val segs = path.split('/').filter(_.nonEmpty)
-    segs.indices.foreach { i =>
-      val prefix = "/" + segs.take(i + 1).mkString("/")
-      if (!exists(prefix)) share.mkdir(toWirePath(prefix))
-    }
-  }
-
+  protected def mkdir(path: String): Unit = share.mkdir(toWirePath(path))
+  protected def rmdir(path: String): Unit = share.rmdir(toWirePath(path))
   def removeFile(path: String): Unit = share.delete(toWirePath(path))
 
-  def removeDir(path: String, recursive: Boolean): Unit = {
-    if (recursive)
-      listDir(path).foreach { e =>
-        if (e.isDir) removeDir(e.path, recursive = true) else removeFile(e.path)
-      }
-    share.rmdir(toWirePath(path))
-  }
-
   def renameFile(source: String, target: String): Unit =
-    share.rename(toWirePath(source), toWirePath(target), replace = false)
+    share.rename(toWirePath(source), toWirePath(target), replace = true)
 
   def downloadFile(remote: String, local: JPath): Unit = {
     val in = share.read(toWirePath(remote))

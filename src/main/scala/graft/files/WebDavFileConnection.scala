@@ -19,8 +19,9 @@ import org.w3c.dom.Element
   *
   * Method mapping mirrors the reference client's use of its webdav3
   * library: list → PROPFIND Depth 1, stat/exists → PROPFIND Depth 0,
-  * download → GET, upload → PUT, mkdirs → MKCOL per segment, remove →
-  * DELETE, rename → MOVE with Destination. Multistatus XML is parsed with
+  * download → GET, upload → PUT, mkdirs → MKCOL per missing segment,
+  * remove → DELETE (one request for a whole tree), rename → MOVE with
+  * Destination and `Overwrite: T`. Multistatus XML is parsed with
   * the JDK DOM parser (namespace-aware: properties live in the `DAV:`
   * namespace).
   *
@@ -31,7 +32,7 @@ import org.w3c.dom.Element
   */
 final class WebDavFileConnection(host: String, port: Int,
                                  user: String, password: String,
-                                 https: Boolean = false) extends FileConnection {
+                                 https: Boolean = false) extends RemoteFileConnection {
   private val base = s"${if (https) "https" else "http"}://$host:$port"
   private val client = HttpClient.newBuilder()
     .version(HttpClient.Version.HTTP_1_1)
@@ -137,27 +138,22 @@ final class WebDavFileConnection(host: String, port: Int,
       .sortBy(_.path)
   }
 
-  def mkdirs(path: String): Unit = {
-    val segs = path.split('/').filter(_.nonEmpty)
-    segs.indices.foreach { i =>
-      val prefix = "/" + segs.take(i + 1).mkString("/")
-      if (!exists(prefix))
-        expect(send(req(prefix).method("MKCOL",
-          HttpRequest.BodyPublishers.noBody()).build(),
-          HttpResponse.BodyHandlers.discarding()), 201)
-    }
-  }
+  protected def mkdir(path: String): Unit =
+    expect(send(req(path).method("MKCOL",
+      HttpRequest.BodyPublishers.noBody()).build(),
+      HttpResponse.BodyHandlers.discarding()), 201)
+
+  protected def rmdir(path: String): Unit =
+    if (listDir(path).nonEmpty) throw new java.io.IOException(s"directory not empty: $path")
+    else removeFile(path)
 
   def removeFile(path: String): Unit =
     expect(send(req(path).DELETE().build(),
       HttpResponse.BodyHandlers.discarding()), 204)
 
-  def removeDir(path: String, recursive: Boolean): Unit = {
-    if (!recursive && listDir(path).nonEmpty)
-      throw new java.io.IOException(s"directory not empty: $path")
-    expect(send(req(path).DELETE().build(),
-      HttpResponse.BodyHandlers.discarding()), 204)
-  }
+  /** A recursive remove is one DELETE of the collection (RFC 4918 §9.6.1). */
+  override def removeDir(path: String, recursive: Boolean): Unit =
+    if (recursive) removeFile(path) else rmdir(path)
 
   def renameFile(source: String, target: String): Unit =
     expect(send(req(source).method("MOVE",

@@ -13,8 +13,6 @@ final case class StageSkew(stageId: Int, tasks: Int,
                            maxShuffleReadBytes: Long, medianShuffleReadBytes: Long,
                            maxShuffleReadRecords: Long = 0L,
                            medianShuffleReadRecords: Long = 0L) {
-  def durationSkew: Double =
-    if (medianDurationMs <= 0) 0.0 else maxDurationMs.toDouble / medianDurationMs
   def shuffleSkew: Double =
     if (medianShuffleReadBytes <= 0) 0.0
     else maxShuffleReadBytes.toDouble / medianShuffleReadBytes

@@ -213,23 +213,6 @@ object Corpus {
         coalesce(col("cleaned"), lit("")).as("cleaned"))
   }
 
-  /** The frequent-line set [[stripBoilerplate]] strips — exposed so a
-    * pipeline can audit WHAT it is about to remove (the CCNet paper's
-    * manual-inspection step) before committing to a threshold.
-    * Returns (line string, n_docs long), most-frequent first. */
-  def boilerplateLines(df: DataFrame, idCol: String, textCol: String,
-                       minDocs: Int): DataFrame = {
-    require(minDocs >= 2, "minDocs < 2 would flag every non-blank line")
-    df.select(col(idCol).as("__id"),
-        explode(split(col(textCol), "\n")).as("__line"))
-      .filter(trim(col("__line")) =!= "")
-      .select(trim(col("__line")).as("line"), col("__id"))
-      .distinct()
-      .groupBy(col("line")).agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") >= minDocs)
-      .orderBy(col("n_docs").desc, col("line"))
-  }
-
   /** Corpus-unigram negative log-likelihood — a KenLM-free perplexity
     * proxy (CCNet ranks documents by LM perplexity; with no external LM
     * in scope the corpus itself is the model): p(w) = count(w) / N over

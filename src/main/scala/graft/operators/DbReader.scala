@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.core._
 import graft.connections.DbConnection
+import org.apache.spark.GraftSparkBridge
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
 
@@ -40,21 +41,6 @@ final case class DbReader(connection: DbConnection,
                           hint: Option[String] = None,
                           dfSchema: Option[StructType] = None,
                           hwm: Option[HwmColumn] = None) {
-
-  /** The detected HWM template, probed ONCE per reader instance: it is a
-    * pure function of (source, expression, source schema), and a batch
-    * strategy calls `run()` once per WINDOW — re-probing the schema each
-    * time cost one metadata round trip per window (a LIMIT-0 query on
-    * JDBC sources, a footer-read job on file sources; measured 27 extra
-    * Spark jobs on the 90-day batch-union gate). A mid-loop schema change
-    * would have broken the already-initialized window math anyway, so
-    * caching is semantics-preserving. */
-  @transient private lazy val hwmTemplate: graft.core.Hwm = {
-    val col = hwm.get
-    connection.dialect.detectHwmClass(
-      col.qualifiedName(source), source, col.expression,
-      connection.getDfSchema(source, Seq(col.expression)).fields.head)
-  }
 
   def run(): DataFrame =
     graft.util.SparkUtils.withJobDescription(connection.spark,
@@ -104,33 +90,31 @@ final case class DbReader(connection: DbConnection,
     }
     graft.hooks.GraftListeners.fireBeforeRead(source)
     val col = hwm.get
-    inc.fetchHwm(hwmTemplate)
+    bindHwm(inc)
     val window = Window(col.expression, startFrom = inc.startEdge)
     val obs = Observation(s"graft_hwm_${source}_${col.expression}")
     val df = graft.hooks.GraftListeners
       .fireAfterRead(source, read(Some(window), None))
       .observe(obs, max(sexpr(col.expression)).as("max"))
     val result = action(df)
-    // the observation is delivered by an async QueryExecutionListener —
-    // wait on its future with a bound rather than obs.get, which would
-    // hang forever if the action never materialized the frame
-    val observedMax =
-      try Right(Option(scala.concurrent.Await.result(obs.future,
-          scala.concurrent.duration.Duration(30, "s")).getAs[Any]("max")))
-      catch {
-        case _: java.util.concurrent.TimeoutException => Left("timeout")
-      }
-    observedMax match {
-      case Right(Some(mx)) => inc.updateHwm(mx)
-      case Right(None) => // window was empty: keep the HWM
-      case Left(_) =>
-        // a late/dropped listener event is NOT the same as "no rows ran" —
-        // be loud, because a stale HWM means the next run re-reads rows
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"observation for $source.${col.expression} not " +
-            "delivered within 30s (listener bus busy, or the action never " +
-            "materialized the frame) — HWM left unchanged; the next " +
-            "incremental run will re-read this window")
+    // the observation arrives through the async listener bus; once the
+    // bus is drained, an observation still missing means the action ran
+    // no query over the frame
+    val drained =
+      try { GraftSparkBridge.waitListenerBus(connection.spark.sparkContext, 30000L); true }
+      catch { case _: java.util.concurrent.TimeoutException => false }
+    val log = org.slf4j.LoggerFactory.getLogger(getClass)
+    obs.future.value match {
+      case Some(observed) => Option(observed.get.getAs[Any]("max")).foreach(inc.updateHwm)
+      case None if drained =>
+        log.info(s"the action ran no query over $source — HWM for " +
+          s"${col.expression} left unchanged")
+      case None =>
+        // a late listener event is NOT the same as "no rows ran" — be
+        // loud, because a stale HWM means the next run re-reads rows
+        log.warn(s"observation for $source.${col.expression} not " +
+          "delivered within 30s (listener bus busy) — HWM left unchanged; " +
+          "the next incremental run will re-read this window")
     }
     result
   }
@@ -168,9 +152,21 @@ final case class DbReader(connection: DbConnection,
       None
   }
 
+  /** Bind `s` to this reader's HWM. A strategy already bound to it (a
+    * later batch window, or `run()` after `hasData`) costs nothing; an
+    * unbound one gets the HWM type detected from the source schema, one
+    * LIMIT-0 probe per strategy scope. */
+  private def bindHwm(s: HwmStrategy): Unit = {
+    val col = hwm.get
+    val name = col.qualifiedName(source)
+    if (!s.hwm.exists(_.name == name))
+      s.fetchHwm(connection.dialect.detectHwmClass(name, source, col.expression,
+        connection.getDfSchema(source, Seq(col.expression)).fields.head))
+  }
+
   /** The window `s` plans next, after binding it to this reader's HWM. */
   private def nextWindow(s: HwmStrategy): Option[Window] = {
-    s.fetchHwm(hwmTemplate)
+    bindHwm(s)
     s.nextWindow(hwm.get.expression, minMax)
   }
 

@@ -430,7 +430,7 @@ object Dedup {
     * values are bit-identical to every earlier round's. */
   private def bandRows(docs: DataFrame, bands: Int, rowsPerBand: Int,
                        seed: Long,
-                       partitionCols: Seq[String] = Nil): DataFrame = {
+                       partitionCols: Seq[String]): DataFrame = {
     val sigs = docs.withColumn("sig",
       GraftExpressions.minhashSignature(col("shingles"), bands * rowsPerBand, seed))
     sigs.select(col("id") +: partitionCols.map(col) :+
@@ -1535,7 +1535,6 @@ object Dedup {
         .where(struct(col("__sid"), col("__pos")) =!= col("__keep"))
         .select(col("__sid").as(idCol), col("__pos").as("pos"))
     }
-    val spark = df.sparkSession
     // one row per character position; the wide text column is consumed
     // by the same-stage substring projection and never reaches a shuffle
     val positions = df

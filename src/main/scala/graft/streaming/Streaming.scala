@@ -68,14 +68,6 @@ object StreamOps {
       .select(col("window.start").as("w_start"), col(keyCol), col("n"),
         col("total"))
 
-  /** Exactly-once-style stream dedup on a key within the watermark
-    * horizon (state is bounded by the watermark). */
-  def dedupWithinWatermark(df: DataFrame, tsCol: String,
-                           watermarkDelay: String,
-                           keyCols: Seq[String]): DataFrame =
-    df.withWatermark(tsCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
-
   final case class Event(user_id: Long, ts: java.sql.Timestamp, value: Double)
   /** State times are epoch MICROseconds: java.sql.Timestamp carries
     * microsecond precision (via nanos), and tracking state in
@@ -199,34 +191,6 @@ object StreamRunner {
     }
   }
 
-  /** Continuous dedup-on-ingest — the operator a training pipeline
-    * actually runs: each micro-batch is deduplicated against the
-    * PERSISTED bucketed fingerprint index
-    * ([[graft.operators.Dedup.exactDedupAgainstIndexTable]] — the index
-    * side of the anti-join never shuffles), the survivors go to `sink`,
-    * and their fingerprints are appended to the index so the NEXT batch
-    * (and the next run) dedups against them. Replay-protected by the
-    * committed-batch ledger in `store`: a re-delivered micro-batch is
-    * skipped before it can re-write the sink or re-append fps. The
-    * ledger's one open window (see
-    * [[runAvailableNowForeachBatchExactlyOnce]]): a crash AFTER
-    * `sink(survivors)` returns but BEFORE the ledger records the batch
-    * replays that one batch into the sink — exactly-once output therefore
-    * additionally requires the sink itself to be idempotent (write to a
-    * batch-id-keyed location so a replay overwrites, or use a
-    * transactional sink); the INDEX stays correct either way, since
-    * re-appended fps are harmless duplicates. The same caveat applies to
-    * [[runIncrementalNearDedup]].
-    *
-    * Ordering inside a batch: survivors are materialized (lineage
-    * truncated) BEFORE the sink write and the index append — a lazily
-    * recomputed survivor frame would re-read the index it just mutated
-    * and drop its own rows. Sink commits before the fp append: a crash
-    * between the two re-delivers the batch, the ledger skip is not yet
-    * recorded, and reprocessing re-appends the fps — duplicate fps in the
-    * index are harmless (it is an existence set), whereas appending fps
-    * before the sink commit would make a replayed batch anti-join its own
-    * rows away and LOSE them. */
   /** Continuous distribution-drift monitoring — the PSI alarm an ingest
     * pipeline keeps on a value column: every micro-batch is scored
     * against a FIXED reference (quantile boundaries + per-bucket counts,
@@ -455,6 +419,34 @@ object StreamRunner {
     else Some(spark.read.parquet(versions.maxBy(_._1)._2.toString))
   }
 
+  /** Continuous dedup-on-ingest — the operator a training pipeline
+    * actually runs: each micro-batch is deduplicated against the
+    * PERSISTED bucketed fingerprint index
+    * ([[graft.operators.Dedup.exactDedupAgainstIndexTable]] — the index
+    * side of the anti-join never shuffles), the survivors go to `sink`,
+    * and their fingerprints are appended to the index so the NEXT batch
+    * (and the next run) dedups against them. Replay-protected by the
+    * committed-batch ledger in `store`: a re-delivered micro-batch is
+    * skipped before it can re-write the sink or re-append fps. The
+    * ledger's one open window (see
+    * [[runAvailableNowForeachBatchExactlyOnce]]): a crash AFTER
+    * `sink(survivors)` returns but BEFORE the ledger records the batch
+    * replays that one batch into the sink — exactly-once output therefore
+    * additionally requires the sink itself to be idempotent (write to a
+    * batch-id-keyed location so a replay overwrites, or use a
+    * transactional sink); the INDEX stays correct either way, since
+    * re-appended fps are harmless duplicates. The same caveat applies to
+    * [[runIncrementalNearDedup]].
+    *
+    * Ordering inside a batch: survivors are materialized (lineage
+    * truncated) BEFORE the sink write and the index append — a lazily
+    * recomputed survivor frame would re-read the index it just mutated
+    * and drop its own rows. Sink commits before the fp append: a crash
+    * between the two re-delivers the batch, the ledger skip is not yet
+    * recorded, and reprocessing re-appends the fps — duplicate fps in the
+    * index are harmless (it is an existence set), whereas appending fps
+    * before the sink commit would make a replayed batch anti-join its own
+    * rows away and LOSE them. */
   def runIncrementalDedup(stream: DataFrame, idCol: String, textCol: String,
                           indexTable: String, checkpoint: String,
                           store: graft.core.HwmStore, ledgerName: String,
@@ -639,22 +631,6 @@ object StreamRunner {
       append()
     }
 
-  /** Continuous ANN-index ingestion — the embedding sibling of
-    * [[runIncrementalDedup]]: each micro-batch of (id, vector) rows is
-    * encoded with the persisted IVF-PQ index's EXISTING centroids and
-    * codebooks and appended map-only (the FAISS `add` operation,
-    * [[graft.operators.Similarity.appendToIvfPqIndex]]), so the index
-    * grows O(batch) per trigger — never a retrain, never a rewrite of
-    * existing partitions — and queries stay partition-pruned throughout
-    * ingestion. Replay-protected by the committed-batch ledger in
-    * `store`. The one open window (append done, ledger not yet recorded)
-    * re-appends the batch on replay, storing duplicate (id, code) and
-    * (id, vector) rows — which the query path collapses
-    * DETERMINISTICALLY (max-ADC shortlist, max-cosine re-rank;
-    * spec-pinned in IvfPqSimilaritySpec), so a replayed append cannot
-    * shift any query result: exactly-once semantics on READS over
-    * at-least-once storage, with compaction optional rather than
-    * required for correctness. */
   /** Fellegi–Sunter record linkage ON INGEST — the entity-resolution
     * sibling of [[runIncrementalDedup]]: each micro-batch is blocked and
     * scored against the persisted bucketed reference
@@ -700,6 +676,22 @@ object StreamRunner {
         blockCol, attrCols, refTable, indexBuckets)
     }
 
+  /** Continuous ANN-index ingestion — the embedding sibling of
+    * [[runIncrementalDedup]]: each micro-batch of (id, vector) rows is
+    * encoded with the persisted IVF-PQ index's EXISTING centroids and
+    * codebooks and appended map-only (the FAISS `add` operation,
+    * [[graft.operators.Similarity.appendToIvfPqIndex]]), so the index
+    * grows O(batch) per trigger — never a retrain, never a rewrite of
+    * existing partitions — and queries stay partition-pruned throughout
+    * ingestion. Replay-protected by the committed-batch ledger in
+    * `store`. The one open window (append done, ledger not yet recorded)
+    * re-appends the batch on replay, storing duplicate (id, code) and
+    * (id, vector) rows — which the query path collapses
+    * DETERMINISTICALLY (max-ADC shortlist, max-cosine re-rank;
+    * spec-pinned in IvfPqSimilaritySpec), so a replayed append cannot
+    * shift any query result: exactly-once semantics on READS over
+    * at-least-once storage, with compaction optional rather than
+    * required for correctness. */
   def runIncrementalAnnIngest(stream: DataFrame, idCol: String,
                               vecCol: String, indexPath: String,
                               checkpoint: String,

@@ -26,12 +26,6 @@ object SparkUtils {
     try body finally sc.setJobDescription(prev)
   }
 
-  /** Total executor cores available to the app (reference
-    * _util/spark.py:149 `get_executor_total_cores`). In local[N] mode this
-    * is N. */
-  def executorTotalCores(spark: SparkSession): Int =
-    spark.sparkContext.defaultParallelism
-
   /** Rough in-memory size estimate of a frame's plan output (reference
     * _util/spark.py:132 `estimate_dataframe_size` uses the same
     * SizeEstimator idea); here we use Catalyst's logical plan statistics,

@@ -182,6 +182,64 @@ class FileTransferSpec extends AnyFunSuite {
     assert(r.successful.size == 4)
   }
 
+  test("transfer engine round trips: one STAT per file only where ifExists " +
+       "needs it, one mkdirs per target directory") {
+    val src = tmp("rec-src"); mkTree(src) // 4 csv files in 3 directories
+    val remote = new RecordingConnection(new LocalFileConnection)
+    def upload(ifExists: FileIfExists) = {
+      remote.reset()
+      val r = FileUploader(remote, src, tmp("rec-up"), filters = Seq(Glob("*.csv")),
+        ifExists = ifExists).run()
+      assert(r.successful.size == 4, r)
+      remote
+    }
+    val up = upload(FileIfExists.ReplaceFile)
+    assert(up.stats == 0 && up("mkdirs") == 3 && up("renameFile") == 4, up)
+    val upErr = upload(FileIfExists.Error)
+    assert(upErr.stats == 4 && upErr("mkdirs") == 3, upErr)
+    val upIgn = upload(FileIfExists.Ignore)
+    assert(upIgn.stats == 4 && upIgn("mkdirs") == 3, upIgn)
+
+    def move(ifExists: FileIfExists) = {
+      val from = tmp("rec-mv-src"); mkTree(from)
+      remote.reset()
+      val r = FileMover(remote, from, tmp("rec-mv-dst"), filters = Seq(Glob("*.csv")),
+        ifExists = ifExists).run()
+      assert(r.successful.size == 4, r)
+      remote
+    }
+    val mv = move(FileIfExists.ReplaceFile)
+    // the walk lists 3 directories; each file costs one source STAT
+    assert(mv.stats == 4 && mv("mkdirs") == 3 && mv("listDir") == 3, mv)
+    val mvErr = move(FileIfExists.Error)
+    assert(mvErr.stats == 8 && mvErr("mkdirs") == 3, mvErr)
+  }
+
+  test("a failed upload leaves no remote temp file") {
+    val src = tmp("fail-src"); mkTree(src)
+    val remote = tmp("fail-remote")
+    val refusing = new DelegatingConnection(new LocalFileConnection) {
+      override def renameFile(source: String, target: String): Unit =
+        throw new java.io.IOException(s"injected: rename $source refused")
+    }
+    val r = FileUploader(refusing, src, remote, filters = Seq(Glob("*.csv")),
+      ifExists = FileIfExists.ReplaceFile).run()
+    assert(r.failed.size == 4 && r.successful.isEmpty, r)
+    assert(r.failed.forall(_._2.getMessage.startsWith("injected")))
+    assert(VanishAfterListing.tempFiles(Paths.get(remote)).isEmpty)
+  }
+
+  test("FileMover(ReplaceEntireDirectory) clears the target directory first") {
+    val src = tmp("mvr-src"); mkTree(src)
+    val dst = tmp("mvr-dst")
+    Files.write(Paths.get(dst, "stale.csv"), "old".getBytes)
+    val r = FileMover(new LocalFileConnection, src, dst, filters = Seq(Glob("a.csv")),
+      ifExists = FileIfExists.ReplaceEntireDirectory).run()
+    assert(r.successful == Seq(Paths.get(dst, "a.csv").toString), r)
+    assert(!Files.exists(Paths.get(dst, "stale.csv")), "target cleared before the move")
+    assert(Files.readString(Paths.get(dst, "a.csv")) == "1,2\n")
+  }
+
   test("a source deleted after the walk is missing, not failed: local and hadoop FS") {
     val root = Paths.get(tmp("vanish-src"))
     VanishAfterListing.assertMissingNotFailed(new LocalFileConnection, root, "v",

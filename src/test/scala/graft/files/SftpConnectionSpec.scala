@@ -258,4 +258,9 @@ class SftpConnectionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val seconds = (System.nanoTime() - t0) / 1e9
     assert(seconds < 2.0, f"100 STATs took $seconds%.2f s")
   }
+
+  test("FileUploader(ReplaceFile) twice, then FileMover: every file " +
+       "successful, no temp file left") {
+    VanishAfterListing.assertUploadTwiceThenMove(c, root.resolve("rt"), "/rt")
+  }
 }

@@ -59,8 +59,10 @@ class SmbConnectionSpec extends AnyFunSuite {
     Files.writeString(loc.resolve("up.csv"), "k,v\n3,c\n")
     c.uploadFile(loc.resolve("up.csv"), "/sub/up.csv")
     assert(c.exists("/sub/up.csv"))
-    // SMB rename is ReplaceIfExists=0: collision must throw, not clobber
-    intercept[java.io.IOException](c.renameFile("/sub/up.csv", "/sub/inner.csv"))
+    // the seam's ReplaceIfExists=0 rename collides instead of clobbering;
+    // renameFile asks the seam to replace (FileConnection.renameFile)
+    intercept[java.io.IOException](
+      new DirSmbShare(root).rename("sub\\up.csv", "sub\\inner.csv", replace = false))
     c.renameFile("/sub/up.csv", "/sub/up2.csv")
     assert(!c.exists("/sub/up.csv") && c.exists("/sub/up2.csv"))
     val in = c.open("/sub/up2.csv")
@@ -103,7 +105,29 @@ class SmbConnectionSpec extends AnyFunSuite {
     assert(share.stat("top.csv").isDefined)
   }
 
+  test("FileUploader(ReplaceFile) over an existing target succeeds") {
+    val loc = Files.createTempDirectory("smb_spec_rf")
+    Files.writeString(loc.resolve("t.csv"), "k,v\n9,new\n")
+    val served = Files.createDirectories(root.resolve("rf"))
+    Files.writeString(served.resolve("t.csv"), "k,v\n9,old\n")
+    try {
+      val r = FileUploader(c, loc.toString, "/rf", ifExists = FileIfExists.ReplaceFile).run()
+      assert(r.successful == Seq("/rf/t.csv") && r.failed.isEmpty, r.failed)
+      assert(Files.readString(served.resolve("t.csv")) === "k,v\n9,new\n")
+      assert(VanishAfterListing.tempFiles(served).isEmpty)
+    } finally {
+      VanishAfterListing.tempFiles(served).foreach(Files.delete)
+      Files.deleteIfExists(served.resolve("t.csv"))
+      Files.deleteIfExists(served)
+    }
+  }
+
   test("a source deleted after the walk is missing, not failed") {
     VanishAfterListing.assertMissingNotFailed(c, root, "vanish", "/vanish")
+  }
+
+  test("FileUploader(ReplaceFile) twice, then FileMover: every file " +
+       "successful, no temp file left") {
+    VanishAfterListing.assertUploadTwiceThenMove(c, root.resolve("rt"), "/rt")
   }
 }

@@ -127,4 +127,9 @@ class WebDavConnectionSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a source deleted after the walk is missing, not failed") {
     VanishAfterListing.assertMissingNotFailed(c, root, "vanish", "/vanish")
   }
+
+  test("FileUploader(ReplaceFile) twice, then FileMover: every file " +
+       "successful, no temp file left") {
+    VanishAfterListing.assertUploadTwiceThenMove(c, root.resolve("rt"), "/rt")
+  }
 }

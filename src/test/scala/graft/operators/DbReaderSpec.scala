@@ -223,6 +223,46 @@ class DbReaderSpec extends SparkSpec {
     Strategy.using(inside) { assert(reader.hasData) }
   }
 
+  /** A file-table connection that counts its schema and MIN/MAX probes. */
+  private class ProbeCounting(dir: String) extends FileTableConnection(spark, dir) {
+    val schemaProbes = new java.util.concurrent.atomic.AtomicInteger
+    val minMaxProbes = new java.util.concurrent.atomic.AtomicInteger
+    override def getDfSchema(source: String, columns: Seq[String]) = {
+      schemaProbes.incrementAndGet()
+      super.getDfSchema(source, columns)
+    }
+    override def getMinMaxValues(source: String, expression: String,
+                                 where: Seq[String]): (Option[Any], Option[Any]) = {
+      minMaxProbes.incrementAndGet()
+      super.getMinMaxValues(source, expression, where)
+    }
+  }
+
+  test("a 3-window batch loop probes the source schema once") {
+    val conn = new ProbeCounting(tmpDir("dbreader-schema"))
+    writeRows(conn, "s3", (1L to 90L).map(i => (i, "x")))
+    val b = new SnapshotBatchStrategy(30L, Some(1L), Some(90L))
+    val counts = Strategy.using(b) {
+      b.foreachBatch(DbReader(conn, "s3", hwm = Some(HwmColumn("id"))).run().count())
+    }
+    assert(counts == Seq(31L, 30L, 29L))
+    assert(conn.schemaProbes.get == 1)
+  }
+
+  test("hasData then run() probes MIN/MAX once") {
+    val conn = new ProbeCounting(tmpDir("dbreader-minmax"))
+    writeRows(conn, "hr", (1L to 40L).map(i => (i, "x")))
+    val store = new InMemoryHwmStore
+    store.set(IntHwm("hr.id", "hr", "id", Some(10L)))
+    val n = Strategy.using(new IncrementalStrategy(store = store)) {
+      val r = DbReader(conn, "hr", hwm = Some(HwmColumn("id")))
+      if (r.hasData) r.run().count() else -1L
+    }
+    assert(n == 30L)
+    assert(conn.minMaxProbes.get == 1)
+    assert(store.get("hr.id").get.valueOpt.contains(40L))
+  }
+
   test("writer: ifExists modes on file tables + metrics") {
     val conn = freshConn()
     writeRows(conn, "w", (1L to 10L).map(i => (i, "x")))
@@ -273,10 +313,13 @@ class DbReaderSpec extends SparkSpec {
     assert(store.get("t.id").get.valueOpt.contains(80L))
 
     // an action that materializes nothing leaves the HWM unchanged
+    val t0 = System.nanoTime()
     graft.core.Strategy.using(
       new graft.core.IncrementalStrategy(store = store)) {
       reader.runObservingHwm(_ => ())
     }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 5.0, s"runObservingHwm with no query took $secs s")
     assert(store.get("t.id").get.valueOpt.contains(80L))
   }
 
