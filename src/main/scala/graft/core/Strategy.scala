@@ -127,9 +127,15 @@ sealed abstract class HwmStrategy(val store: HwmStore) extends Strategy {
     * there is nothing to read (reference db_reader.py:718-794). `probe`
     * returns the source's MIN/MAX of `expression` inside a window whose
     * edges are both inclusive; `>` vs `>=` applies only to the returned
-    * window (db_reader.py:741-746). Call after [[fetchHwm]]. */
-  private[graft] def nextWindow(expression: String,
-                                probe: Window => (Option[Any], Option[Any])): Option[Window]
+    * window (db_reader.py:741-746). Call after [[fetchHwm]].
+    *
+    * `reader` names the query the window is for. A look-ahead (`hasData`)
+    * passes `keep`, and its plan is handed, once, to the next call for an
+    * equal `reader` from the same start edge, so `hasData` then `run()`
+    * probe once; every other call plans afresh. */
+  private[graft] def nextWindow(reader: Any, expression: String,
+                                probe: Window => (Option[Any], Option[Any]),
+                                keep: Boolean): Option[Window]
 
   /** `v` (a Spark row value or a user literal) in the bound HWM's value
     * type — the conversion its `withValue` applies. */
@@ -151,23 +157,22 @@ final class IncrementalStrategy(val offset: Option[Any] = None,
     case (None, _) => Edge.unset
   }
 
-  /** The window last planned and the start edge it was planned from. */
-  @volatile private var planned: Option[(Edge, Option[Window])] = None
+  /** The plan a look-ahead kept: its reader, start edge and window. */
+  @volatile private var kept: Option[(Any, Edge, Option[Window])] = None
 
   /** `(startEdge, max]`, with `max` probed from the inclusive start so the
     * HWM matches the frame even if rows arrive mid-read
-    * (db_reader.py:786-792). The plan holds until [[updateHwm]] moves the
-    * start edge, so `hasData` then `run()` probe once. */
-  private[graft] def nextWindow(expression: String,
-                                probe: Window => (Option[Any], Option[Any])): Option[Window] =
+    * (db_reader.py:786-792). */
+  private[graft] def nextWindow(reader: Any, expression: String,
+                                probe: Window => (Option[Any], Option[Any]),
+                                keep: Boolean): Option[Window] =
     synchronized {
       val start = startEdge
-      planned.collect { case (`start`, w) => w }.getOrElse {
-        val w = probe(Window(expression, Edge(start.value)))._2
-          .map(mx => Window(expression, start, Edge.inclusive(align(mx))))
-        planned = Some((start, w))
-        w
-      }
+      val taken = if (keep) None else kept.collect { case (`reader`, `start`, w) => w }
+      val w = taken.getOrElse(probe(Window(expression, Edge(start.value)))._2
+        .map(mx => Window(expression, start, Edge.inclusive(align(mx)))))
+      kept = if (keep) Some((reader, start, w)) else None
+      w
     }
 
   private def negate(step: Any): Any = step match {
@@ -239,9 +244,11 @@ sealed abstract class BatchHwmStrategy(val step: Any, store: HwmStore)
   /** Seeds the range on the first call — probing only the edges
     * [[firstEdge]]/[[lastValue]] leave unset; an empty source leaves it
     * unseeded — then returns the current window until the range is
-    * covered. */
-  private[graft] def nextWindow(expression: String,
-                                probe: Window => (Option[Any], Option[Any])): Option[Window] =
+    * covered. The range is seeded once per scope, so a look-ahead needs
+    * no kept plan. */
+  private[graft] def nextWindow(reader: Any, expression: String,
+                                probe: Window => (Option[Any], Option[Any]),
+                                keep: Boolean): Option[Window] =
     synchronized {
       if (stop.isEmpty) {
         val first = firstEdge

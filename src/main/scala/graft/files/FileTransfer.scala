@@ -60,9 +60,10 @@ private object TransferPool {
   *  - a copy (`viaTemp`) lands at `<dir>/.<name>.tmp` and is renamed over
   *    the target (`renameFile` replaces), so readers never see a partial
   *    file; a move lands on the target directly;
-  *  - a `put` that throws `NoSuchFileException` or `FileNotFoundException`
-  *    reports the file `missing`: the walk listed it, so it was removed
-  *    since;
+  *  - `put` returns false when the operator found its source gone since
+  *    the walk, having written nothing: the file is `missing`. Only the
+  *    operator can tell that, so every exception is a failure, a target
+  *    side not-found (an upload refused with a 550) included;
   *  - a failed copy deletes its temp file, and a cleanup error rides on
   *    the cause as suppressed;
   *  - `finish` runs after a file lands (delete the source, record it). */
@@ -70,7 +71,7 @@ private object TransferEngine {
   def run(files: Seq[RemoteEntry], sourceRoot: String, targetRoot: String,
           dest: FileConnection, workers: Int, ifExists: FileIfExists,
           viaTemp: Boolean, finish: RemoteEntry => Unit = _ => ())
-         (put: (RemoteEntry, String) => Unit): FileTransferResult = {
+         (put: (RemoteEntry, String) => Boolean): FileTransferResult = {
     if (ifExists == FileIfExists.ReplaceEntireDirectory && dest.exists(targetRoot))
       dest.removeDir(targetRoot, recursive = true)
     val base = sourceRoot.stripSuffix("/")
@@ -86,23 +87,20 @@ private object TransferEngine {
         val cut = target.lastIndexOf('/') + 1
         val landing =
           if (viaTemp) s"${target.substring(0, cut)}.${target.substring(cut)}.tmp" else target
-        try {
-          val found =
-            try { put(e, landing); true }
-            catch { case _: NoSuchFileException | _: FileNotFoundException => false }
-          if (!found) {
-            if (viaTemp) discard(dest, landing)
-            ("missing", e.path)
-          } else {
-            if (viaTemp) dest.renameFile(landing, target)
-            finish(e)
-            ("ok", target)
+        val found =
+          try {
+            val found = put(e, landing)
+            if (found && viaTemp) dest.renameFile(landing, target)
+            found
+          } catch {
+            case t: Throwable if viaTemp =>
+              try dest.removeFile(landing) catch {
+                case _: NoSuchFileException | _: FileNotFoundException => // never written
+                case c: Throwable => t.addSuppressed(c)
+              }
+              throw t
           }
-        } catch {
-          case t: Throwable if viaTemp =>
-            try discard(dest, landing) catch { case c: Throwable => t.addSuppressed(c) }
-            throw t
-        }
+        if (found) { finish(e); ("ok", target) } else ("missing", e.path)
       }
     }
     val zipped = files.zip(outcomes)
@@ -115,9 +113,6 @@ private object TransferEngine {
     case 0 => "/"
     case i => path.substring(0, i)
   }
-
-  private def discard(dest: FileConnection, tmp: String): Unit =
-    if (dest.exists(tmp)) dest.removeFile(tmp)
 }
 
 /** Remote FS → local FS bulk copy: walk + filter + limit + HWM + the
@@ -186,7 +181,15 @@ final case class FileDownloader(connection: FileConnection,
         workers, ifExists, viaTemp = true, finish = e => {
           if (deleteSource) connection.removeFile(e.path)
           transferred.add(e)
-        })((e, landing) => connection.downloadFile(e.path, Paths.get(landing)))
+        }) { (e, landing) =>
+        try { connection.downloadFile(e.path, Paths.get(landing)); true }
+        catch {
+          // the connection's not-found for a source gone since the walk
+          case _: NoSuchFileException | _: FileNotFoundException =>
+            Files.deleteIfExists(Paths.get(landing))
+            false
+        }
+      }
     } finally {
       // HWM updated+saved even on partial failure (reference :771-775).
       strategy.foreach { s =>
@@ -222,8 +225,7 @@ final case class FileUploader(connection: FileConnection,
       (e, landing) =>
         val source = Paths.get(e.path)
         // a local check: an absent source must not open a remote temp file
-        if (!Files.exists(source)) throw new NoSuchFileException(e.path)
-        connection.uploadFile(source, landing)
+        Files.exists(source) && { connection.uploadFile(source, landing); true }
     }
 }
 
@@ -240,12 +242,16 @@ final case class FileMover(connection: FileConnection,
 
   def viewFiles(): Seq[RemoteEntry] = connection.walk(sourcePath, filters, limits)._1
 
-  def run(): FileTransferResult =
+  def run(): FileTransferResult = {
+    // clearing a directory that holds the source would delete the source
+    require(ifExists != FileIfExists.ReplaceEntireDirectory ||
+      !Paths.get(sourcePath).normalize().startsWith(Paths.get(targetPath).normalize()),
+      s"ReplaceEntireDirectory: target $targetPath holds the source $sourcePath")
     TransferEngine.run(viewFiles(), sourcePath, targetPath, connection, workers,
       ifExists, viaTemp = false) { (e, target) =>
       // one STAT: not every connection's renameFile reports an absent
       // source as a typed not-found
-      if (!connection.exists(e.path)) throw new NoSuchFileException(e.path)
-      connection.renameFile(e.path, target)
+      connection.exists(e.path) && { connection.renameFile(e.path, target); true }
     }
+  }
 }

@@ -23,10 +23,11 @@ import SftpProtocol._
   * channel; open one connection per worker to transfer files in parallel.
   * Each request leaves in one write (see [[SftpProtocol.writePacket]]).
   *
-  * `renameFile` is one RENAME, so it replaces an existing target only
-  * where the server does: strict SFTP v3 servers refuse a RENAME over an
-  * existing file (draft-ietf-secsh-filexfer-02 §6.5). [[MiniSftpServer]]
-  * replaces.
+  * Strict SFTP v3 servers, OpenSSH's sftp-server among them, refuse a
+  * RENAME over an existing file (draft-ietf-secsh-filexfer-02 §6.5);
+  * `renameFile` then removes the target file and renames again, so it
+  * replaces as the [[FileConnection]] contract asks, though not
+  * atomically there. [[MiniSftpServer]] replaces in one RENAME.
   */
 final class SftpFileConnection(newTransport: () => SftpTransport) extends RemoteFileConnection {
   private val ChunkSize = 32 * 1024
@@ -149,9 +150,14 @@ final class SftpFileConnection(newTransport: () => SftpTransport) extends Remote
     expectOk(tpe, r, s"MKDIR $path")
   }
 
+  /** An absent file is a `NoSuchFileException`. */
   def removeFile(path: String): Unit = {
     val (tpe, r) = call(FXP_REMOVE, _.string(path))
-    expectOk(tpe, r, s"REMOVE $path")
+    if (tpe == FXP_STATUS) statusCode(r) match {
+      case (FX_OK, _) =>
+      case (FX_NO_SUCH_FILE, msg) => throw new NoSuchFileException(path, null, msg)
+      case (code, msg) => throw new IOException(s"REMOVE $path: SFTP status $code $msg")
+    } else throw new IOException(s"REMOVE $path: unexpected packet $tpe")
   }
 
   protected def rmdir(path: String): Unit = {
@@ -159,9 +165,21 @@ final class SftpFileConnection(newTransport: () => SftpTransport) extends Remote
     expectOk(tpe, r, s"RMDIR $path")
   }
 
+  /** A refused RENAME of an existing source over an existing target file
+    * removes the target and renames again (see the class doc). */
   def renameFile(source: String, target: String): Unit = {
-    val (tpe, r) = call(FXP_RENAME, _.string(source).string(target))
-    expectOk(tpe, r, s"RENAME $source -> $target")
+    def rename() = call(FXP_RENAME, _.string(source).string(target))
+    val what = s"RENAME $source -> $target"
+    val (tpe, r) = rename()
+    if (tpe != FXP_STATUS) throw new IOException(s"$what: unexpected packet $tpe")
+    statusCode(r) match {
+      case (FX_OK, _) =>
+      case _ if statAttrs(target).exists(!_.isDir) && statAttrs(source).isDefined =>
+        removeFile(target)
+        val (tpe2, r2) = rename()
+        expectOk(tpe2, r2, what)
+      case (code, msg) => throw new IOException(s"$what: SFTP status $code $msg")
+    }
   }
 
   /** An absent file is a `NoSuchFileException`, so a caller can tell it

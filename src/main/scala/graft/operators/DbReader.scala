@@ -47,7 +47,7 @@ final case class DbReader(connection: DbConnection,
       s"${connection.getClass.getSimpleName} -> DbReader.run($source)") {
       graft.hooks.GraftListeners.fireBeforeRead(source)
       val strategy = checkStrategy()
-      val planned = strategy.map(nextWindow)
+      val planned = strategy.map(nextWindow(_))
       for {
         s <- strategy
         w <- planned.flatten
@@ -121,8 +121,9 @@ final case class DbReader(connection: DbConnection,
 
   /** `LIMIT 1` existence probe under the window `run()` reads next
     * (reference db_reader.py:452-512: limit=1 then take(1)); finding that
-    * window may take a MIN/MAX probe. */
-  def hasData: Boolean = checkStrategy().map(nextWindow) match {
+    * window may take a MIN/MAX probe, which this reader's next `run()`
+    * reuses. */
+  def hasData: Boolean = checkStrategy().map(nextWindow(_, keep = true)) match {
     case Some(None) => false // the strategy has nothing left to read
     case planned => read(planned.flatten, Some(1)).take(1).nonEmpty
   }
@@ -164,10 +165,11 @@ final case class DbReader(connection: DbConnection,
         connection.getDfSchema(source, Seq(col.expression)).fields.head))
   }
 
-  /** The window `s` plans next, after binding it to this reader's HWM. */
-  private def nextWindow(s: HwmStrategy): Option[Window] = {
+  /** The window `s` plans next, after binding it to this reader's HWM;
+    * `keep` hands the plan to this reader's next `run()`. */
+  private def nextWindow(s: HwmStrategy, keep: Boolean = false): Option[Window] = {
     bindHwm(s)
-    s.nextWindow(hwm.get.expression, minMax)
+    s.nextWindow(this, hwm.get.expression, minMax, keep)
   }
 
   private def minMax(window: Window): (Option[Any], Option[Any]) =

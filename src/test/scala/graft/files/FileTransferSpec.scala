@@ -229,6 +229,35 @@ class FileTransferSpec extends AnyFunSuite {
     assert(VanishAfterListing.tempFiles(Paths.get(remote)).isEmpty)
   }
 
+  test("an upload the target refuses as not found is failed, not missing") {
+    val src = tmp("nf-src"); mkTree(src)
+    val remote = tmp("nf-remote")
+    // e.g. an FTPS STOR answered 550, or SFTP OPEN answered NO_SUCH_FILE
+    val refusing = new DelegatingConnection(new LocalFileConnection) {
+      override def uploadFile(local: java.nio.file.Path, target: String): Unit =
+        throw new java.io.FileNotFoundException(s"injected: 550 $target")
+    }
+    val r = FileUploader(refusing, src, remote, filters = Seq(Glob("*.csv")),
+      ifExists = FileIfExists.ReplaceFile).run()
+    assert(r.failed.size == 4 && r.missing.isEmpty && r.successful.isEmpty, r)
+    assert(VanishAfterListing.tempFiles(Paths.get(remote)).isEmpty)
+  }
+
+  test("FileMover(ReplaceEntireDirectory) refuses a target that holds the source") {
+    val root = tmp("mvr-anc")
+    val src = Paths.get(root, "in").toString; mkTree(src)
+    Seq(root, s"$root/", src, s"$root/./in/..").foreach { target =>
+      intercept[IllegalArgumentException] {
+        FileMover(new LocalFileConnection, src, target,
+          ifExists = FileIfExists.ReplaceEntireDirectory).run()
+      }
+    }
+    assert(Files.exists(Paths.get(src, "a.csv")), "the source is untouched")
+    val r = FileMover(new LocalFileConnection, src, s"${root}2",
+      filters = Seq(Glob("a.csv")), ifExists = FileIfExists.ReplaceEntireDirectory).run()
+    assert(r.successful.size == 1, r)
+  }
+
   test("FileMover(ReplaceEntireDirectory) clears the target directory first") {
     val src = tmp("mvr-src"); mkTree(src)
     val dst = tmp("mvr-dst")

@@ -84,6 +84,35 @@ class SftpConnectionSpec extends AnyFunSuite with BeforeAndAfterAll {
     def close(): Unit = inner.close()
   }
 
+  /** Loopback transport that refuses, as OpenSSH's sftp-server does, a
+    * RENAME of an existing source over an existing file: it retypes that
+    * frame to a packet type the server does not know, which the server
+    * answers with FX_FAILURE for the same request id. Relies on one write
+    * per frame. */
+  private class StrictRenameTransport extends SftpTransport {
+    private val inner = new TcpSftpTransport(srv.host, srv.port)
+    @volatile var refused = 0
+    val input: java.io.InputStream = inner.input
+    val output: java.io.OutputStream = new java.io.OutputStream {
+      override def write(b: Int): Unit = inner.output.write(b)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        if (len > 5 && (b(off + 4) & 0xff) == SftpProtocol.FXP_RENAME) {
+          val r = new SftpProtocol.PacketReader(b.slice(off + 5, off + len))
+          r.u32()
+          val (from, to) = (r.string(), r.string())
+          if (Files.exists(root.resolve(from.stripPrefix("/"))) &&
+              Files.isRegularFile(root.resolve(to.stripPrefix("/")))) {
+            refused += 1
+            b(off + 4) = 250.toByte
+          }
+        }
+        inner.output.write(b, off, len)
+      }
+      override def flush(): Unit = inner.output.flush()
+    }
+    def close(): Unit = inner.close()
+  }
+
   private def version =
     (SftpProtocol.FXP_VERSION, new SftpProtocol.PacketBuilder().u32(SftpProtocol.ProtocolVersion))
 
@@ -165,6 +194,25 @@ class SftpConnectionSpec extends AnyFunSuite with BeforeAndAfterAll {
     try assert(new String(in.readAllBytes()) === "z") finally in.close()
     c.removeDir("/a", recursive = true)
     assert(!c.exists("/a"))
+  }
+
+  test("renameFile replaces an existing target on a server that refuses " +
+       "RENAME over a file") {
+    val t = new StrictRenameTransport
+    val strict = new SftpFileConnection(() => t)
+    Files.writeString(root.resolve("rn_src.txt"), "new")
+    Files.writeString(root.resolve("rn_dst.txt"), "old")
+    strict.renameFile("/rn_src.txt", "/rn_dst.txt")
+    assert(t.refused == 1)
+    assert(!Files.exists(root.resolve("rn_src.txt")))
+    assert(Files.readString(root.resolve("rn_dst.txt")) == "new")
+    // a refusal that is not about an existing target is still an error
+    intercept[java.io.IOException](strict.renameFile("/rn_absent.txt", "/rn_dst.txt"))
+    assert(Files.readString(root.resolve("rn_dst.txt")) == "new")
+    Files.delete(root.resolve("rn_dst.txt"))
+    VanishAfterListing.assertUploadTwiceThenMove(strict, root.resolve("rt_strict"),
+      "/rt_strict")
+    assert(t.refused >= 2, "the second upload renamed over both targets")
   }
 
   test("FileDownloader pulls a filtered tree through the SFTP packet stack") {

@@ -263,6 +263,25 @@ class DbReaderSpec extends SparkSpec {
     assert(store.get("hr.id").get.valueOpt.contains(40L))
   }
 
+  test("hasData plans afresh each call; only the same reader's run() takes its plan") {
+    val conn = new ProbeCounting(tmpDir("dbreader-poll"))
+    writeRows(conn, "hp", (1L to 20L).map(i => (i, "x")))
+    val store = new InMemoryHwmStore
+    store.set(IntHwm("hp.id", "hp", "id", Some(20L)))
+    Strategy.using(new IncrementalStrategy(store = store)) {
+      val r = DbReader(conn, "hp", hwm = Some(HwmColumn("id")))
+      assert(!r.hasData)
+      (21L to 30L).map(i => (i, "x")).toDF("id", "name").write.mode("append")
+        .parquet(conn.tablePath("hp"))
+      assert(r.hasData, "rows appended after a false hasData must show")
+      // another filter is another query: it plans its own window (20, 25]
+      assert(r.copy(where = Seq("id <= 25")).run().count() == 5L)
+      assert(r.run().count() == 5L)
+    }
+    assert(conn.minMaxProbes.get == 4)
+    assert(store.get("hp.id").get.valueOpt.contains(30L))
+  }
+
   test("writer: ifExists modes on file tables + metrics") {
     val conn = freshConn()
     writeRows(conn, "w", (1L to 10L).map(i => (i, "x")))
