@@ -5226,9 +5226,9 @@ object SparkEntry {
     "streaming_recipe_ingest" -> ((s, dir) => {
       // the WHOLE eight-stage recipe as a STREAM: two mtime-ordered
       // 125-doc micro-batches drive StreamRunner.runIncrementalRecipe
-      // (foreachBatch -> Recipe.curateIncrementalStaged, sink BEFORE
-      // index append, replay ledger). Batch 2's plants are copies of
-      // BATCH-1 docs (+1e6 exact, +2e6 same-source ' q' near, +4e6
+      // (foreachBatch -> Recipe.curateIncremental under the batch's
+      // generation, then sink, then replay ledger). Batch 2's plants are
+      // copies of BATCH-1 docs (+1e6 exact, +2e6 same-source ' q' near, +4e6
       // re-sourced benchmark), so only the indexes batch 1 appended can
       // drop them; the oracle replays both batches through the same
       // composed CTEs as pipeline_recipe_resume over this gate's

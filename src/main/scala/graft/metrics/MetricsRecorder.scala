@@ -1,5 +1,6 @@
 package graft.metrics
 
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 import org.apache.spark.scheduler._
@@ -16,6 +17,50 @@ final case class SparkCommandMetrics(inputRows: Long, inputBytes: Long,
   def isEmpty: Boolean = inputRows == 0 && outputRows == 0 && runTimeMillis == 0
 }
 
+/** A listener that sees only the tasks of Spark jobs submitted inside its
+  * own [[measure]] call: `measure` tags the calling thread with a scope
+  * local property (threads it starts inherit it), and the listener counts
+  * only stages whose job carries that scope. A job another thread runs on
+  * the same SparkContext meanwhile is not counted. */
+private[metrics] abstract class ScopedListener extends SparkListener {
+  private val scope = ScopedListener.next.incrementAndGet().toString
+  private val stages = ConcurrentHashMap.newKeySet[Int]()
+
+  /** One ended task of a stage this listener's scope submitted. */
+  protected def onScopedTaskEnd(taskEnd: SparkListenerTaskEnd): Unit
+
+  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+    if (Option(e.properties).flatMap(p => Option(p.getProperty(ScopedListener.Property)))
+        .exists(_.split(',').contains(scope))) stages.add(e.stageInfo.stageId)
+
+  override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit =
+    if (stages.contains(taskEnd.stageId)) onScopedTaskEnd(taskEnd)
+
+  /** Attach, run `body` under this listener's scope (nested inside any
+    * enclosing scope), drain the async listener bus so every task-end
+    * event has arrived, detach. */
+  def measure[A](spark: SparkSession)(body: => A): A = {
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty(ScopedListener.Property)
+    sc.addSparkListener(this)
+    sc.setLocalProperty(ScopedListener.Property,
+      Option(outer).fold(scope)(o => s"$o,$scope"))
+    try {
+      val result = body
+      org.apache.spark.GraftSparkBridge.waitListenerBus(sc, 30000L)
+      result
+    } finally {
+      sc.setLocalProperty(ScopedListener.Property, outer)
+      sc.removeSparkListener(this)
+    }
+  }
+}
+
+private object ScopedListener {
+  val Property = "graft.metrics.scope"
+  private val next = new AtomicLong
+}
+
 /** `SparkListener`-based metrics capture around a read/write command.
   *
   * Reference implements this through a Py4J callback server
@@ -25,14 +70,14 @@ final case class SparkCommandMetrics(inputRows: Long, inputBytes: Long,
   *   val metrics = MetricsRecorder.record(spark) { df.write.parquet(p) }
   * }}}
   */
-final class MetricsRecorder extends SparkListener {
+final class MetricsRecorder private extends ScopedListener {
   private val inputRows = new LongAdder; private val inputBytes = new LongAdder
   private val outputRows = new LongAdder; private val outputBytes = new LongAdder
   private val runTime = new LongAdder; private val cpuTime = new LongAdder
   private val diskSpill = new LongAdder; private val memSpill = new LongAdder
   private val peakMem = new AtomicLong(0)
 
-  override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
+  protected def onScopedTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
     val m = taskEnd.taskMetrics
     if (m != null) {
       inputRows.add(m.inputMetrics.recordsRead)
@@ -53,15 +98,9 @@ final class MetricsRecorder extends SparkListener {
 }
 
 object MetricsRecorder {
-  /** Run `body` with a recorder attached; returns (result, metrics). */
+  /** Run `body` and return (result, metrics of the jobs `body` ran). */
   def record[A](spark: SparkSession)(body: => A): (A, SparkCommandMetrics) = {
     val rec = new MetricsRecorder
-    spark.sparkContext.addSparkListener(rec)
-    try {
-      val result = body
-      // Listener bus is async; wait for queued task-end events to drain.
-      org.apache.spark.GraftSparkBridge.waitListenerBus(spark.sparkContext, 30000L)
-      (result, rec.snapshot)
-    } finally spark.sparkContext.removeSparkListener(rec)
+    (rec.measure(spark)(body), rec.snapshot)
   }
 }

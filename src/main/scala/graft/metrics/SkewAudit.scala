@@ -34,12 +34,12 @@ final case class StageSkew(stageId: Int, tasks: Int,
   * max/median task duration and shuffle-read ratios; stages past a
   * threshold are candidates for salting or AQE skew-join tuning.
   */
-final class SkewAudit extends SparkListener {
+final class SkewAudit private extends ScopedListener {
   private val durations = TrieMap.empty[Int, ArrayBuffer[Long]]
   private val shuffleReads = TrieMap.empty[Int, ArrayBuffer[Long]]
   private val shuffleRecords = TrieMap.empty[Int, ArrayBuffer[Long]]
 
-  override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
+  protected def onScopedTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
     val m = taskEnd.taskMetrics
     if (m != null) {
       durations.getOrElseUpdate(taskEnd.stageId, ArrayBuffer.empty)
@@ -70,14 +70,9 @@ final class SkewAudit extends SparkListener {
 }
 
 object SkewAudit {
-  /** Run `body` with a skew auditor attached; returns (result, report). */
+  /** Run `body`; returns (result, skew report of the stages `body` ran). */
   def audit[A](spark: SparkSession)(body: => A): (A, Seq[StageSkew]) = {
     val rec = new SkewAudit
-    spark.sparkContext.addSparkListener(rec)
-    try {
-      val result = body
-      org.apache.spark.GraftSparkBridge.waitListenerBus(spark.sparkContext, 30000L)
-      (result, rec.snapshot)
-    } finally spark.sparkContext.removeSparkListener(rec)
+    (rec.measure(spark)(body), rec.snapshot)
   }
 }

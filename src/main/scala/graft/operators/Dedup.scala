@@ -39,31 +39,29 @@ object Dedup {
     df.join(keep, Seq(idCol), "left_semi")
   }
 
-  /** Persist the corpus's distinct fingerprint set — the historical index
-    * an INCREMENTAL ingestion run dedups new batches against. 8 bytes per
-    * distinct document, so at 100 TB of text the index is a few GB of
-    * parquet: re-deduplicating the full corpus per batch (what a
-    * stateless pipeline does) rescans everything; this scans only the
-    * index. Append-able: union new survivors' fingerprints and rewrite,
-    * or write per-batch subdirectories. */
-  def buildFingerprintIndex(df: DataFrame, textCol: String,
-                            path: String): Unit =
-    df.select(TextFunctions.fingerprint(col(textCol)).as("fp"))
-      .distinct()
-      .write.mode("overwrite").parquet(path)
+  /** Generation tags of the persisted indexes a batch's own append could
+    * feed back into its own decisions: the key/fingerprint index, the
+    * MinHash `_bands` table and the span-gram index each carry a `gen`
+    * column, the generation that wrote the row. A vs-index dedup given
+    * generation `g` reads only rows with `gen < g`, and an append given
+    * `g` writes `gen = g`, so a batch replayed after its own append
+    * computes the same answer as its first run. Without a generation,
+    * reads see every row and writes are history: `gen = HistoryGen`,
+    * below every generation a caller may pass. */
+  private[graft] val HistoryGen = 0L
 
-  /** Batch rows that are first-occurrence WITHIN the batch (smallest id
-    * wins, as [[exactDedup]]) and whose fingerprint is absent from the
-    * persisted index — i.e. genuinely new documents. The index side of
-    * the anti-join carries only the 8-byte fingerprints; when the index
-    * fits the broadcast threshold the batch side never shuffles. For an
-    * index past the broadcast threshold use the BUCKETED variants below —
-    * this path re-shuffles the full historical index every batch. */
-  def exactDedupAgainstIndex(df: DataFrame, idCol: String, textCol: String,
-                             indexPath: String): DataFrame =
-    dedupNewAgainstIndexByKey(df, idCol,
-      TextFunctions.fingerprint(col(textCol)),
-      df.sparkSession.read.parquet(indexPath))
+  private def checkedGen(g: Long): Long = {
+    require(g > HistoryGen, s"generation must be > $HistoryGen (history), got $g")
+    g
+  }
+
+  /** The rows of index frame `idx` visible to `generation`. */
+  private def visible(idx: DataFrame, generation: Option[Long]): DataFrame =
+    generation.fold(idx)(g => idx.filter(col("gen") < checkedGen(g)))
+
+  /** `rows` tagged with the generation that writes them. */
+  private def tagged(rows: DataFrame, generation: Option[Long]): DataFrame =
+    rows.withColumn("gen", lit(generation.fold(HistoryGen)(checkedGen)))
 
   /** The historical fingerprint index as a BUCKETED table (bucketed and
     * per-bucket sorted by `fp`): the layout that makes the per-batch
@@ -88,26 +86,31 @@ object Dedup {
     * corrupts results — the index is an existence set, duplicates only
     * waste bytes — so a replayed batch is safe, just not free. */
   def appendToFingerprintIndexTable(newDocs: DataFrame, textCol: String,
-                                    table: String, buckets: Int = 32): Unit =
+                                    table: String, buckets: Int = 32,
+                                    generation: Option[Long] = None): Unit =
     appendKeysToIndexTable(newDocs, TextFunctions.fingerprint(col(textCol)),
-      table, buckets)
+      table, buckets, generation)
 
   /** Offline maintenance for the append-based fingerprint index: one
-    * sorted file per bucket again, replay-duplicated fps collapsed
-    * (see [[Bucketing.compactBucketed]] for the atomicity contract). */
+    * sorted file per bucket again, replay-duplicated fps collapsed (a
+    * replay rewrites its rows under the same generation; see
+    * [[Bucketing.compactBucketed]] for the atomicity contract). */
   def compactFingerprintIndexTable(spark: org.apache.spark.sql.SparkSession,
                                    table: String, buckets: Int = 32): Unit =
     Bucketing.compactBucketed(spark, table, buckets, Seq("fp"),
       dropDuplicates = true)
 
-  /** [[exactDedupAgainstIndex]] against the bucketed index table: the
-    * anti-join plan has NO Exchange on the index side (plan-asserted in
-    * DedupIndexSpec) — only the incoming batch shuffles, by its own
-    * fingerprint, into the index's bucket count. */
+  /** Batch rows that are first-occurrence WITHIN the batch (smallest id
+    * wins, as [[exactDedup]]) and whose fingerprint is absent from the
+    * bucketed index rows visible to `generation`: the anti-join plan has
+    * NO Exchange on the index side (plan-asserted in DedupIndexSpec) —
+    * only the incoming batch shuffles, by its own fingerprint, into the
+    * index's bucket count. */
   def exactDedupAgainstIndexTable(df: DataFrame, idCol: String,
-                                  textCol: String, table: String): DataFrame =
+                                  textCol: String, table: String,
+                                  generation: Option[Long] = None): DataFrame =
     keyedDedupAgainstIndexTable(df, idCol,
-      TextFunctions.fingerprint(col(textCol)), table)
+      TextFunctions.fingerprint(col(textCol)), table, generation)
 
   /** The NEAR-dup analogue of the fingerprint index: persist the
     * historical corpus's MinHash band buckets and shingle sets as two
@@ -140,7 +143,7 @@ object Dedup {
                              seed: Long = 42L, buckets: Int = 32,
                              partitionCols: Seq[String] = Nil): Unit =
     SignedBatch.sign(df, idCol, textCol, shingleSize, bands, rowsPerBand,
-      seed, partitionCols).writeIndex(table, buckets, SaveMode.Overwrite)
+      seed, partitionCols).writeIndex(table, buckets, SaveMode.Overwrite, None)
 
   /** Append a processed batch (its SURVIVORS) to the MinHash index.
     * Duplicate rows from a replayed append are harmless for correctness
@@ -151,10 +154,11 @@ object Dedup {
                                 shingleSize: Int = 3, bands: Int = 32,
                                 rowsPerBand: Int = 4, seed: Long = 42L,
                                 buckets: Int = 32,
-                                partitionCols: Seq[String] = Nil): Unit =
+                                partitionCols: Seq[String] = Nil,
+                                generation: Option[Long] = None): Unit =
     SignedBatch.sign(newDocs, idCol, textCol, shingleSize, bands,
       rowsPerBand, seed, partitionCols).writeIndex(table, buckets,
-      SaveMode.Append)
+      SaveMode.Append, generation)
 
   /** Offline maintenance for the MinHash index pair — same contract as
     * [[compactFingerprintIndexTable]]; replay-duplicated band/shingle
@@ -178,10 +182,11 @@ object Dedup {
                                     rowsPerBand: Int = 4,
                                     threshold: Double = 0.8,
                                     seed: Long = 42L,
-                                    partitionCols: Seq[String] = Nil
+                                    partitionCols: Seq[String] = Nil,
+                                    generation: Option[Long] = None
                                    ): DataFrame =
     SignedBatch.sign(batch, idCol, textCol, shingleSize, bands, rowsPerBand,
-      seed, partitionCols).survivorsVsIndex(table, threshold)
+      seed, partitionCols).survivorsVsIndex(table, threshold, generation)
 
   /** One batch's MinHash signing: its shingle frame (id, [partitionCols],
     * shingles, n_sh) and band frame (id, [partitionCols], band, bucket),
@@ -191,7 +196,7 @@ object Dedup {
     * caller that needs the same batch's signing more than once — the
     * vs-history join, the in-batch pair pass and the index append of
     * [[graft.streaming.StreamRunner.runIncrementalNearDedup]] and
-    * [[Recipe.curateIncrementalStaged]] — signs once and reuses the
+    * [[Recipe.curateIncremental]] — signs once and reuses the
     * value: re-deriving the frames from raw text tripled the per-batch
     * signing cost, and frames from different batches or parameters
     * cannot be paired by construction. */
@@ -202,13 +207,16 @@ object Dedup {
                                                   partitionCols: Seq[String]) {
     import SignedBatch.{Bands, Shingles}
 
-    /** Rows of the signed batch with no verified near-duplicate in the
-      * index `table`. The partition scoping is entirely in the salted
-      * bucket values, so the vs-index join is the same with or without
-      * `partitionCols` and its index side never shuffles. */
-    def survivorsVsIndex(table: String, threshold: Double): DataFrame = {
+    /** Rows of the signed batch with no verified near-duplicate among the
+      * rows of index `table` visible to `generation`. The partition
+      * scoping is entirely in the salted bucket values, so the vs-index
+      * join is the same with or without `partitionCols` and its index
+      * side never shuffles. Only the band table is generation-tagged:
+      * verification fetches the shingles of visible candidates only. */
+    def survivorsVsIndex(table: String, threshold: Double,
+                         generation: Option[Long]): DataFrame = {
       val spark = batch.sparkSession
-      val idxBands = spark.table(Bands.of(table))
+      val idxBands = visible(spark.table(Bands.of(table)), generation)
         .withColumnRenamed("id", "hist_id")
       val candidates = banded.select(Bands.cols.map(col): _*)
         .join(idxBands, Bands.keys)
@@ -251,11 +259,14 @@ object Dedup {
     }
 
     /** Write both index tables of `table`: `Overwrite` builds the index,
-      * `Append` adds this batch to it (`buckets` must match the build). */
-    def writeIndex(table: String, buckets: Int, mode: SaveMode): Unit =
-      Seq(Bands -> banded, Shingles -> docs).foreach { case (t, f) =>
-        Bucketing.writeBucketed(f.select(t.cols.map(col): _*), t.of(table),
-          buckets, t.keys, mode)
+      * `Append` adds this batch to it (`buckets` must match the build),
+      * its band rows tagged with `generation`. */
+    def writeIndex(table: String, buckets: Int, mode: SaveMode,
+                   generation: Option[Long]): Unit =
+      Seq(Bands -> tagged(banded.select(Bands.cols.map(col): _*), generation),
+          Shingles -> docs.select(Shingles.cols.map(col): _*)).foreach {
+        case (t, f) =>
+          Bucketing.writeBucketed(f, t.of(table), buckets, t.keys, mode)
       }
 
     /** Band self-join: (id1, id2) sharing a band bucket, id1 < id2. With
@@ -351,21 +362,25 @@ object Dedup {
     * never appended (no identity ⇒ no duplicate relation). */
   def buildKeyIndexTable(df: DataFrame, key: Column, table: String,
                          buckets: Int = 32): Unit =
-    writeKeyIndex(df, key, table, buckets, SaveMode.Overwrite)
+    writeKeyIndex(df, key, table, buckets, SaveMode.Overwrite, None)
 
   def keyedDedupAgainstIndexTable(df: DataFrame, idCol: String, key: Column,
-                                  table: String): DataFrame =
-    dedupNewAgainstIndexByKey(df, idCol, key, df.sparkSession.table(table))
+                                  table: String,
+                                  generation: Option[Long] = None): DataFrame =
+    dedupNewAgainstIndexByKey(df, idCol, key,
+      visible(df.sparkSession.table(table), generation))
 
   def appendKeysToIndexTable(newRows: DataFrame, key: Column, table: String,
-                             buckets: Int = 32): Unit =
-    writeKeyIndex(newRows, key, table, buckets, SaveMode.Append)
+                             buckets: Int = 32,
+                             generation: Option[Long] = None): Unit =
+    writeKeyIndex(newRows, key, table, buckets, SaveMode.Append, generation)
 
   private def writeKeyIndex(df: DataFrame, key: Column, table: String,
-                            buckets: Int, mode: SaveMode): Unit =
-    Bucketing.writeBucketed(
+                            buckets: Int, mode: SaveMode,
+                            generation: Option[Long]): Unit =
+    Bucketing.writeBucketed(tagged(
       df.select(key.as("fp")).filter(col("fp").isNotNull).distinct(),
-      table, buckets, Seq("fp"), mode)
+      generation), table, buckets, Seq("fp"), mode)
 
   /** `base`, suffixed with underscores until it collides with nothing in
     * `cols` — temp-column hygiene for operators that decorate arbitrary
@@ -1415,7 +1430,7 @@ object Dedup {
                               hashedAnchors: Boolean = true,
                               buckets: Int = 32): Unit =
     writeSpanGramIndex(df, idCol, textCol, table, minMatch, hashedAnchors,
-      buckets, SaveMode.Overwrite)
+      buckets, SaveMode.Overwrite, None)
 
   /** Append a processed batch's grams to the span index. Replayed appends
     * are harmless (duplicate fp rows only widen the semi-join's match set
@@ -1425,17 +1440,19 @@ object Dedup {
                                  textCol: String, table: String,
                                  minMatch: Int = 8,
                                  hashedAnchors: Boolean = true,
-                                 buckets: Int = 32): Unit =
+                                 buckets: Int = 32,
+                                 generation: Option[Long] = None): Unit =
     writeSpanGramIndex(newDocs, idCol, textCol, table, minMatch,
-      hashedAnchors, buckets, SaveMode.Append)
+      hashedAnchors, buckets, SaveMode.Append, generation)
 
   private def writeSpanGramIndex(df: DataFrame, idCol: String,
                                  textCol: String, table: String,
                                  minMatch: Int, hashedAnchors: Boolean,
-                                 buckets: Int, mode: SaveMode): Unit =
-    Bucketing.writeBucketed(
+                                 buckets: Int, mode: SaveMode,
+                                 generation: Option[Long]): Unit =
+    Bucketing.writeBucketed(tagged(
       spanGrams(df, idCol, textCol, minMatch, hashedAnchors)
-        .select(col("__gram").as("fp")).distinct(),
+        .select(col("__gram").as("fp")).distinct(), generation),
       table, buckets, Seq("fp"), mode)
 
   /** [[removeDuplicateSpans]] for one ingestion batch against the
@@ -1446,14 +1463,16 @@ object Dedup {
     * (fresh grams) run against the bucketed index with no Exchange on the
     * index side, so per-batch cost stays O(batch · L) at any history
     * size. Output contract matches [[removeDuplicateSpans]], restricted
-    * to the batch's docs. */
+    * to the batch's docs; history is the index rows visible to
+    * `generation`. */
   def spanDedupAgainstIndexTable(batch: DataFrame, idCol: String,
                                  textCol: String, table: String,
                                  minMatch: Int = 8,
-                                 hashedAnchors: Boolean = true): DataFrame = {
+                                 hashedAnchors: Boolean = true,
+                                 generation: Option[Long] = None): DataFrame = {
     require(minMatch >= 2, s"minMatch must be >= 2: $minMatch")
     val grams = spanGrams(batch, idCol, textCol, minMatch, hashedAnchors)
-    val idx = batch.sparkSession.table(table)
+    val idx = visible(batch.sparkSession.table(table), generation)
       .withColumnRenamed("fp", "__gram")
     val hist = grams.join(idx, Seq("__gram"), "left_semi")
       .select(col(idCol), col("__pos"))

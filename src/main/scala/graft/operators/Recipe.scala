@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.util.SparkUtils.withJobDescription
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -53,18 +54,6 @@ import org.apache.spark.sql.functions._
   * (idCol, sourceCol, n_tokens, split, truncated, n_tokens_kept, shard).
   */
 object Recipe {
-
-  /** Label the jobs an eager materialization runs (guide §1.5): stage
-    * attribution in the UI and in GateProf, at zero plan cost. Job
-    * descriptions are thread-local; the previous value is restored so a
-    * caller's own label survives. */
-  private def labeled[T](spark: org.apache.spark.sql.SparkSession,
-                         tag: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val old = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"recipe: $tag")
-    try body finally sc.setJobDescription(old)
-  }
 
   def curate(docs: DataFrame, idCol: String, sourceCol: String,
              textCol: String,
@@ -238,6 +227,7 @@ object Recipe {
       .unionByName(drop(corpus, decon1, "contaminated"))
       .unionByName(drop(decon1, decon, "semantic"))
       .unionByName(drop(decon, mixed, "mix_budget"))
+    // audit stays lazy: a caller that discards the ledger pays nothing
     (survivors, audit)
   }
 
@@ -290,11 +280,10 @@ object Recipe {
     * all prior batches instead of re-scanning history ([[Dedup
     * .exactDedupAgainstIndexTable]], [[Dedup
     * .minhashDedupAgainstIndexTable]] with the source in the band salt,
-    * [[Dedup.crossNgramJaccardAgainstIndexTable]]), and — when
-    * `appendIndexes` — appends its own survivors so the NEXT batch
-    * resumes where this one ended. Per-batch cost is O(batch), never
-    * O(history): the index sides of every anti-join are bucketed and
-    * exchange-free.
+    * [[Dedup.crossNgramJaccardAgainstIndexTable]]), then appends its own
+    * survivors so the NEXT batch resumes where this one ended. Per-batch
+    * cost is O(batch), never O(history): the index sides of every
+    * anti-join are bucketed and exchange-free.
     *
     * Stage semantics per batch (create the tables once with
     * [[initRecipeIndexes]]; batch 1 against empty indexes behaves like
@@ -332,11 +321,17 @@ object Recipe {
     *                 (a daily delivery is its own shard set — tag
     *                 outputs with a batch id downstream).
     *
+    * `generation` is the caller's batch counter, starting at 1:
+    * the exact and near stages read only index rows of earlier
+    * generations, and the appends write this one, so re-running a batch
+    * whose appends already ran returns the same survivors and audit. The
+    * benchmark n-gram index needs no generation: corpus docs are checked
+    * against this batch's own benchmark docs anyway. Without a
+    * generation, the stages read every row and the appends write history.
+    *
     * Returns (survivors, audit) with the same schemas and stage names
-    * as [[curateWithAudit]]. Every index-reading decision is
-    * materialized (stage-boundary localCheckpoints) BEFORE the index
-    * appends run, so evaluating either returned frame after the
-    * appends never sees the batch's own index rows. */
+    * as [[curateWithAudit]]. Survivors are materialized; the audit is a
+    * lazy derivation of materialized stage boundaries and `batch`. */
   def curateIncremental(batch: DataFrame, idCol: String, sourceCol: String,
              textCol: String,
              benchmarkSource: String,
@@ -359,53 +354,8 @@ object Recipe {
              splitSalt: String = "recipesplit",
              headTokens: Int = 20, tailTokens: Int = 10,
              shardBudget: Long = 2000L,
-             appendIndexes: Boolean = true,
+             generation: Option[Long] = None,
              buckets: Int = 8): (DataFrame, DataFrame) = {
-    val (survivors, audit, append) = curateIncrementalStaged(batch, idCol,
-      sourceCol, textCol, benchmarkSource, fingerprintTable, minhashTable,
-      benchNgramTable, batchEmb, semanticEval, semanticVecCol, semanticK,
-      semanticMinCosine, semanticMinMargin, minTokens, maxTokens,
-      nearThreshold, contaminationThreshold, tau, budgetDocs, familySize,
-      splits, splitSalt, headTokens, tailTokens, shardBudget, buckets)
-    if (appendIndexes) append()
-    (survivors, audit)
-  }
-
-  /** [[curateIncremental]] with the index appends returned as a closure
-    * instead of executed — the form a STREAMING caller needs: the
-    * documented crash-replay discipline of the incremental runners
-    * ([[graft.streaming.StreamRunner]]) is sink-commit BEFORE
-    * index-append (appending first would make a replayed batch
-    * anti-join its own rows away and LOSE them), and only the caller
-    * knows when its sink committed. Survivors are fully materialized;
-    * the audit is a lazy derivation of materialized stage boundaries
-    * plus the caller's input frame (never an index table), so both are
-    * safe to evaluate after `append`, which itself is idempotent-
-    * replayable (duplicate index rows are harmless in all three
-    * indexes). */
-  def curateIncrementalStaged(batch: DataFrame, idCol: String,
-             sourceCol: String, textCol: String,
-             benchmarkSource: String,
-             fingerprintTable: String,
-             minhashTable: String,
-             benchNgramTable: String,
-             batchEmb: Option[DataFrame] = None,
-             semanticEval: Option[DataFrame] = None,
-             semanticVecCol: String = "embedding",
-             semanticK: Int = 8,
-             semanticMinCosine: Double = 0.9,
-             semanticMinMargin: Double = 0.2,
-             minTokens: Long = 35L, maxTokens: Long = 100L,
-             nearThreshold: Double = 0.85,
-             contaminationThreshold: Double = 0.7,
-             tau: Double = 0.5, budgetDocs: Long = 300L,
-             familySize: Long = 50L,
-             splits: Seq[(String, Double)] =
-               Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
-             splitSalt: String = "recipesplit",
-             headTokens: Int = 20, tailTokens: Int = 10,
-             shardBudget: Long = 2000L,
-             buckets: Int = 8): (DataFrame, DataFrame, () => Unit) = {
     require(minTokens >= 1 && maxTokens >= minTokens,
       s"need 1 <= minTokens <= maxTokens, got [$minTokens, $maxTokens]")
     require(familySize >= 1, s"familySize must be >= 1, got $familySize")
@@ -415,7 +365,7 @@ object Recipe {
     val session = batch.sparkSession
 
     // 1+2. normalize + quality cut (identical to the batch form)
-    val qual = labeled(session, "qual ckpt")(batch
+    val qual = withJobDescription(session, "recipe: qual ckpt")(batch
       .withColumn("__t", TextFunctions.stripHtml(col(textCol)))
       .withColumn("n_tokens",
         TextFunctions.tokenCount(col("__t")).cast("long"))
@@ -424,29 +374,30 @@ object Recipe {
       .localCheckpoint())
 
     // 3. exact dedup: in-batch first occurrence + vs-history anti-join
-    val exact = labeled(session, "exact ckpt")(
+    val exact = withJobDescription(session, "recipe: exact ckpt")(
       Dedup.exactDedupAgainstIndexTable(qual, idCol, "__t",
-        fingerprintTable).localCheckpoint())
+        fingerprintTable, generation).localCheckpoint())
 
     // 4. near dedup WITHIN source, vs history then in-batch. The batch
     // is shingled and MinHash-signed exactly ONCE (the streaming
     // runners' one-signing discipline): the vs-history join, the
-    // in-batch pair pass AND the deferred index append below all reuse
-    // this signing, materialized.
+    // in-batch pair pass AND the index append below all reuse this
+    // signing, materialized.
     val signed = Dedup.SignedBatch.sign(exact, idCol, "__t",
       partitionCols = Seq(sourceCol),
-      materialize = (stage, f) =>
-        labeled(session, s"$stage ckpt")(f.localCheckpoint()))
-    val vsHist = signed.survivorsVsIndex(minhashTable, nearThreshold)
+      materialize = (stage, f) => withJobDescription(session,
+        s"recipe: $stage ckpt")(f.localCheckpoint()))
+    val vsHist = signed.survivorsVsIndex(minhashTable, nearThreshold,
+      generation)
     val inBatchDrop = signed.dupPairs(nearThreshold)
       .select(col("id2").as(idCol)).distinct()
-    val near = labeled(session, "near ckpt")(
+    val near = withJobDescription(session, "recipe: near ckpt")(
       vsHist.join(inBatchDrop, Seq(idCol), "left_anti")
         .localCheckpoint())
 
     // 5a. verbatim decontamination vs benchmark history ∪ this batch's
-    // benchmark docs (checked BEFORE the index append, so the union is
-    // explicit rather than a read-after-write)
+    // benchmark docs (the union is explicit, so the answer is the same
+    // whether or not this batch's own benchmark docs are in the index)
     val bench = near.filter(col(sourceCol) === benchmarkSource)
     val corpus = near.filter(col(sourceCol) =!= benchmarkSource)
     val contaminated = Dedup.crossNgramJaccardAgainstIndexTable(corpus,
@@ -457,7 +408,7 @@ object Recipe {
           "__t", shingleSize = 3, threshold = contaminationThreshold)
         .select(col("corpus_id").as(idCol)))
       .distinct()
-    val decon1 = labeled(session, "decon ckpt")(
+    val decon1 = withJobDescription(session, "recipe: decon ckpt")(
       corpus.join(contaminated, Seq(idCol), "left_anti")
         .localCheckpoint())
 
@@ -470,7 +421,7 @@ object Recipe {
             idCol, semanticVecCol, k = semanticK,
             minCosine = semanticMinCosine, minMargin = semanticMinMargin)
           .select(col("corpus_id").as(idCol)).distinct()
-        labeled(session, "semantic ckpt")(
+        withJobDescription(session, "recipe: semantic ckpt")(
           decon1.join(flagged, Seq(idCol), "left_anti").localCheckpoint())
       case _ => decon1
     }
@@ -504,13 +455,39 @@ object Recipe {
     // 8. pack + shard (per batch)
     val packed = Packing.truncateHeadTail(split, "__t",
       headTokens = headTokens, tailTokens = tailTokens)
-    val survivors = labeled(session, "pack+shard ckpt")(
+    val survivors = withJobDescription(session, "recipe: pack+shard ckpt")(
       Ranking.shardByCostBudget(packed,
           Seq(Sampling.knuthHash32(col(idCol)), col(idCol)),
           "n_tokens_kept", budget = shardBudget)
         .select(col(idCol), col(sourceCol), col("n_tokens"), col("split"),
           col("truncated"), col("n_tokens_kept"), col("shard"))
         .localCheckpoint())
+
+    // the three appends write three INDEPENDENT tables from already-
+    // materialized frames: submit them from a small pool so the next
+    // append's tasks back-fill executors freed by the previous one's
+    // tail — serial, each small write paid its full fixed cost end to
+    // end. Any failure fails the whole call.
+    val work: Seq[() => Unit] = Seq(
+      () => withJobDescription(session, "recipe: append fp")(
+        Dedup.appendToFingerprintIndexTable(exact, "__t",
+          fingerprintTable, buckets, generation)),
+      () => withJobDescription(session, "recipe: append minhash")(
+        // the stage-4 signing restricted to the near survivors, not a
+        // re-signing of the survivors' raw text
+        signed.restrictTo(near).writeIndex(minhashTable, buckets,
+          org.apache.spark.sql.SaveMode.Append, generation)),
+      () => withJobDescription(session, "recipe: append bench ngram")(
+        Dedup.appendToNgramInvertedIndexTable(bench, idCol, "__t",
+          benchNgramTable, shingleSize = 3, buckets = buckets)))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    try scala.concurrent.Await.result(
+      scala.concurrent.Future.traverse(work)(f =>
+        scala.concurrent.Future(f())),
+      scala.concurrent.duration.Duration.Inf)
+    finally pool.shutdown()
 
     def ids(f: DataFrame) = f.select(col(idCol), col(sourceCol))
     def drop(from: DataFrame, kept: DataFrame, stage: String) =
@@ -523,46 +500,7 @@ object Recipe {
       .unionByName(drop(corpus, decon1, "contaminated"))
       .unionByName(drop(decon1, decon, "semantic"))
       .unionByName(drop(decon, mixed, "mix_budget"))
-    // audit stays LAZY on purpose: every operand above is either a
-    // materialized stage boundary or the caller's own input frame —
-    // none reads an index table — so evaluating it after the appends is
-    // safe, and a caller that discards the ledger (a sink that only
-    // wants survivors) pays nothing for it.
-
-    // appends run only AFTER every decision frame is materialized: the
-    // batch's own rows must never be in the index its own decisions
-    // read. bench is a filter over the checkpointed `near`, so the
-    // closure stays valid however late the caller invokes it.
-    val append = () => {
-      // the three appends write three INDEPENDENT tables from already-
-      // materialized frames: submit them from a small pool so the next
-      // append's tasks back-fill executors freed by the previous one's
-      // tail (guide-style job overlap) — serial, each small write paid
-      // its full fixed cost end to end. Order among them never
-      // mattered (the sink-before-append discipline orders the GROUP,
-      // not its members); any failure still fails the whole append.
-      val work: Seq[() => Unit] = Seq(
-        () => labeled(session, "append fp")(
-          Dedup.appendToFingerprintIndexTable(exact, "__t",
-            fingerprintTable, buckets)),
-        () => labeled(session, "append minhash")(
-          // the stage-4 signing restricted to the near survivors, not a
-          // re-signing of the survivors' raw text
-          signed.restrictTo(near).writeIndex(minhashTable, buckets,
-            org.apache.spark.sql.SaveMode.Append)),
-        () => labeled(session, "append bench ngram")(
-          Dedup.appendToNgramInvertedIndexTable(bench, idCol, "__t",
-            benchNgramTable, shingleSize = 3, buckets = buckets)))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.traverse(work)(f =>
-          scala.concurrent.Future(f())),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-      ()
-    }
-    (survivors, audit, append)
+    // audit stays lazy: a caller that discards the ledger pays nothing
+    (survivors, audit)
   }
 }

@@ -1,9 +1,11 @@
 package graft.streaming
 
 import graft.filedf.FileFormat
+import graft.functions.TextFunctions
+import graft.operators.Dedup
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming extension.
@@ -419,58 +421,81 @@ object StreamRunner {
     else Some(spark.read.parquet(versions.maxBy(_._1)._2.toString))
   }
 
+  /** The one body of the incremental dedup runners below. Per
+    * micro-batch: `dedup(batch, generation)` decides the survivors
+    * against the index rows of EARLIER generations, materializes them and
+    * appends the batch's own rows under `generation`; then `sink` writes
+    * the survivors; then the committed-batch ledger in `store` records
+    * the batch, so a re-delivered batch is skipped
+    * ([[runAvailableNowForeachBatchExactlyOnce]]).
+    *
+    * A micro-batch's generation is its batch id + 1: generation
+    * [[graft.operators.Dedup.HistoryGen]] is the history the build
+    * functions write, visible to every batch. A batch never reads its own
+    * generation, so a replay computes the same survivors whether or not
+    * its append ran, and the order of the three steps no longer decides
+    * correctness:
+    *  - a crash anywhere before the ledger write re-delivers the batch
+    *    under the same id; a batch-id-keyed overwrite sink then rewrites
+    *    the same output, so every survivor lands exactly once;
+    *  - an append sink keeps one duplicate window, a crash between sink
+    *    and ledger — the window every ledger-protected runner has;
+    *  - a document re-delivered in a LATER batch is still dropped, since
+    *    that batch reads every earlier generation.
+    * A replayed append rewrites rows under the same generation: duplicate
+    * index rows are harmless and compaction's `distinct` collapses them.
+    * Survivors are still materialized before the append, because the
+    * sink and the append both consume them.
+    *
+    * The generations are one query's batch ids, so an index that takes
+    * these appends belongs to one query (one checkpoint): rows a second
+    * query appends under its own batch ids are invisible to this query's
+    * batches with ids at or below theirs. History goes in through the
+    * build functions, or appends without a generation. */
+  private def runIndexed[A](stream: DataFrame, checkpoint: String,
+                            store: graft.core.HwmStore, ledgerName: String)
+                           (dedup: (DataFrame, Option[Long]) => A)
+                           (sink: (A, Long) => Unit): Unit =
+    runAvailableNowForeachBatchExactlyOnce(stream, checkpoint, store,
+        ledgerName) { (batch, id) =>
+      sink(dedup(batch, Some(id + 1)), id)
+    }
+
+  /** Survivors of `batch` vs the key index, with their keys appended. */
+  private def keyedStep(batch: DataFrame, idCol: String, key: Column,
+                        indexTable: String, indexBuckets: Int,
+                        generation: Option[Long]): DataFrame = {
+    val survivors = Dedup.keyedDedupAgainstIndexTable(batch, idCol, key,
+      indexTable, generation).localCheckpoint()
+    Dedup.appendKeysToIndexTable(survivors, key, indexTable, indexBuckets,
+      generation)
+    survivors
+  }
+
   /** Continuous dedup-on-ingest — the operator a training pipeline
     * actually runs: each micro-batch is deduplicated against the
     * PERSISTED bucketed fingerprint index
     * ([[graft.operators.Dedup.exactDedupAgainstIndexTable]] — the index
-    * side of the anti-join never shuffles), the survivors go to `sink`,
-    * and their fingerprints are appended to the index so the NEXT batch
-    * (and the next run) dedups against them. Replay-protected by the
-    * committed-batch ledger in `store`: a re-delivered micro-batch is
-    * skipped before it can re-write the sink or re-append fps. The
-    * ledger's one open window (see
-    * [[runAvailableNowForeachBatchExactlyOnce]]): a crash AFTER
-    * `sink(survivors)` returns but BEFORE the ledger records the batch
-    * replays that one batch into the sink — exactly-once output therefore
-    * additionally requires the sink itself to be idempotent (write to a
-    * batch-id-keyed location so a replay overwrites, or use a
-    * transactional sink); the INDEX stays correct either way, since
-    * re-appended fps are harmless duplicates. The same caveat applies to
-    * [[runIncrementalNearDedup]].
-    *
-    * Ordering inside a batch: survivors are materialized (lineage
-    * truncated) BEFORE the sink write and the index append — a lazily
-    * recomputed survivor frame would re-read the index it just mutated
-    * and drop its own rows. Sink commits before the fp append: a crash
-    * between the two re-delivers the batch, the ledger skip is not yet
-    * recorded, and reprocessing re-appends the fps — duplicate fps in the
-    * index are harmless (it is an existence set), whereas appending fps
-    * before the sink commit would make a replayed batch anti-join its own
-    * rows away and LOSE them. */
+    * side of the anti-join never shuffles), the survivors' fingerprints
+    * are appended to the index so the NEXT batch (and the next run)
+    * dedups against them, and the survivors go to `sink`. Replay
+    * semantics: [[runIndexed]]. */
   def runIncrementalDedup(stream: DataFrame, idCol: String, textCol: String,
                           indexTable: String, checkpoint: String,
                           store: graft.core.HwmStore, ledgerName: String,
                           indexBuckets: Int = 32)
                          (sink: (DataFrame, Long) => Unit): Unit =
-    runAvailableNowForeachBatchExactlyOnce(stream, checkpoint, store,
-        ledgerName) { (batch, id) =>
-      val survivors = graft.operators.Dedup
-        .exactDedupAgainstIndexTable(batch, idCol, textCol, indexTable)
-        .localCheckpoint()
-      sink(survivors, id)
-      graft.operators.Dedup.appendToFingerprintIndexTable(
-        survivors, textCol, indexTable, indexBuckets)
-    }
+    runIndexed(stream, checkpoint, store, ledgerName)(keyedStep(_, idCol,
+      TextFunctions.fingerprint(col(textCol)), indexTable, indexBuckets, _))(sink)
 
   /** Key-generic [[runIncrementalDedup]]: each micro-batch first runs
     * `prepare` (e.g. decode payloads into a perceptual hash column —
     * anything that appends the identity column), then dedups on
-    * `keyCol` against the bucketed key index, sinks survivors, and
-    * appends their keys. This is how IMAGE dedup-on-ingest composes
-    * from parts: prepare = [[graft.operators.Multimodal
-    * .perceptualHash64]], key = the 8-byte dHash — same exactly-once
-    * ledger, same materialize-before-mutate ordering, same O(batch)
-    * cost per batch as the text path. Rows whose key is NULL
+    * `keyCol` against the bucketed key index, appends the survivors'
+    * keys and sinks the survivors. This is how IMAGE dedup-on-ingest
+    * composes from parts: prepare = [[graft.operators.Multimodal
+    * .perceptualHash64]], key = the 8-byte dHash — same body, same
+    * O(batch) cost per batch as the text path. Rows whose key is NULL
     * (undecodable media) sink unconditionally and never index. */
   def runIncrementalKeyedDedup(stream: DataFrame, idCol: String,
                                prepare: DataFrame => DataFrame,
@@ -480,30 +505,20 @@ object StreamRunner {
                                ledgerName: String,
                                indexBuckets: Int = 32)
                               (sink: (DataFrame, Long) => Unit): Unit =
-    runAvailableNowForeachBatchExactlyOnce(stream, checkpoint, store,
-        ledgerName) { (batch, id) =>
-      val survivors = graft.operators.Dedup
-        .keyedDedupAgainstIndexTable(prepare(batch), idCol,
-          org.apache.spark.sql.functions.col(keyCol), indexTable)
-        .localCheckpoint()
-      sink(survivors, id)
-      graft.operators.Dedup.appendKeysToIndexTable(survivors,
-        org.apache.spark.sql.functions.col(keyCol), indexTable, indexBuckets)
-    }
+    runIndexed(stream, checkpoint, store, ledgerName)((batch, gen) =>
+      keyedStep(prepare(batch), idCol, col(keyCol), indexTable,
+        indexBuckets, gen))(sink)
 
   /** [[runIncrementalDedup]]'s SUB-document sibling: each micro-batch is
     * span-deduplicated against the persisted anchor-gram index
     * ([[graft.operators.Dedup.spanDedupAgainstIndexTable]] — history
     * grams cover outright, never-seen grams arbitrate within the batch,
-    * index side unshuffled), the CLEANED rows go to `sink`, and the
-    * batch's grams append so later batches (and runs) cut re-ingested
-    * spans. The append is the PRE-cut batch: the index means "content
-    * ever ingested", which keeps replayed appends idempotent (duplicate
-    * fp rows are harmless) and is deterministic under crash-replay —
-    * appending post-cut survivors instead would make the index depend on
-    * exactly which earlier batches were committed before the crash. Same
-    * ledger exactly-once contract and the same materialize-before-mutate
-    * and sink-before-append ordering as the exact variant. */
+    * index side unshuffled), the batch's grams append so later batches
+    * (and runs) cut re-ingested spans, and the CLEANED rows go to `sink`.
+    * The append is the PRE-cut batch: the index means "content ever
+    * ingested" — appending post-cut survivors instead would make the
+    * index depend on which earlier batches were committed before a
+    * crash. */
   def runIncrementalSpanDedup(stream: DataFrame, idCol: String,
                               textCol: String, indexTable: String,
                               checkpoint: String,
@@ -512,16 +527,13 @@ object StreamRunner {
                               hashedAnchors: Boolean = true,
                               indexBuckets: Int = 32)
                              (sink: (DataFrame, Long) => Unit): Unit =
-    runAvailableNowForeachBatchExactlyOnce(stream, checkpoint, store,
-        ledgerName) { (batch, id) =>
-      val cleaned = graft.operators.Dedup
-        .spanDedupAgainstIndexTable(batch, idCol, textCol, indexTable,
-          minMatch, hashedAnchors)
-        .localCheckpoint()
-      sink(cleaned, id)
-      graft.operators.Dedup.appendToSpanGramIndexTable(batch, idCol,
-        textCol, indexTable, minMatch, hashedAnchors, indexBuckets)
-    }
+    runIndexed(stream, checkpoint, store, ledgerName) { (batch, gen) =>
+      val cleaned = Dedup.spanDedupAgainstIndexTable(batch, idCol, textCol,
+        indexTable, minMatch, hashedAnchors, gen).localCheckpoint()
+      Dedup.appendToSpanGramIndexTable(batch, idCol, textCol, indexTable,
+        minMatch, hashedAnchors, indexBuckets, gen)
+      cleaned
+    }(sink)
 
   /** [[runIncrementalDedup]]'s NEAR-dup sibling: each micro-batch is
     * near-deduplicated against the persisted MinHash band index
@@ -533,12 +545,8 @@ object StreamRunner {
     * first-occurrence rule without per-batch component iteration).
     * Without the in-batch pass both copies of a pair arriving in ONE
     * batch would sink and be appended, escaping dedup permanently.
-    * Survivors go to `sink`, then their bands + shingle sets append so
-    * later batches (and runs) drop near-copies of them. Same
-    * materialize-before-mutate and sink-before-append ordering as the
-    * exact variant — a replayed append only adds redundant candidate
-    * rows, which verification collapses ([[graft.operators.Dedup
-    * .appendToMinHashIndexTable]] documents the idempotency contract).
+    * The survivors' bands + shingle sets append so later batches (and
+    * runs) drop near-copies of them, and the survivors go to `sink`.
     * Run BOTH: exact dedup first (cheap, 8-byte keys), then this for the
     * near-misses exact fingerprints cannot see. */
   def runIncrementalNearDedup(stream: DataFrame, idCol: String,
@@ -548,18 +556,16 @@ object StreamRunner {
                               threshold: Double = 0.8,
                               indexBuckets: Int = 32)
                              (sink: (DataFrame, Long) => Unit): Unit =
-    runAvailableNowForeachBatchExactlyOnce(stream, checkpoint, store,
-        ledgerName) { (batch, id) =>
-      import graft.operators.Dedup.SignedBatch
+    runIndexed(stream, checkpoint, store, ledgerName) { (batch, gen) =>
       // the batch is shingled and MinHash-signed exactly ONCE and
       // materialized: the vs-history join, the in-batch pair pass and the
       // index append below all reuse that one signing
-      val signed = SignedBatch.sign(batch, idCol, textCol,
+      val signed = Dedup.SignedBatch.sign(batch, idCol, textCol,
         materialize = (_, f) => f.localCheckpoint())
       // localCheckpoint: vsIndex feeds TWO consumers (the survivor frame
       // and the in-batch restriction) — without materialization the
       // expensive index-vs-batch LSH join would execute twice per batch
-      val vsIndex = signed.survivorsVsIndex(indexTable, threshold)
+      val vsIndex = signed.survivorsVsIndex(indexTable, threshold, gen)
         .localCheckpoint()
       val inBatchDups = signed.restrictTo(vsIndex).dupPairs(threshold)
         .select(col("id2").as(idCol))
@@ -567,32 +573,24 @@ object StreamRunner {
       val survivors = vsIndex
         .join(inBatchDups, Seq(idCol), "left_anti")
         .localCheckpoint()
-      sink(survivors, id)
       signed.restrictTo(survivors).writeIndex(indexTable,
-        indexBuckets, SaveMode.Append)
-    }
+        indexBuckets, SaveMode.Append, gen)
+      survivors
+    }(sink)
 
   /** The WHOLE curation recipe on ingest — the composition a daily
     * 100 TB pipeline actually schedules, as one streaming query: every
     * micro-batch flows through the eight-stage
-    * [[graft.operators.Recipe.curateIncrementalStaged]] chain
-    * (normalize → quality band → exact dedup vs the fingerprint index →
-    * within-source near dedup vs the MinHash index → benchmark n-gram +
-    * optional-elsewhere semantic decontamination → per-batch temperature
-    * mix → batch-stable family split → pack + shard), survivors AND the
-    * per-document drop ledger go to `sink`, and only then do the
-    * batch's survivors append to the three indexes so the next
-    * micro-batch (and the next run) resumes against them.
-    *
-    * Replay-protected by the committed-batch ledger in `store`. The one
-    * open window (sink done, ledger not yet recorded) is the same
-    * at-least-once corner every incremental runner here documents —
-    * with the recipe's sink-before-append ordering a replay in that
-    * window recomputes against the UNCHANGED indexes and re-delivers
-    * the identical batch (idempotent batch-id-keyed sinks absorb it);
-    * appending before the sink would instead make the replayed batch
-    * anti-join its own rows away and lose them, which is why the
-    * staged form exists. */
+    * [[graft.operators.Recipe.curateIncremental]] chain (normalize →
+    * quality band → exact dedup vs the fingerprint index → within-source
+    * near dedup vs the MinHash index → benchmark n-gram + optional-
+    * elsewhere semantic decontamination → per-batch temperature mix →
+    * batch-stable family split → pack + shard), which appends the batch
+    * to the three indexes under its generation; then survivors AND the
+    * per-document drop ledger go to `sink`. Replay semantics:
+    * [[runIndexed]]; the benchmark n-gram index needs no generation,
+    * because the recipe already checks corpus docs against this batch's
+    * own benchmark docs, so a replay reaches the same answer. */
   def runIncrementalRecipe(stream: DataFrame, idCol: String,
                            sourceCol: String, textCol: String,
                            benchmarkSource: String,
@@ -614,22 +612,17 @@ object StreamRunner {
                            indexBuckets: Int = 8)
                           (sink: (DataFrame, DataFrame, Long) => Unit)
                           : Unit =
-    runAvailableNowForeachBatchExactlyOnce(stream, checkpoint, store,
-        ledgerName) { (batch, id) =>
-      val (survivors, audit, append) =
-        graft.operators.Recipe.curateIncrementalStaged(batch, idCol,
-          sourceCol, textCol, benchmarkSource, fingerprintTable,
-          minhashTable, benchNgramTable,
-          minTokens = minTokens, maxTokens = maxTokens,
-          nearThreshold = nearThreshold,
-          contaminationThreshold = contaminationThreshold,
-          tau = tau, budgetDocs = budgetDocs, familySize = familySize,
-          splits = splits, splitSalt = splitSalt,
-          headTokens = headTokens, tailTokens = tailTokens,
-          shardBudget = shardBudget, buckets = indexBuckets)
-      sink(survivors, audit, id)
-      append()
-    }
+    runIndexed(stream, checkpoint, store, ledgerName) { (batch, gen) =>
+      graft.operators.Recipe.curateIncremental(batch, idCol, sourceCol,
+        textCol, benchmarkSource, fingerprintTable, minhashTable,
+        benchNgramTable, minTokens = minTokens, maxTokens = maxTokens,
+        nearThreshold = nearThreshold,
+        contaminationThreshold = contaminationThreshold,
+        tau = tau, budgetDocs = budgetDocs, familySize = familySize,
+        splits = splits, splitSalt = splitSalt,
+        headTokens = headTokens, tailTokens = tailTokens,
+        shardBudget = shardBudget, generation = gen, buckets = indexBuckets)
+    } { case ((survivors, audit), id) => sink(survivors, audit, id) }
 
   /** Fellegi–Sunter record linkage ON INGEST — the entity-resolution
     * sibling of [[runIncrementalDedup]]: each micro-batch is blocked and
@@ -644,16 +637,15 @@ object StreamRunner {
     * auto-merged, so it keeps its own identity) — append to the
     * reference so later batches (and runs) link against them.
     *
-    * Same exactly-once ledger and sink-before-append ordering as the
-    * dedup family. The one open window (sink + append done, ledger not
+    * Same exactly-once ledger as the dedup family; the sink runs before
+    * the append. The one open window (sink + append done, ledger not
     * yet) re-appends byte-identical reference rows on replay, which the
     * candidate `distinct()` collapses — a replayed append cannot shift
     * any later decision (spec-pinned by a forged replay). Batch and
     * reference ids must be globally unique across the whole stream. */
   def runIncrementalLinkage(stream: DataFrame, idCol: String,
                             blockCol: String, attrCols: Seq[String],
-                            fields: Seq[(String, org.apache.spark.sql.Column,
-                              Double, Double)],
+                            fields: Seq[(String, Column, Double, Double)],
                             refTable: String, checkpoint: String,
                             store: graft.core.HwmStore, ledgerName: String,
                             upper: Double = 2.0, lower: Double = 0.0,
@@ -661,7 +653,6 @@ object StreamRunner {
                            (sink: (DataFrame, Long) => Unit): Unit =
     runAvailableNowForeachBatchExactlyOnce(stream, checkpoint, store,
         ledgerName) { (batch, id) =>
-      import org.apache.spark.sql.functions.col
       val spark = batch.sparkSession
       val decisions = graft.operators.Joins
         .linkAgainstReference(batch, spark.table(refTable), idCol,

@@ -32,6 +32,35 @@ class MetricsSkewSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
+  test("DbWriter.run counts only its own jobs while another thread writes") {
+    import graft.connections.{FileTableConnection, IfExists}
+    val root = tmpDir("metrics-scope")
+    val go = new java.util.concurrent.CountDownLatch(1)
+    @volatile var otherFailure: Option[Throwable] = None
+    // started BEFORE the measured call; its 1000-row write runs entirely
+    // inside the measured window (released by the measured write)
+    val other = new Thread(() =>
+      try {
+        go.await()
+        spark.range(1000).coalesce(1).write.parquet(s"$root/other")
+      } catch { case t: Throwable => otherFailure = Some(t) })
+    other.start()
+    val conn = new FileTableConnection(spark, root) {
+      override def writeDfToTarget(df: org.apache.spark.sql.DataFrame,
+                                   target: String, ifExists: IfExists,
+                                   options: Map[String, String]): Unit = {
+        super.writeDfToTarget(df, target, ifExists, options)
+        go.countDown()
+        other.join()
+      }
+    }
+    val metrics = graft.operators.DbWriter(conn, "mine")
+      .run(spark.range(10).toDF("id").coalesce(1))
+    assert(otherFailure.isEmpty, otherFailure)
+    assert(spark.read.parquet(s"$root/other").count() === 1000L)
+    assert(metrics.outputRows === 10L, metrics)
+  }
+
   test("saltedJoin: identical result to plain join, spread over salts") {
     import graft.operators.Joins
     // 10k rows all on key 1 (hot) + 100 spread keys, joined to a small dim

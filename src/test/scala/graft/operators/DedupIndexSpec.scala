@@ -306,15 +306,77 @@ class DedupIndexSpec extends SparkSpec {
       assert(ex.size === 1,
         s"bucketed index anti-join must shuffle only the batch, found: ${ex.map(_.nodeName)}")
       // sanity — the detector sees the second shuffle when the index is
-      // a plain (unbucketed) parquet directory
+      // a plain (unbucketed) parquet copy of the same rows
       val dir = java.nio.file.Files.createTempDirectory("fp_idx_plain").toString
-      Dedup.buildFingerprintIndex(hist, "text", dir)
-      val keptPlain = Dedup.exactDedupAgainstIndex(batch, "doc_id", "text", dir)
+      spark.table(table).write.mode("overwrite").parquet(dir)
+      spark.read.parquet(dir).createOrReplaceTempView("graft_fp_idx_plain")
+      val keptPlain = Dedup.exactDedupAgainstIndexTable(batch, "doc_id", "text",
+        "graft_fp_idx_plain")
       keptPlain.count()
       assert(exchanges(keptPlain.queryExecution.executedPlan).size === 2)
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.sql(s"DROP TABLE IF EXISTS $table")
+      spark.catalog.dropTempView("graft_fp_idx_plain")
+    }
+  }
+
+  test("generations: a dedup reads only the index rows of earlier " +
+       "generations, and its index side still never shuffles") {
+    val (fpT, mhT, gramT) = ("graft_gen_fp", "graft_gen_mh", "graft_gen_gram")
+    // doc 11 repeats history doc 1; doc 10 is new and is appended under
+    // generation 1, so only generations >= 2 (and no generation) see it
+    val batch = Seq((10L, "a fresh document about generation tags and replays"),
+      (11L, "history document one about rivers and banks")).toDF("doc_id", "text")
+    def ids(df: org.apache.spark.sql.DataFrame, table: String): Seq[Long] = {
+      val out = df.select($"doc_id").as[Long].collect().sorted.toSeq
+      val indexSide = exchanges(df.queryExecution.executedPlan).filter { e =>
+        val leaves = e.collectLeaves()
+        leaves.nonEmpty && leaves.forall(_.toString.contains(table))
+      }
+      assert(indexSide.isEmpty, s"$table side shuffles: $indexSide")
+      out
+    }
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      Dedup.buildFingerprintIndexTable(hist, "text", fpT, buckets = 4)
+      Dedup.appendToFingerprintIndexTable(batch, "text", fpT, buckets = 4,
+        generation = Some(1L))
+      def exact(g: Option[Long]) = ids(Dedup.exactDedupAgainstIndexTable(
+        batch, "doc_id", "text", fpT, g), fpT)
+      assert(exact(Some(1L)) === Seq(10L))
+      assert(exact(Some(2L)) === Nil)
+      assert(exact(None) === Nil)
+
+      Dedup.buildMinHashIndexTable(hist, "doc_id", "text", mhT, buckets = 4)
+      Dedup.appendToMinHashIndexTable(batch, "doc_id", "text", mhT,
+        buckets = 4, generation = Some(1L))
+      def near(g: Option[Long]) = ids(Dedup.minhashDedupAgainstIndexTable(
+        batch, "doc_id", "text", mhT, threshold = 0.7, generation = g),
+        s"${mhT}_bands")
+      assert(near(Some(1L)) === Seq(10L))
+      assert(near(Some(2L)) === Nil)
+      assert(near(None) === Nil)
+
+      Dedup.buildSpanGramIndexTable(hist, "doc_id", "text", gramT,
+        minMatch = 3, hashedAnchors = false, buckets = 4)
+      Dedup.appendToSpanGramIndexTable(batch, "doc_id", "text", gramT,
+        minMatch = 3, hashedAnchors = false, buckets = 4,
+        generation = Some(1L))
+      def intact(g: Option[Long]) = ids(Dedup.spanDedupAgainstIndexTable(
+        batch, "doc_id", "text", gramT, minMatch = 3, hashedAnchors = false,
+        generation = g).filter($"n_removed" === 0), gramT)
+      assert(intact(Some(1L)) === Seq(10L))
+      assert(intact(Some(2L)) === Nil)
+      assert(intact(None) === Nil)
+
+      assert(intercept[IllegalArgumentException](Dedup
+        .exactDedupAgainstIndexTable(batch, "doc_id", "text", fpT, Some(0L)))
+        .getMessage.contains("generation"))
+    } finally {
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      (Seq(fpT, gramT) ++ Dedup.SignedBatch.tables(mhT)).foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
 }

@@ -189,20 +189,23 @@ class DedupSpec extends SparkSpec {
   }
 
   test("incremental index: re-ingested history killed by index, batch dups in-batch") {
-    val idx = java.nio.file.Files.createTempDirectory("fp_idx").toString
-    Dedup.buildFingerprintIndex(docs.filter($"doc_id" <= 3), "text", idx)
-    val batch = Seq(
-      (10L, "THE QUICK   brown fox jumps over the lazy dog near the old river bank today"), // normalized dup of history 1
-      (11L, "genuinely new content appearing for the first time in this batch"),
-      (12L, "genuinely new content appearing for the first time in this batch"), // in-batch dup of 11
-      (13L, "short text") // not in the indexed half of history -> survives
-    ).toDF("doc_id", "text")
-    val kept = Dedup.exactDedupAgainstIndex(batch, "doc_id", "text", idx)
-      .select($"doc_id").as[Long].collect().sorted.toSeq
-    assert(kept === Seq(11L, 13L))
-    // the index stores one row per distinct normalized doc (1==2==norm 5,
-    // but 5 isn't indexed; ids 1,2 collapse; 3 distinct)
-    assert(spark.read.parquet(idx).count() === 2L)
+    val idx = "graft_fp_idx_pipeline"
+    Dedup.buildFingerprintIndexTable(docs.filter($"doc_id" <= 3), "text", idx,
+      buckets = 4)
+    try {
+      val batch = Seq(
+        (10L, "THE QUICK   brown fox jumps over the lazy dog near the old river bank today"), // normalized dup of history 1
+        (11L, "genuinely new content appearing for the first time in this batch"),
+        (12L, "genuinely new content appearing for the first time in this batch"), // in-batch dup of 11
+        (13L, "short text") // not in the indexed half of history -> survives
+      ).toDF("doc_id", "text")
+      val kept = Dedup.exactDedupAgainstIndexTable(batch, "doc_id", "text", idx)
+        .select($"doc_id").as[Long].collect().sorted.toSeq
+      assert(kept === Seq(11L, 13L))
+      // the index stores one row per distinct normalized doc (1==2==norm 5,
+      // but 5 isn't indexed; ids 1,2 collapse; 3 distinct)
+      assert(spark.table(idx).count() === 2L)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $idx")
   }
 
   test("ngramContainmentPairs: an excerpt scores 1.0 into its source " +

@@ -632,6 +632,137 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("incremental dedup runners: a batch replayed after its index append " +
+       "lands every survivor exactly once (exact, span, near, recipe)") {
+    import java.util.concurrent.atomic.AtomicBoolean
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    import graft.core.{Hwm, HwmStore, InMemoryHwmStore}
+    import graft.operators.{Dedup, Recipe}
+    type Sink = (DataFrame, Long) => Unit
+    // (stream, ledger store, checkpoint, sink of (doc_id, v) rows)
+    type Runner = (DataFrame, HwmStore, String, Sink) => Unit
+
+    // a ledger store whose first `set` throws: the query dies after the
+    // batch's sink and index append, before the ledger records the batch
+    def failFirstSet(): HwmStore = new HwmStore {
+      private val inner = new InMemoryHwmStore
+      private val armed = new AtomicBoolean(true)
+      def get(name: String): Option[Hwm] = inner.get(name)
+      def set(hwm: Hwm): Unit =
+        if (armed.getAndSet(false)) throw new IllegalStateException("ledger lost")
+        else inner.set(hwm)
+    }
+
+    // two mtime-ordered micro-batches; each fault kills batch 0 once, and
+    // a restart from the same checkpoint re-runs it under the same id into
+    // a batch-id-keyed overwrite sink
+    def check(name: String, batches: Seq[DataFrame], buildIndex: () => Unit,
+              run: Runner, expected: Seq[(Long, String)]): Unit = {
+      val src = tmpDir(s"replay-$name-src")
+      batches.zipWithIndex.foreach { case (rows, i) =>
+        rows.coalesce(1).write.mode("append").parquet(src)
+        FileStreamReader.stampBatchMtime(src, i, epochBaseSeconds = 100L)
+      }
+      val schema = batches.head.schema
+      Seq("ledger", "sink").foreach { fault =>
+        buildIndex()
+        val (ck, out) = (tmpDir(s"replay-$name-ck"), tmpDir(s"replay-$name-out"))
+        val store = if (fault == "ledger") failFirstSet() else new InMemoryHwmStore
+        val sinkArmed = new AtomicBoolean(fault == "sink")
+        val sink: Sink = { (df, id) =>
+          df.write.mode("overwrite").parquet(s"$out/b=$id")
+          if (sinkArmed.getAndSet(false))
+            throw new IllegalStateException("sink died after writing")
+        }
+        def go(): Unit = run(FileStreamReader.read(spark, Parquet(), src,
+          schema, maxFilesPerTrigger = Some(1)), store, ck, sink)
+        intercept[StreamingQueryException](go())
+        go()
+        val landed = spark.read.parquet(out).select($"doc_id", $"v")
+          .as[(Long, String)].collect().sorted.toSeq
+        assert(landed == expected, s"$name runner, $fault fault")
+      }
+    }
+    def kept(df: DataFrame) = df.select($"doc_id", lit("kept").as("v"))
+    val (fpT, gramT, mhT) =
+      ("graft_replay_fp", "graft_replay_gram", "graft_replay_mh")
+    val (rFp, rMh, rBn) =
+      ("graft_replay_rfp", "graft_replay_rmh", "graft_replay_rbn")
+    try {
+      check("exact",
+        Seq(Seq((10L, "history text alpha"), (11L, "fresh doc one"),
+            (12L, "fresh doc one"), (13L, "fresh doc two")),
+          Seq((20L, "fresh doc one"), // re-delivers batch-0 survivor 11
+            (21L, "fresh doc three"))).map(_.toDF("doc_id", "text")),
+        () => Dedup.buildFingerprintIndexTable(
+          Seq((1L, "history text alpha")).toDF("doc_id", "text"), "text",
+          fpT, buckets = 2),
+        (stream, store, ck, sink) => StreamRunner.runIncrementalDedup(stream,
+          "doc_id", "text", fpT, ck, store, "replay_fp", indexBuckets = 2) {
+          (s, id) => sink(kept(s), id) },
+        Seq(11L -> "kept", 13L -> "kept", 21L -> "kept"))
+
+      def doc(prefix: String): String =
+        (0 until 12).map(i => s"$prefix$i").mkString(" ")
+      check("span",
+        Seq(Seq((10L, doc("h")), (11L, doc("n"))),
+          Seq((20L, doc("n")), (21L, doc("z")))).map(_.toDF("doc_id", "text")),
+        () => Dedup.buildSpanGramIndexTable(
+          Seq((1L, doc("h"))).toDF("doc_id", "text"), "doc_id", "text",
+          gramT, minMatch = 8, hashedAnchors = false, buckets = 2),
+        (stream, store, ck, sink) => StreamRunner.runIncrementalSpanDedup(
+          stream, "doc_id", "text", gramT, ck, store, "replay_gram",
+          minMatch = 8, hashedAnchors = false, indexBuckets = 2) {
+          (c, id) => sink(c.select($"doc_id",
+            format_string("%d/%d", $"n_kept", $"n_removed").as("v")), id) },
+        Seq(10L -> "0/12", 11L -> "12/0", 20L -> "0/12", 21L -> "12/0"))
+
+      val fresh = "a totally fresh document with its own vocabulary and no " +
+        "overlap whatsoever here"
+      check("near",
+        Seq(Seq((10L, "the quick brown fox jumps over the lazy dog near the " +
+              "old river bank zz"), (11L, fresh), (12L, fresh + " qq")),
+          Seq((20L, fresh + " yy"), (21L, "yet another brand new piece of " +
+            "writing on an unrelated subject entirely now")))
+          .map(_.toDF("doc_id", "text")),
+        () => Dedup.buildMinHashIndexTable(Seq((1L, "the quick brown fox " +
+            "jumps over the lazy dog near the old river bank"))
+          .toDF("doc_id", "text"), "doc_id", "text", mhT, buckets = 2),
+        (stream, store, ck, sink) => StreamRunner.runIncrementalNearDedup(
+          stream, "doc_id", "text", mhT, ck, store, "replay_mh",
+          threshold = 0.7, indexBuckets = 2) { (s, id) => sink(kept(s), id) },
+        Seq(11L -> "kept", 21L -> "kept"))
+
+      def toks(i: Int): String = (0 until 40).map(j => s"w${i}_$j").mkString(" ")
+      check("recipe",
+        Seq(Seq((0L, "A", s"<p>${toks(0)}</p>"), (1L, "A", s"<p>${toks(1)}</p>"),
+            (14L, "B", s"<p>${toks(14)}</p>"),
+            (30L, "bench", s"<p>${toks(30)}</p>")),
+          Seq((100L, "A", s"<div><b>${toks(0)}</b></div>"),
+            (101L, "A", s"<p>${toks(1)} q</p>"),
+            (102L, "B", s"<p>${toks(1)} r</p>"),
+            (103L, "B", s"<p>${toks(30)} s</p>"),
+            (104L, "B", s"<p>${toks(104)}</p>")))
+          .map(_.toDF("doc_id", "source", "text")),
+        () => Recipe.initRecipeIndexes(spark, rFp, rMh, rBn, buckets = 2),
+        (stream, store, ck, sink) => StreamRunner.runIncrementalRecipe(stream,
+          "doc_id", "source", "text", benchmarkSource = "bench",
+          rFp, rMh, rBn, ck, store, "replay_recipe",
+          minTokens = 5L, maxTokens = 100L, budgetDocs = 100L,
+          familySize = 10L, shardBudget = 100L, indexBuckets = 2) {
+          (surv, audit, id) => sink(kept(surv).unionByName(
+            audit.select($"doc_id", $"stage".as("v"))), id) },
+        Seq(0L -> "kept", 1L -> "kept", 14L -> "kept", 30L -> "benchmark",
+          100L -> "exact_dup", 101L -> "near_dup", 102L -> "kept",
+          103L -> "contaminated", 104L -> "kept"))
+    } finally {
+      (Seq(fpT, gramT, rFp, rBn) ++ Dedup.SignedBatch.tables(mhT) ++
+        Dedup.SignedBatch.tables(rMh)).foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
   test("streaming linkage ingest: hand-computed verdicts, in-batch twins " +
        "resolve to the smaller id, non-links grow the reference, replay-safe") {
     // reference entities (blocked on blk); weights: nation (0.95,0.04) ->
