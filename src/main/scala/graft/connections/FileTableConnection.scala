@@ -63,15 +63,12 @@ class FileTableConnection(val spark: SparkSession,
   def writeDfToTarget(df: DataFrame, target: String, ifExists: IfExists,
                       options: Map[String, String]): Unit = {
     val path = tablePath(target)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      java.net.URI.create(root), spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(path))
     val mode = ifExists match {
       case IfExists.Append => "append"
       case IfExists.ReplaceEntireTable | IfExists.ReplaceOverlappingPartitions => "overwrite"
       case IfExists.Error => "error"
-      case IfExists.Ignore if exists => return
-      case IfExists.Ignore => "append"
+      // Spark skips the write when the path exists
+      case IfExists.Ignore => "ignore"
     }
     df.write.format(format).options(options).mode(mode).save(path)
     // the write may have changed the table's schema; drop the cached

@@ -114,7 +114,16 @@ sealed abstract class HwmStrategy(val store: HwmStore) extends Strategy {
     }
   }
 
-  def saveHwm(): Unit = synchronized { hwm.foreach(store.set) }
+  /** The HWM this strategy last saved. */
+  @volatile private var saved: Option[Hwm] = None
+
+  /** Save the bound HWM, unless it equals the one this strategy last
+    * saved: a downloader's own save followed by its scope's exit save,
+    * or a batch loop's last `advance` followed by the exit save, writes
+    * one record, not two. */
+  def saveHwm(): Unit = synchronized {
+    hwm.filterNot(saved.contains).foreach { h => store.set(h); saved = Some(h) }
+  }
 
   /** Lower window edge from the stored HWM — exclusive
     * (reference hwm_strategy.py:24-31). */

@@ -2,13 +2,11 @@ package graft.files
 
 import java.io.FileNotFoundException
 import java.nio.file.{Files, NoSuchFileException, Paths}
-import java.util.concurrent.Executors
 
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.util.{Failure, Success, Try}
+import scala.util.{Failure, Success}
 
 import graft.core.{FileListHwm, FileMTimeHwm, HwmStrategy, Strategy}
+import graft.util.WorkerPool
 
 /** Target-file-exists behavior (reference onetl/impl/file_exist_behavior.py). */
 sealed trait FileIfExists
@@ -34,20 +32,6 @@ final case class FileTransferResult(successful: Seq[String] = Nil,
   }
   def isEmpty: Boolean =
     successful.isEmpty && failed.isEmpty && skipped.isEmpty && missing.isEmpty
-}
-
-private object TransferPool {
-  /** Bounded pool per run (reference file_downloader.py:795-828 uses a
-    * ThreadPoolExecutor(workers)). */
-  def run[A, B](items: Seq[A], workers: Int)(f: A => B): Seq[Try[B]] = {
-    require(workers >= 1, "workers must be >= 1")
-    if (items.isEmpty) return Nil
-    val pool = Executors.newFixedThreadPool(math.min(workers, math.max(1, items.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try Await.result(
-      Future.traverse(items)(a => Future(Try(f(a)))), Duration.Inf)
-    finally pool.shutdown()
-  }
 }
 
 /** The per-file step of [[FileDownloader]], [[FileUploader]] and
@@ -79,7 +63,7 @@ private object TransferEngine {
       s"${targetRoot.stripSuffix("/")}/${e.path.stripPrefix(base).stripPrefix("/")}")
     (targetRoot +: targets.map(parent)).distinct.foreach(dest.mkdirs)
     val checkTarget = ifExists == FileIfExists.Error || ifExists == FileIfExists.Ignore
-    val outcomes = TransferPool.run(files.zip(targets), workers) { case (e, target) =>
+    val outcomes = WorkerPool.run(files.zip(targets), workers) { case (e, target) =>
       if (checkTarget && dest.exists(target)) {
         if (ifExists == FileIfExists.Ignore) ("skipped", e.path)
         else throw new IllegalStateException(s"target $target already exists")

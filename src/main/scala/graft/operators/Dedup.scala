@@ -223,13 +223,9 @@ object Dedup {
         .select(col("id"), col("hist_id")).dropDuplicates("id", "hist_id")
       val idxSh = spark.table(Shingles.of(table))
         .select(col("id").as("hist_id"), col("shingles").as("sh2"))
-      val dupIds = candidates
-        .join(docs.select(col("id"), col("shingles").as("sh1")), Seq("id"))
-        .join(idxSh, Seq("hist_id"))
-        .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
-        .withColumn("jaccard", round(col("inter") /
-          ((size(col("sh1")) + size(col("sh2"))).cast("double") - col("inter")), 6))
-        .filter(col("jaccard") >= threshold)
+      val dupIds = setJaccardAtLeast(candidates
+          .join(docs.select(col("id"), col("shingles").as("sh1")), Seq("id"))
+          .join(idxSh, Seq("hist_id")), threshold)
         .select(col("id")).distinct()
       batch.join(dupIds.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
     }
@@ -243,7 +239,8 @@ object Dedup {
           .withColumnRenamed("shingles", "sh1"), Seq("id1"))
         .join(shingleSets.withColumnRenamed("id", "id2")
           .withColumnRenamed("shingles", "sh2"), Seq("id2"))
-      verifyJaccard(candidates, threshold)
+      setJaccardAtLeast(candidates, threshold)
+        .select(col("id1"), col("id2"), col("jaccard"))
     }
 
     /** The number of LSH candidate pairs [[dupPairs]] would verify. */
@@ -465,13 +462,51 @@ object Dedup {
         rightN.cast("double") <= leftN / threshold
     else lit(true)
 
-  /** jaccard = |inter| / (n1 + n2 - |inter|), rounded and thresholded. */
-  private def jaccardFromCounts(grouped: DataFrame, threshold: Double,
-                                n1: String, n2: String): DataFrame =
-    grouped
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col(n1) + col(n2) - col("inter")).cast("double"), 6))
+  /** The Jaccard rule of every set-similarity path: `pairs` with
+    * jaccard = inter / (n1 + n2 − inter) over the shared count `inter`,
+    * rounded to 6 places, keeping jaccard ≥ `threshold`. */
+  private def jaccardAtLeast(pairs: DataFrame, threshold: Double,
+                             inter: Column, n1: Column, n2: Column): DataFrame = {
+    val i = inter.cast("double")
+    pairs.withColumn("jaccard", round(i / ((n1 + n2).cast("double") - i), 6))
       .filter(col("jaccard") >= threshold)
+  }
+
+  /** [[jaccardAtLeast]] of the shingle arrays `sh1` and `sh2`. */
+  private def setJaccardAtLeast(pairs: DataFrame, threshold: Double): DataFrame =
+    jaccardAtLeast(pairs, threshold,
+      size(array_intersect(col("sh1"), col("sh2"))), size(col("sh1")),
+      size(col("sh2")))
+
+  /** (id1, id2, n1, n2, inter) for every pair of `df`'s documents,
+    * id1 < id2, sharing `inter` distinct shingles: the inverted-index
+    * self-join, with sizes outside [[lengthBound]] pruned inside it. */
+  private def sharedShingleCounts(df: DataFrame, idCol: String,
+                                  textCol: String, shingleSize: Int,
+                                  threshold: Double): DataFrame = {
+    val inverted = invertedIndex(shingleDocs(df, idCol, textCol, shingleSize))
+    inverted.as("l")
+      .join(inverted.as("r"),
+        col("l.sh") === col("r.sh") && col("l.id") < col("r.id") &&
+          lengthBound(threshold, col("l.n_sh"), col("r.n_sh")))
+      .groupBy(col("l.id").as("id1"), col("r.id").as("id2"),
+        col("l.n_sh").as("n1"), col("r.n_sh").as("n2"))
+      .agg(count(lit(1)).as("inter"))
+  }
+
+  /** (bench_id, corpus_id, jaccard) of the inverted indexes `b`
+    * (benchmark side) and `c` (corpus side): the shingle join, with
+    * `inter` aggregating each pair's shared rows from `b`'s `sh`. */
+  private def crossJaccardPairs(b: DataFrame, c: DataFrame, threshold: Double,
+                                inter: Column => Column): DataFrame = {
+    val joined = b.join(c, b("sh") === c("sh") &&
+        lengthBound(threshold, b("n_sh"), c("n_sh")))
+      .groupBy(b("id").as("bench_id"), c("id").as("corpus_id"),
+        b("n_sh").as("nb"), c("n_sh").as("nc"))
+      .agg(inter(b("sh")).as("inter"))
+    jaccardAtLeast(joined, threshold, col("inter"), col("nb"), col("nc"))
+      .select(col("bench_id"), col("corpus_id"), col("jaccard"))
+  }
 
   /** Winnowing fingerprint selection (Schleimer, Wilkerson & Aiken,
     * SIGMOD 2003 — the MOSS algorithm): from each document's sequence of
@@ -623,16 +658,6 @@ object Dedup {
       .orderBy(col("src_a"), col("src_b"))
   }
 
-  private def verifyJaccard(pairs: DataFrame, threshold: Double): DataFrame = {
-    val inter = size(array_intersect(col("sh1"), col("sh2"))).cast("double")
-    val union = (size(col("sh1")) + size(col("sh2"))).cast("double") -
-      size(array_intersect(col("sh1"), col("sh2"))).cast("double")
-    pairs
-      .withColumn("jaccard", round(inter / union, 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id1"), col("id2"), col("jaccard"))
-  }
-
   /** EXACT n-gram Jaccard duplicate pairs via an inverted shingle index:
     * explode distinct shingles, self-join on shingle (only docs sharing a
     * shingle ever meet), count shared shingles per pair, then
@@ -644,18 +669,11 @@ object Dedup {
     * shingles are ~D²/2^65 — immaterial below trillions of shingles). */
   def ngramJaccardDupPairs(df: DataFrame, idCol: String, textCol: String,
                            shingleSize: Int = 3,
-                           threshold: Double = 0.8): DataFrame = {
-    val inverted = invertedIndex(shingleDocs(df, idCol, textCol, shingleSize))
-    val shared = inverted.as("l")
-      .join(inverted.as("r"),
-        col("l.sh") === col("r.sh") && col("l.id") < col("r.id") &&
-          lengthBound(threshold, col("l.n_sh"), col("r.n_sh")))
-      .groupBy(col("l.id").as("id1"), col("r.id").as("id2"),
-        col("l.n_sh").as("n1"), col("r.n_sh").as("n2"))
-      .agg(count(lit(1)).as("inter"))
-    jaccardFromCounts(shared, threshold, "n1", "n2")
+                           threshold: Double = 0.8): DataFrame =
+    jaccardAtLeast(
+      sharedShingleCounts(df, idCol, textCol, shingleSize, threshold),
+      threshold, col("inter"), col("n1"), col("n2"))
       .select(col("id1"), col("id2"), col("jaccard"))
-  }
 
   /** Prefix-filtered EXACT Jaccard pairs — the PPJoin discipline
     * (Chaudhuri, Ganti & Kaushik, ICDE 2006; Xiao et al., WWW 2008)
@@ -684,15 +702,7 @@ object Dedup {
     require(threshold > 0 && threshold < 1,
       s"threshold must be in (0,1), got $threshold")
     val docs = shingleDocs(df, idCol, textCol, shingleSize)
-    val inv = invertedIndex(docs)
-    val freq = inv.groupBy(col("sh")).agg(count(lit(1)).as("__df"))
-    val w = Window.partitionBy(col("id"))
-      .orderBy(col("__df").asc, col("sh").asc)
-    val prefix = inv.join(freq, "sh")
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <=
-        col("n_sh") - ceil(lit(threshold) * col("n_sh")) + 1)
-      .select(col("id"), col("n_sh"), col("sh"))
+    val prefix = prefixPostings(invertedIndex(docs), threshold)
     val cand = prefix.as("l").join(prefix.as("r"),
         col("l.sh") === col("r.sh") && col("l.id") < col("r.id") &&
           lengthBound(threshold, col("l.n_sh"), col("r.n_sh")))
@@ -705,10 +715,23 @@ object Dedup {
         Seq("id1"))
       .join(sets.select(col("id").as("id2"), col("__set").as("__s2")),
         Seq("id2"))
-      .withColumn("inter",
-        size(array_intersect(col("__s1"), col("__s2"))).cast("long"))
-    jaccardFromCounts(verified, threshold, "n1", "n2")
+    jaccardAtLeast(verified, threshold,
+      size(array_intersect(col("__s1"), col("__s2"))), col("n1"), col("n2"))
       .select(col("id1"), col("id2"), col("jaccard"))
+  }
+
+  /** The PPJoin prefix postings (id, n_sh, sh) of inverted index `inv`:
+    * each document's `|d| − ⌈t·|d|⌉ + 1` rarest shingles in the one
+    * global order (document frequency, ties by shingle value). */
+  private def prefixPostings(inv: DataFrame, threshold: Double): DataFrame = {
+    val freq = inv.groupBy(col("sh")).agg(count(lit(1)).as("__df"))
+    val w = Window.partitionBy(col("id"))
+      .orderBy(col("__df").asc, col("sh").asc)
+    inv.join(freq, "sh")
+      .withColumn("__rk", row_number().over(w))
+      .filter(col("__rk") <=
+        col("n_sh") - ceil(lit(threshold) * col("n_sh")) + 1)
+      .select(col("id"), col("n_sh"), col("sh"))
   }
 
   /** Candidate-pair count of the prefix filter vs the full inverted
@@ -717,19 +740,11 @@ object Dedup {
   private[graft] def prefixFilterStats(df: DataFrame, idCol: String,
                                        textCol: String, shingleSize: Int,
                                        threshold: Double): (Long, Long) = {
-    val docs = shingleDocs(df, idCol, textCol, shingleSize)
-    val inv = invertedIndex(docs)
-    val freq = inv.groupBy(col("sh")).agg(count(lit(1)).as("__df"))
-    val w = Window.partitionBy(col("id"))
-      .orderBy(col("__df").asc, col("sh").asc)
-    val prefix = inv.join(freq, "sh")
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <=
-        col("n_sh") - ceil(lit(threshold) * col("n_sh")) + 1)
+    val inv = invertedIndex(shingleDocs(df, idCol, textCol, shingleSize))
     def pairs(index: DataFrame) = index.as("l").join(index.as("r"),
         col("l.sh") === col("r.sh") && col("l.id") < col("r.id"))
       .select(col("l.id"), col("r.id")).distinct().count()
-    (pairs(prefix.select(col("id"), col("sh"))), pairs(inv))
+    (pairs(prefixPostings(inv, threshold)), pairs(inv))
   }
 
   /** DIRECTED n-gram containment pairs: `c(A→B) = |A∩B| / |A|` over
@@ -755,13 +770,8 @@ object Dedup {
                             shingleSize: Int = 3,
                             threshold: Double = 0.9): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold in (0, 1]")
-    val inverted = invertedIndex(shingleDocs(df, idCol, textCol, shingleSize))
-    val shared = inverted.as("l")
-      .join(inverted.as("r"),
-        col("l.sh") === col("r.sh") && col("l.id") < col("r.id"))
-      .groupBy(col("l.id").as("id1"), col("r.id").as("id2"),
-        col("l.n_sh").as("n1"), col("r.n_sh").as("n2"))
-      .agg(count(lit(1)).as("inter"))
+    // threshold 0: no length bound
+    val shared = sharedShingleCounts(df, idCol, textCol, shingleSize, 0)
     shared.select(col("id1").as("src_id"), col("id2").as("dst_id"),
         round(col("inter").cast("double") / col("n1"), 6).as("containment"))
       .unionByName(shared.select(col("id2").as("src_id"),
@@ -806,17 +816,11 @@ object Dedup {
   def crossNgramJaccardPairs(corpus: DataFrame, benchmark: DataFrame,
                              idCol: String, textCol: String,
                              shingleSize: Int = 3,
-                             threshold: Double = 0.8): DataFrame = {
-    val c = invertedIndex(shingleDocs(corpus, idCol, textCol, shingleSize))
-    val b = invertedIndex(shingleDocs(benchmark, idCol, textCol, shingleSize))
-    val joined = b.join(c, b("sh") === c("sh") &&
-        lengthBound(threshold, b("n_sh"), c("n_sh")))
-      .groupBy(b("id").as("bench_id"), c("id").as("corpus_id"),
-        b("n_sh").as("nb"), c("n_sh").as("nc"))
-      .agg(count(lit(1)).as("inter"))
-    jaccardFromCounts(joined, threshold, "nb", "nc")
-      .select(col("bench_id"), col("corpus_id"), col("jaccard"))
-  }
+                             threshold: Double = 0.8): DataFrame =
+    crossJaccardPairs(
+      invertedIndex(shingleDocs(benchmark, idCol, textCol, shingleSize)),
+      invertedIndex(shingleDocs(corpus, idCol, textCol, shingleSize)),
+      threshold, _ => count(lit(1)))
 
   /** Persist a benchmark/eval corpus's inverted shingle index — one row
     * per (doc, distinct shingle hash): (id, n_sh, sh), BUCKETED by `sh`
@@ -868,19 +872,12 @@ object Dedup {
                                          textCol: String, table: String,
                                          shingleSize: Int = 3,
                                          threshold: Double = 0.8
-                                        ): DataFrame = {
-    val c = invertedIndex(shingleDocs(corpus, idCol, textCol, shingleSize))
-    val b = corpus.sparkSession.table(table)
-    val joined = b.join(c, b("sh") === c("sh") &&
-        lengthBound(threshold, b("n_sh"), c("n_sh")))
-      .groupBy(b("id").as("bench_id"), c("id").as("corpus_id"),
-        b("n_sh").as("nb"), c("n_sh").as("nc"))
-      // DISTINCT shared shingles: a replayed index append duplicates
-      // (id, sh) rows, and a plain count would inflate the intersection
-      .agg(countDistinct(b("sh")).as("inter"))
-    jaccardFromCounts(joined, threshold, "nb", "nc")
-      .select(col("bench_id"), col("corpus_id"), col("jaccard"))
-  }
+                                        ): DataFrame =
+    // DISTINCT shared shingles: a replayed index append duplicates
+    // (id, sh) rows, and a plain count would inflate the intersection
+    crossJaccardPairs(corpus.sparkSession.table(table),
+      invertedIndex(shingleDocs(corpus, idCol, textCol, shingleSize)),
+      threshold, countDistinct(_))
 
   /** SimHash near-dup pairs: one 64-bit signature per doc; splitting it
     * into 4×16-bit chunks guarantees (pigeonhole) that any pair within
@@ -899,18 +896,25 @@ object Dedup {
       else GraftExpressions.simhash64(toks, seed)
     val sigs = graft.util.SparkUtils.widen(df).select(col(idCol).as("id"),
         sigExpr.as("sig"))
-    val chunked = sigs.select(col("id"), col("sig"),
-      posexplode(transform(sequence(lit(0), lit(3)),
-        i => call_function("shiftright", col("sig"), (i * 16).cast("int")).bitwiseAND(lit(0xffffL))))
-        .as(Seq("chunk_idx", "chunk")))
-    chunked.as("l")
-      .join(chunked.as("r"),
-        col("l.chunk_idx") === col("r.chunk_idx") &&
-          col("l.chunk") === col("r.chunk") && col("l.id") < col("r.id"))
+    sharedChunkPairs(sigs)
       .select(col("l.id").as("id1"), col("r.id").as("id2"),
         bit_count(col("l.sig").bitwiseXOR(col("r.sig"))).as("hamming"))
       .dropDuplicates("id1", "id2")
       .filter(col("hamming") <= maxHamming)
+  }
+
+  /** The self-join of 64-bit signatures (id, sig) on their four 16-bit
+    * chunks, as `l` and `r` with l.id < r.id: any two signatures within
+    * Hamming distance 3 share a chunk (pigeonhole). Only (chunk_idx,
+    * chunk, id, sig) rides the join's shuffle. */
+  private def sharedChunkPairs(sigs: DataFrame): DataFrame = {
+    val chunked = sigs.select(col("id"), col("sig"),
+      posexplode(transform(sequence(lit(0), lit(3)),
+        i => call_function("shiftright", col("sig"), (i * 16).cast("int")).bitwiseAND(lit(0xffffL))))
+        .as(Seq("chunk_idx", "chunk")))
+    chunked.as("l").join(chunked.as("r"),
+      col("l.chunk_idx") === col("r.chunk_idx") &&
+        col("l.chunk") === col("r.chunk") && col("l.id") < col("r.id"))
   }
 
   /** Connected components over a duplicate-pair graph — the clustering
@@ -1174,15 +1178,8 @@ object Dedup {
     } else {
       // as in minhashDupPairs: only (chunk_idx, chunk, id) shuffles through
       // the banded self-join; vectors rejoin by id after candidate dedup
-      val sigs = docs.withColumn("sig", Similarity.hyperplaneSig(col("v"), 64, seed))
-      val chunked = sigs.select(col("id"), col("sig"),
-        posexplode(transform(sequence(lit(0), lit(3)),
-          i => call_function("shiftright", col("sig"), (i * 16).cast("int")).bitwiseAND(lit(0xffffL))))
-          .as(Seq("chunk_idx", "chunk")))
-      val candidateIds = chunked.as("l")
-        .join(chunked.as("r"),
-          col("l.chunk_idx") === col("r.chunk_idx") &&
-            col("l.chunk") === col("r.chunk") && col("l.id") < col("r.id"))
+      val candidateIds = sharedChunkPairs(
+          docs.withColumn("sig", Similarity.hyperplaneSig(col("v"), 64, seed)))
         .select(col("l.id").as("id1"), col("r.id").as("id2"))
         .dropDuplicates("id1", "id2")
       val vecs = docs.select(col("id"), col("v"))
@@ -1373,12 +1370,25 @@ object Dedup {
                            hashedAnchors: Boolean = true): DataFrame = {
     require(minMatch >= 2, s"minMatch must be >= 2: $minMatch")
     val grams = spanGrams(df, idCol, textCol, minMatch, hashedAnchors)
-    val keepers = grams.groupBy(col("__gram"))
-      .agg(min(struct(col(idCol), col("__pos"))).as("__keep"))
-    val anchors = grams.join(keepers, Seq("__gram"))
-      .where(struct(col(idCol), col("__pos")) =!= col("__keep"))
-      .select(col(idCol), col("__pos"))
-    rebuildAfterCut(df, anchors, idCol, textCol, minMatch)
+    rebuildAfterCut(df, nonKeepers(grams, "__gram", idCol), idCol, textCol,
+      minMatch)
+  }
+
+  /** The keeper cut: the (id, __pos) rows of `rows` other than the first
+    * occurrence of their `key`, the minimum (id, __pos). `repeatedOnly`
+    * joins back only keys seen at least twice (a key seen once has no
+    * other row); it prunes the join and does not change the answer. */
+  private def nonKeepers(rows: DataFrame, key: String, id: String,
+                         repeatedOnly: Boolean = false): DataFrame = {
+    val byKey = rows.groupBy(col(key))
+    val keep = min(struct(col(id), col("__pos"))).as("__keep")
+    val groups =
+      if (repeatedOnly)
+        byKey.agg(count(lit(1)).as("__cnt"), keep).filter(col("__cnt") >= 2)
+      else byKey.agg(keep)
+    rows.join(groups, Seq(key))
+      .where(struct(col(id), col("__pos")) =!= col("__keep"))
+      .select(col(id), col("__pos"))
   }
 
   /** Positional anchor grams for span dedup: (id, __pos, __gram). */
@@ -1477,12 +1487,8 @@ object Dedup {
     val hist = grams.join(idx, Seq("__gram"), "left_semi")
       .select(col(idCol), col("__pos"))
     val fresh = grams.join(idx, Seq("__gram"), "left_anti")
-    val keepers = fresh.groupBy(col("__gram"))
-      .agg(min(struct(col(idCol), col("__pos"))).as("__keep"))
-    val freshDup = fresh.join(keepers, Seq("__gram"))
-      .where(struct(col(idCol), col("__pos")) =!= col("__keep"))
-      .select(col(idCol), col("__pos"))
-    rebuildAfterCut(batch, hist.unionByName(freshDup), idCol, textCol, minMatch)
+    rebuildAfterCut(batch, hist.unionByName(nonKeepers(fresh, "__gram", idCol)),
+      idCol, textCol, minMatch)
   }
 
   /** Character-level exact-substring duplicate anchors via SUFFIX-ARRAY
@@ -1546,12 +1552,7 @@ object Dedup {
           col("__t"))
         .select(col("__sid"), col("__pos"),
           expr(s"substring(__t, __pos + 1, $minMatch)").as("__w"))
-      val groups = full.groupBy(col("__w"))
-        .agg(count(lit(1)).as("__cnt"),
-          min(struct(col("__sid"), col("__pos"))).as("__keep"))
-        .filter(col("__cnt") >= 2)
-      return full.join(groups, Seq("__w"))
-        .where(struct(col("__sid"), col("__pos")) =!= col("__keep"))
+      return nonKeepers(full, "__w", "__sid", repeatedOnly = true)
         .select(col("__sid").as(idCol), col("__pos").as("pos"))
     }
     // one row per character position; the wide text column is consumed
@@ -1611,12 +1612,7 @@ object Dedup {
     }
     // full-length windows only, then duplicate groups minus their keeper
     val full = ranks.filter(col("__pos") <= col("__n") - minMatch)
-    val groups = full.groupBy(col("__r"))
-      .agg(count(lit(1)).as("__cnt"),
-        min(struct(col("__sid"), col("__pos"))).as("__keep"))
-      .filter(col("__cnt") >= 2)
-    full.join(groups, Seq("__r"))
-      .where(struct(col("__sid"), col("__pos")) =!= col("__keep"))
+    nonKeepers(full, "__r", "__sid", repeatedOnly = true)
       .select(col("__sid").as(idCol), col("__pos").as("pos"))
   }
 

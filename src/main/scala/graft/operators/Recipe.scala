@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.functions.TextFunctions
 import graft.util.SparkUtils.withJobDescription
-import org.apache.spark.sql.DataFrame
+import graft.util.WorkerPool
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** The full training-data curation RECIPE — the eight-stage composition
@@ -108,26 +109,17 @@ object Recipe {
                Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
              headTokens: Int = 20, tailTokens: Int = 10,
              shardBudget: Long = 2000L): (DataFrame, DataFrame) = {
-    require(minTokens >= 1 && maxTokens >= minTokens,
-      s"need 1 <= minTokens <= maxTokens, got [$minTokens, $maxTokens]")
-    require(familySize >= 1, s"familySize must be >= 1, got $familySize")
-    require(semanticCorpus.isDefined == semanticEval.isDefined,
-      "semantic decontamination needs BOTH a corpus and an eval vector set")
+    requireParams(minTokens, maxTokens, familySize, semanticCorpus, semanticEval)
 
-    // 1. normalize + 2. quality cut
-    val qual = docs
-      .withColumn("__t", TextFunctions.stripHtml(col(textCol)))
-      .withColumn("n_tokens",
-        TextFunctions.tokenCount(col("__t")).cast("long"))
-      .filter(col("n_tokens").between(minTokens, maxTokens))
-      .select(col(idCol), col(sourceCol), col("__t"), col("n_tokens"))
-      // stage-boundary materialization: every stage below references
-      // its upstream 2-3 times (dedup pairs join back to the corpus,
-      // anti-joins reuse both sides), so an unchecked lineage doubles
-      // per stage — the iterative-operator plan-growth lesson applied
-      // to a LINEAR pipeline. At real scale swap localCheckpoint for a
-      // persisted staging table per stage (also your recovery points).
-      .localCheckpoint()
+    // 1. normalize + 2. quality cut, then a stage-boundary
+    // materialization: every stage below references its upstream 2-3
+    // times (dedup pairs join back to the corpus, anti-joins reuse both
+    // sides), so an unchecked lineage doubles per stage — the
+    // iterative-operator plan-growth lesson applied to a LINEAR
+    // pipeline. At real scale swap localCheckpoint for a persisted
+    // staging table per stage (also your recovery points).
+    val qual = qualityCut(docs, idCol, sourceCol, textCol, minTokens,
+      maxTokens).localCheckpoint()
 
     // 3. exact dedup — smallest id per normalized fingerprint survives
     val exact = qual.join(
@@ -160,41 +152,18 @@ object Recipe {
     val decon1 = corpus.join(contaminated, Seq(idCol), "left_anti")
 
     // 5b. semantic decontamination — paraphrase leaks by embedding
-    val decon = ((semanticCorpus, semanticEval) match {
-      case (Some(cEmb), Some(eEmb)) =>
-        val flagged = Dedup.decontaminateSemantic(cEmb, eEmb,
-            idCol, semanticVecCol, k = semanticK,
-            minCosine = semanticMinCosine, minMargin = semanticMinMargin)
-          .select(col("corpus_id").as(idCol)).distinct()
-        decon1.join(flagged, Seq(idCol), "left_anti")
-      case _ => decon1
-    }).localCheckpoint()
+    val decon = semanticCut(decon1, idCol, semanticCorpus, semanticEval,
+      semanticVecCol, semanticK, semanticMinCosine, semanticMinMargin)
+      .getOrElse(decon1).localCheckpoint()
 
-    // 6. temperature mix — on a SALTED md5 surrogate key, NOT the raw
-    // id: both the mix-keep rule and the split bands below are
-    // knuthHash32 thresholds, and keying two independent decisions on
-    // the SAME hash correlates them perfectly (the mix keeps exactly
-    // the ids whose hash is small, which the split would then send
-    // 100% to the first band — every sampled doc in 'train'; this
-    // recipe gate caught that live). The md5 surrogate decorrelates.
-    val mixed = Sampling.temperatureSampleBySource(
-        decon.withColumn("__mix",
-          Sampling.surrogateKey(col(idCol), "recipemix")),
-        "__mix", sourceCol, tau = tau, budgetDocs = budgetDocs)
-      .drop("__mix")
+    // 6. temperature mix
+    val mixed = temperatureMix(decon, idCol, sourceCol, tau, budgetDocs)
       .localCheckpoint()
 
     // 7. leak-free split over chunk families: star pairs to the
     // family's smallest KEPT id make each family one component
-    // FLOOR division (id − pmod(id, size) is always a multiple of size,
-    // so the div is exact): bare `div` truncates toward zero, which for
-    // a NEGATIVE doc id disagrees with the oracle's `//` floor — the id
-    // would join the wrong family and silently straddle the split
     val fam = mixed.select(col(idCol), col(sourceCol))
-      .withColumn("__fam", call_function("div",
-        col(idCol).cast("long") - pmod(col(idCol).cast("long"),
-          lit(familySize)),
-        lit(familySize)))
+      .withColumn("__fam", family(idCol, familySize))
     val famMin = fam.groupBy(col(sourceCol), col("__fam"))
       .agg(min(col(idCol)).as("__fmin"))
     val famPairs = fam.join(famMin, Seq(sourceCol, "__fam"))
@@ -202,33 +171,112 @@ object Recipe {
       .select(col("__fmin").as("id1"), col(idCol).as("id2"))
     val split = Sampling.leakFreeSplit(mixed, idCol, famPairs, splits)
 
-    // 8. pack to the context window + cost-balanced shards over the
-    // deterministic (Knuth-hash, id) training order
+    // 8. pack + shard
+    (packAndShard(split, idCol, sourceCol, headTokens, tailTokens,
+        shardBudget),
+      dropLedger(idCol, sourceCol, docs, qual, exact, near, bench, corpus,
+        decon1, decon, mixed))
+  }
+
+  private def requireParams(minTokens: Long, maxTokens: Long,
+                            familySize: Long, embeddings: Option[DataFrame],
+                            eval: Option[DataFrame]): Unit = {
+    require(minTokens >= 1 && maxTokens >= minTokens,
+      s"need 1 <= minTokens <= maxTokens, got [$minTokens, $maxTokens]")
+    require(familySize >= 1, s"familySize must be >= 1, got $familySize")
+    require(embeddings.isDefined == eval.isDefined,
+      "semantic decontamination needs BOTH embeddings and an eval vector set")
+  }
+
+  /** Stages 1 + 2: (idCol, sourceCol, __t, n_tokens) of the documents
+    * whose HTML-stripped text `__t` has a token count in the band. */
+  private def qualityCut(docs: DataFrame, idCol: String, sourceCol: String,
+                         textCol: String, minTokens: Long,
+                         maxTokens: Long): DataFrame =
+    docs
+      .withColumn("__t", TextFunctions.stripHtml(col(textCol)))
+      .withColumn("n_tokens",
+        TextFunctions.tokenCount(col("__t")).cast("long"))
+      .filter(col("n_tokens").between(minTokens, maxTokens))
+      .select(col(idCol), col(sourceCol), col("__t"), col("n_tokens"))
+
+  /** Stage 5b: `decon1` without the documents whose embedding leaks an
+    * `eval` item ([[Dedup.decontaminateSemantic]]); None without the
+    * vector sets. */
+  private def semanticCut(decon1: DataFrame, idCol: String,
+                          embeddings: Option[DataFrame],
+                          eval: Option[DataFrame], vecCol: String, k: Int,
+                          minCosine: Double,
+                          minMargin: Double): Option[DataFrame] =
+    for (cEmb <- embeddings; eEmb <- eval) yield {
+      val flagged = Dedup.decontaminateSemantic(cEmb, eEmb, idCol, vecCol,
+          k = k, minCosine = minCosine, minMargin = minMargin)
+        .select(col("corpus_id").as(idCol)).distinct()
+      decon1.join(flagged, Seq(idCol), "left_anti")
+    }
+
+  /** Stage 6: the temperature mix on a SALTED md5 surrogate key, NOT the
+    * raw id: both the mix-keep rule and the split bands are knuthHash32
+    * thresholds, and keying two independent decisions on the SAME hash
+    * correlates them perfectly (the mix keeps exactly the ids whose hash
+    * is small, which the split would then send 100% to the first band —
+    * every sampled doc in 'train'; the recipe gate caught that live).
+    * The md5 surrogate decorrelates. */
+  private def temperatureMix(decon: DataFrame, idCol: String,
+                             sourceCol: String, tau: Double,
+                             budgetDocs: Long): DataFrame =
+    Sampling.temperatureSampleBySource(
+        decon.withColumn("__mix",
+          Sampling.surrogateKey(col(idCol), "recipemix")),
+        "__mix", sourceCol, tau = tau, budgetDocs = budgetDocs)
+      .drop("__mix")
+
+  /** Stage 7's chunk family of a document, floor(id / familySize). FLOOR
+    * division (id − pmod(id, size) is always a multiple of size, so the
+    * div is exact): bare `div` truncates toward zero, which for a
+    * NEGATIVE doc id disagrees with the oracle's `//` floor — the id
+    * would join the wrong family and silently straddle the split. */
+  private def family(idCol: String, familySize: Long): Column =
+    call_function("div",
+      col(idCol).cast("long") - pmod(col(idCol).cast("long"), lit(familySize)),
+      lit(familySize))
+
+  /** Stage 8: head+tail truncation to the context window, then
+    * cost-balanced shards over the deterministic (Knuth-hash, id)
+    * training order; the survivors' output columns. */
+  private def packAndShard(split: DataFrame, idCol: String,
+                           sourceCol: String, headTokens: Int,
+                           tailTokens: Int, shardBudget: Long): DataFrame = {
     val packed = Packing.truncateHeadTail(split, "__t",
       headTokens = headTokens, tailTokens = tailTokens)
-    val survivors = Ranking.shardByCostBudget(packed,
+    Ranking.shardByCostBudget(packed,
         Seq(Sampling.knuthHash32(col(idCol)), col(idCol)),
         "n_tokens_kept", budget = shardBudget)
       .select(col(idCol), col(sourceCol), col("n_tokens"), col("split"),
         col("truncated"), col("n_tokens_kept"), col("shard"))
+  }
 
-    // the drop ledger: each document lands in exactly one stage row —
-    // the FIRST stage that dropped it — or in the survivors. All the
-    // operands below are the materialized stage boundaries, so this
-    // costs anti-joins on bounded frames, not a pipeline re-run.
+  /** The drop ledger: each document of `input` lands in exactly one stage
+    * row — the FIRST stage that dropped it — or in the survivors. Its
+    * operands are the stage boundaries, so it costs anti-joins on
+    * bounded frames, not a pipeline re-run; it stays lazy, so a caller
+    * that discards it pays nothing. */
+  private def dropLedger(idCol: String, sourceCol: String, input: DataFrame,
+                         qual: DataFrame, exact: DataFrame, near: DataFrame,
+                         bench: DataFrame, corpus: DataFrame,
+                         decon1: DataFrame, decon: DataFrame,
+                         mixed: DataFrame): DataFrame = {
     def ids(f: DataFrame) = f.select(col(idCol), col(sourceCol))
     def drop(from: DataFrame, kept: DataFrame, stage: String) =
       ids(from).join(kept.select(col(idCol)), Seq(idCol), "left_anti")
         .withColumn("stage", lit(stage))
-    val audit = drop(docs, qual, "quality")
+    drop(input, qual, "quality")
       .unionByName(drop(qual, exact, "exact_dup"))
       .unionByName(drop(exact, near, "near_dup"))
       .unionByName(ids(bench).withColumn("stage", lit("benchmark")))
       .unionByName(drop(corpus, decon1, "contaminated"))
       .unionByName(drop(decon1, decon, "semantic"))
       .unionByName(drop(decon, mixed, "mix_budget"))
-    // audit stays lazy: a caller that discards the ledger pays nothing
-    (survivors, audit)
   }
 
   /** Create the EMPTY persisted indexes [[curateIncremental]] resumes
@@ -356,22 +404,13 @@ object Recipe {
              shardBudget: Long = 2000L,
              generation: Option[Long] = None,
              buckets: Int = 8): (DataFrame, DataFrame) = {
-    require(minTokens >= 1 && maxTokens >= minTokens,
-      s"need 1 <= minTokens <= maxTokens, got [$minTokens, $maxTokens]")
-    require(familySize >= 1, s"familySize must be >= 1, got $familySize")
-    require(batchEmb.isDefined == semanticEval.isDefined,
-      "semantic decontamination needs BOTH batch embeddings and an eval set")
-
+    requireParams(minTokens, maxTokens, familySize, batchEmb, semanticEval)
     val session = batch.sparkSession
 
-    // 1+2. normalize + quality cut (identical to the batch form)
-    val qual = withJobDescription(session, "recipe: qual ckpt")(batch
-      .withColumn("__t", TextFunctions.stripHtml(col(textCol)))
-      .withColumn("n_tokens",
-        TextFunctions.tokenCount(col("__t")).cast("long"))
-      .filter(col("n_tokens").between(minTokens, maxTokens))
-      .select(col(idCol), col(sourceCol), col("__t"), col("n_tokens"))
-      .localCheckpoint())
+    // 1+2. normalize + quality cut
+    val qual = withJobDescription(session, "recipe: qual ckpt")(
+      qualityCut(batch, idCol, sourceCol, textCol, minTokens, maxTokens)
+        .localCheckpoint())
 
     // 3. exact dedup: in-batch first occurrence + vs-history anti-join
     val exact = withJobDescription(session, "recipe: exact ckpt")(
@@ -415,92 +454,53 @@ object Recipe {
     // 5b. semantic decontamination vs the fixed eval set (when absent,
     // decon IS the already-materialized decon1 — a second checkpoint of
     // the identical frame would just burn a job per micro-batch)
-    val decon = (batchEmb, semanticEval) match {
-      case (Some(cEmb), Some(eEmb)) =>
-        val flagged = Dedup.decontaminateSemantic(cEmb, eEmb,
-            idCol, semanticVecCol, k = semanticK,
-            minCosine = semanticMinCosine, minMargin = semanticMinMargin)
-          .select(col("corpus_id").as(idCol)).distinct()
-        withJobDescription(session, "recipe: semantic ckpt")(
-          decon1.join(flagged, Seq(idCol), "left_anti").localCheckpoint())
-      case _ => decon1
-    }
+    val decon = semanticCut(decon1, idCol, batchEmb, semanticEval,
+        semanticVecCol, semanticK, semanticMinCosine, semanticMinMargin)
+      .fold(decon1)(f => withJobDescription(session,
+        "recipe: semantic ckpt")(f.localCheckpoint()))
 
-    // 6. per-batch temperature mix on the salted surrogate (see the
-    // batch form's hash-coupling note). NOT checkpointed: the mix frame
-    // has exactly one eager consumer (the survivor chain below — the
-    // audit is lazy and rarely evaluated), it reads no index table
-    // (decon, its checkpointed upstream, is the last index-reading
-    // frame), and the mix itself is a groupBy + broadcast join on an
-    // already-bounded frame — a checkpoint here bought one extra job
-    // per micro-batch and nothing else. An audit consumer recomputes
-    // the cheap mix from the decon checkpoint.
-    val mixed = Sampling.temperatureSampleBySource(
-        decon.withColumn("__mix",
-          Sampling.surrogateKey(col(idCol), "recipemix")),
-        "__mix", sourceCol, tau = tau, budgetDocs = budgetDocs)
-      .drop("__mix")
+    // 6. per-batch temperature mix. NOT checkpointed: the mix frame has
+    // exactly one eager consumer (the survivor chain below — the audit
+    // is lazy and rarely evaluated), it reads no index table (decon, its
+    // checkpointed upstream, is the last index-reading frame), and the
+    // mix itself is a groupBy + broadcast join on an already-bounded
+    // frame — a checkpoint here bought one extra job per micro-batch and
+    // nothing else. An audit consumer recomputes the cheap mix from the
+    // decon checkpoint.
+    val mixed = temperatureMix(decon, idCol, sourceCol, tau, budgetDocs)
 
     // 7. batch-stable leak-free split on the family KEY itself
-    val famCol = call_function("div",
-      col(idCol).cast("long") - pmod(col(idCol).cast("long"),
-        lit(familySize)),
-      lit(familySize))
     val split = Sampling.splitByHash(
         mixed.withColumn("__skey", Sampling.surrogateKey(
-          concat_ws("|", col(sourceCol), famCol), splitSalt)),
+          concat_ws("|", col(sourceCol), family(idCol, familySize)),
+          splitSalt)),
         "__skey", splits)
       .drop("__skey")
 
     // 8. pack + shard (per batch)
-    val packed = Packing.truncateHeadTail(split, "__t",
-      headTokens = headTokens, tailTokens = tailTokens)
     val survivors = withJobDescription(session, "recipe: pack+shard ckpt")(
-      Ranking.shardByCostBudget(packed,
-          Seq(Sampling.knuthHash32(col(idCol)), col(idCol)),
-          "n_tokens_kept", budget = shardBudget)
-        .select(col(idCol), col(sourceCol), col("n_tokens"), col("split"),
-          col("truncated"), col("n_tokens_kept"), col("shard"))
-        .localCheckpoint())
+      packAndShard(split, idCol, sourceCol, headTokens, tailTokens,
+        shardBudget).localCheckpoint())
 
     // the three appends write three INDEPENDENT tables from already-
     // materialized frames: submit them from a small pool so the next
     // append's tasks back-fill executors freed by the previous one's
     // tail — serial, each small write paid its full fixed cost end to
-    // end. Any failure fails the whole call.
-    val work: Seq[() => Unit] = Seq(
-      () => withJobDescription(session, "recipe: append fp")(
-        Dedup.appendToFingerprintIndexTable(exact, "__t",
-          fingerprintTable, buckets, generation)),
-      () => withJobDescription(session, "recipe: append minhash")(
-        // the stage-4 signing restricted to the near survivors, not a
-        // re-signing of the survivors' raw text
-        signed.restrictTo(near).writeIndex(minhashTable, buckets,
-          org.apache.spark.sql.SaveMode.Append, generation)),
-      () => withJobDescription(session, "recipe: append bench ngram")(
-        Dedup.appendToNgramInvertedIndexTable(bench, idCol, "__t",
-          benchNgramTable, shingleSize = 3, buckets = buckets)))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try scala.concurrent.Await.result(
-      scala.concurrent.Future.traverse(work)(f =>
-        scala.concurrent.Future(f())),
-      scala.concurrent.duration.Duration.Inf)
-    finally pool.shutdown()
+    // end. A failure fails the call once every append has finished.
+    WorkerPool.runAll(Seq[(String, () => Unit)](
+      "fp" -> (() => Dedup.appendToFingerprintIndexTable(exact, "__t",
+        fingerprintTable, buckets, generation)),
+      // the stage-4 signing restricted to the near survivors, not a
+      // re-signing of the survivors' raw text
+      "minhash" -> (() => signed.restrictTo(near).writeIndex(minhashTable,
+        buckets, SaveMode.Append, generation)),
+      "bench ngram" -> (() => Dedup.appendToNgramInvertedIndexTable(bench,
+        idCol, "__t", benchNgramTable, shingleSize = 3, buckets = buckets))),
+      workers = 3) { case (index, append) =>
+      withJobDescription(session, s"recipe: append $index")(append())
+    }
 
-    def ids(f: DataFrame) = f.select(col(idCol), col(sourceCol))
-    def drop(from: DataFrame, kept: DataFrame, stage: String) =
-      ids(from).join(kept.select(col(idCol)), Seq(idCol), "left_anti")
-        .withColumn("stage", lit(stage))
-    val audit = drop(batch, qual, "quality")
-      .unionByName(drop(qual, exact, "exact_dup"))
-      .unionByName(drop(exact, near, "near_dup"))
-      .unionByName(ids(bench).withColumn("stage", lit("benchmark")))
-      .unionByName(drop(corpus, decon1, "contaminated"))
-      .unionByName(drop(decon1, decon, "semantic"))
-      .unionByName(drop(decon, mixed, "mix_budget"))
-    // audit stays lazy: a caller that discards the ledger pays nothing
-    (survivors, audit)
+    (survivors, dropLedger(idCol, sourceCol, batch, qual, exact, near, bench,
+      corpus, decon1, decon, mixed))
   }
 }

@@ -29,7 +29,7 @@ class ExtensionSpec extends SparkSpec {
   }
 
   test("GraftSparkExtension injects functions into a fresh session") {
-    val s2 = org.apache.spark.sql.SparkSession.builder()
+    org.apache.spark.sql.SparkSession.builder()
       .master("local[2]")
       .config("spark.sql.extensions", "graft.GraftSparkExtension")
       .getOrCreate()

@@ -65,7 +65,6 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("custom expressions compile into whole-stage generated code") {
-    import org.apache.spark.sql.execution.debug._
     val df = DbReader(conn, "documents").run()
       .select(
         graft.expressions.GraftExpressions.fingerprint64($"text").as("fp"),

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class CorpusSpec extends SparkSpec {
   import spark.implicits._
@@ -302,7 +301,6 @@ class CorpusSpec extends SparkSpec {
 
   test("ccnetPerplexityBuckets: per-lang terciles, unscored short docs, head more fluent than tail") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val docs = Seq(
       (1L, "a a a a a a", "xx"),   // most common bigram -> most fluent
       (2L, "a a a a b", "xx"),

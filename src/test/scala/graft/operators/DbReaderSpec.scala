@@ -136,6 +136,41 @@ class DbReaderSpec extends SparkSpec {
     assert(store.get("ib.id").get.valueOpt.contains(100L))
   }
 
+  test("a strategy skips a save of the HWM it last saved: a downloader in " +
+       "a scope sets once, a 3-window incremental-batch loop three times") {
+    final class CountingStore extends HwmStore {
+      private val inner = new InMemoryHwmStore
+      @volatile var sets = 0
+      def get(name: String): Option[Hwm] = inner.get(name)
+      def set(hwm: Hwm): Unit = { sets += 1; inner.set(hwm) }
+    }
+    val (src, dst) = (tmpDir("hwmsave-src"), tmpDir("hwmsave-dst"))
+    Seq("a.json", "b.json").foreach(n =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(src, n), "{}".getBytes))
+    val fileStore = new CountingStore
+    val landed = Strategy.using(new IncrementalStrategy(store = fileStore)) {
+      graft.files.FileDownloader(new graft.files.LocalFileConnection, src, dst,
+        hwmName = Some("drop.files")).run()
+    }
+    assert(landed.successful.size == 2)
+    // the downloader's own save; the scope exit finds nothing new
+    assert(fileStore.sets == 1)
+    assert(fileStore.get("drop.files").get.valueOpt.map(_.asInstanceOf[Set[_]].size)
+      .contains(2))
+
+    val conn = freshConn()
+    writeRows(conn, "hs", (1L to 120L).map(i => (i, "x")))
+    val batchStore = new CountingStore
+    val b = new IncrementalBatchStrategy(40L, store = batchStore)
+    val counts = Strategy.using(b) {
+      b.foreachBatch(DbReader(conn, "hs", hwm = Some(HwmColumn("id"))).run().count())
+    }
+    assert(counts == Seq(41L, 40L, 39L))
+    // one save per window; the scope exit repeats the last one
+    assert(batchStore.sets == 3)
+    assert(batchStore.get("hs.id").get.valueOpt.contains(120L))
+  }
+
   test("incremental-batch with the stored HWM at the source max reads nothing") {
     val dir = tmpDir("dbreader-covered")
     val reads = Seq.newBuilder[(Seq[String], Option[Int])]
@@ -295,6 +330,9 @@ class DbReaderSpec extends SparkSpec {
     assert(DbReader(conn, "w2").run().count() == 10)
     DbWriter(conn, "w2", IfExists.Ignore).run(df)
     assert(DbReader(conn, "w2").run().count() == 10)
+    // Ignore writes a missing table
+    DbWriter(conn, "w3", IfExists.Ignore).run(df)
+    assert(DbReader(conn, "w3").run().count() == 10)
     intercept[Exception] { DbWriter(conn, "w2", IfExists.Error).run(df) }
   }
 

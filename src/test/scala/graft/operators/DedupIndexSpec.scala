@@ -203,6 +203,41 @@ class DedupIndexSpec extends SparkSpec {
     }
   }
 
+  test("curateIncremental reports a failed index append only after its " +
+       "sibling appends have finished") {
+    val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(10)
+    val (fpT, mhT, bnT) = (s"af_fp_$tag", s"af_mh_$tag", s"af_bn_$tag")
+    val group = s"append-failure-$tag"
+    val sc = spark.sparkContext
+    def toks(i: Int) = (0 until 40).map(j => s"w${i}_$j").mkString(" ")
+    val batch = (1 to 4).map(i => (i.toLong, "A", toks(i)))
+      .toDF("doc_id", "source", "text")
+    try {
+      Recipe.initRecipeIndexes(spark, fpT, mhT, bnT, buckets = 2)
+      // the benchmark n-gram index with another bucket count: Spark
+      // rejects its append at analysis, long before the others finish
+      Dedup.buildNgramInvertedIndexTable(
+        Seq.empty[(Long, String)].toDF("id", "__t"), "id", "__t", bnT,
+        buckets = 3)
+      sc.setJobGroup(group, "curateIncremental append failure")
+      try intercept[org.apache.spark.sql.AnalysisException] {
+        Recipe.curateIncremental(batch, "doc_id", "source", "text",
+          benchmarkSource = "bench", fpT, mhT, bnT, buckets = 2)
+      } finally sc.clearJobGroup()
+      org.apache.spark.GraftSparkBridge.waitListenerBus(sc, 10000L)
+      val tracker = sc.statusTracker
+      val running = tracker.getJobIdsForGroup(group).flatMap(tracker.getJobInfo)
+        .filter(_.status == org.apache.spark.JobExecutionStatus.RUNNING)
+      assert(running.isEmpty, s"jobs of the call still running: ${running.map(_.jobId).toSeq}")
+      // both sibling appends landed: 4 fingerprints, 4 docs x 32 bands
+      assert(spark.table(fpT).count() == 4L)
+      assert(spark.table(s"${mhT}_bands").count() == 4L * 32)
+      assert(spark.table(s"${mhT}_shingles").count() == 4L)
+    } finally
+      Seq(fpT, s"${mhT}_bands", s"${mhT}_shingles", bnT).foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
   test("compactBucketed heals append fragmentation, keeps the bucketed layout") {
     val table = "graft_fp_idx_compact"
     Dedup.buildFingerprintIndexTable(hist, "text", table, buckets = 4)

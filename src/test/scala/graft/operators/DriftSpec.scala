@@ -4,7 +4,7 @@ import graft.SparkSpec
 
 class DriftSpec extends SparkSpec {
   import spark.implicits._
-  import org.apache.spark.sql.functions.{col, to_timestamp}
+  import org.apache.spark.sql.functions.to_timestamp
 
   test("identical slices: every bucket contributes ~0, counts match the deciles") {
     val ref = (1L to 100L).map(i => (i, i.toDouble)).toDF("id", "v")

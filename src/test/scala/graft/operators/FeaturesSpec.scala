@@ -10,7 +10,6 @@ class FeaturesSpec extends SparkSpec {
     // category "a": fold-0 labels {10, 10}, fold-1 labels {40};
     // the fold-0 cell must encode to mean(out-of-fold) = 40, never 20
     // (ids chosen so the Knuth hash lands them in the intended folds)
-    val ids = (0L to 200L).map(i => (i, Features.foldOf(lit(i), 2)))
     val folds = spark.range(201)
       .select(col("id"), Features.foldOf(col("id"), 2).as("f"))
       .as[(Long, Long)].collect().toMap

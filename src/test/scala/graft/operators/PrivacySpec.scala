@@ -137,7 +137,6 @@ class PrivacySpec extends SparkSpec {
   test("dpNoisyCounts: noise depends only on (salt, group) — not the " +
        "data; Laplace(1/eps) tail bound holds; null groups drop; " +
        "partitioning-invariant") {
-    import org.apache.spark.sql.functions.col
     def counts(n: Int, g: String) = (1 to n).map(i => (g, s"r$i"))
     val small = (counts(5, "a") ++ counts(7, "b")).toDF("g", "id")
     val big = (counts(50, "a") ++ counts(70, "b") ++

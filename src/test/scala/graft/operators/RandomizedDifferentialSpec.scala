@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Seeded-random differential tests: each distributed operator is run
   * against a straightforward LOCAL model of the same math on the same

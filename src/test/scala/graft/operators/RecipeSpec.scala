@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** One planted defect per recipe stage: each document below exists to be
   * caught (or deliberately NOT caught) by exactly one stage, so a stage

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Suffix-array exact-substring dedup (arXiv:2107.06499 formulation):
   * bounded prefix-doubling ranks must find exactly the positions whose
