@@ -1,5 +1,6 @@
 package graft.connections
 
+import graft.core.Bounds
 import graft.dialects.Dialect
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -39,6 +40,16 @@ trait DbConnection {
                      hint: Option[String] = None,
                      limit: Option[Int] = None,
                      dfSchema: Option[StructType] = None): DataFrame
+
+  /** [[readSourceAsDf]] of a window whose MIN/MAX the caller already
+    * knows: `bounds`, from the strategy's plan. A connection that plans a
+    * read from the source's MIN/MAX (a range-partitioned JDBC read) takes
+    * them instead of probing; the default ignores them. */
+  def readSourceAsDf(source: String, columns: Seq[String], where: Seq[String],
+                     hint: Option[String], limit: Option[Int],
+                     dfSchema: Option[StructType],
+                     bounds: Option[Bounds]): DataFrame =
+    readSourceAsDf(source, columns, where, hint, limit, dfSchema)
 
   def writeDfToTarget(df: DataFrame, target: String,
                       ifExists: IfExists = IfExists.Append,

@@ -3,6 +3,7 @@ package graft.connections
 import java.sql.{Connection, DriverManager, ResultSet}
 import java.util.Properties
 
+import graft.core.Bounds
 import graft.dialects.Dialect
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -43,8 +44,9 @@ object JdbcOptions {
 
 /** Parallel-read partitioning (reference jdbc_connection/options.py:104-400).
   *
-  *  - Range: Spark's native stride partitioning on a numeric column; bounds
-  *    are auto-detected with a MIN/MAX query when missing
+  *  - Range: Spark's native stride partitioning on a numeric, date or
+  *    timestamp column; missing bounds come from the reader's window plan
+  *    when the column is its HWM expression, else from a MIN/MAX query
   *    (connection.py:340-391).
   *  - Hash/Mod: for non-monotonic or skewed keys — a synthesized
   *    `hash(col) % N` column is added to the SELECT under a generated
@@ -76,6 +78,17 @@ object JdbcReadPlan {
   def generatedAlias(column: String, mode: PartitioningMode): String =
     f"generated_${Integer.toHexString((column + mode.toString).hashCode)}%s"
 
+  /** `v` as a bound Spark's JDBC partitioner parses for a numeric, date or
+    * timestamp partition column. A decimal rounds outward to an integer
+    * (`up` for the upper bound); an `Instant` renders as ISO-8601 in UTC. */
+  def boundString(v: Any, up: Boolean): String = v match {
+    case d: BigDecimal => boundString(d.bigDecimal, up)
+    case d: java.math.BigDecimal =>
+      d.setScale(0, if (up) java.math.RoundingMode.CEILING else java.math.RoundingMode.FLOOR)
+        .toPlainString
+    case other => other.toString
+  }
+
   def plan(dialect: Dialect,
            source: String,
            columns: Seq[String],
@@ -96,8 +109,8 @@ object JdbcReadPlan {
           case (Some(l), Some(u)) => (l.toString, u.toString)
           case _ =>
             val (mn, mx) = bounds
-            (p.lowerBound.map(_.toString).orElse(mn.map(_.toString)).getOrElse("0"),
-             p.upperBound.map(_.toString).orElse(mx.map(_.toString)).getOrElse("0"))
+            (p.lowerBound.map(_.toString).orElse(mn.map(boundString(_, up = false))).getOrElse("0"),
+             p.upperBound.map(_.toString).orElse(mx.map(boundString(_, up = true))).getOrElse("0"))
         }
         val sql = dialect.getSqlQuery(source, baseCols, where, hint, limit)
         JdbcReadPlan(Map(
@@ -157,14 +170,34 @@ class JdbcConnection(val spark: SparkSession,
 
   def check(): this.type = { fetch(dialect.checkQuery); this }
 
+  /** The bounds passed to the read running on this thread, for the
+    * six-argument [[readSourceAsDf]]: the hook a subclass wraps. */
+  private val passedBounds = new ThreadLocal[Option[Bounds]] {
+    override def initialValue(): Option[Bounds] = None
+  }
+
+  override def readSourceAsDf(source: String, columns: Seq[String], where: Seq[String],
+                              hint: Option[String], limit: Option[Int],
+                              dfSchema: Option[StructType],
+                              bounds: Option[Bounds]): DataFrame = {
+    val outer = passedBounds.get
+    passedBounds.set(bounds)
+    try readSourceAsDf(source, columns, where, hint, limit, dfSchema)
+    finally passedBounds.set(outer)
+  }
+
+  /** A Range-partitioned read takes its missing bounds from the bounds
+    * passed for its partition column, else from a MIN/MAX probe. */
   def readSourceAsDf(source: String, columns: Seq[String], where: Seq[String],
                      hint: Option[String], limit: Option[Int],
                      dfSchema: Option[StructType]): DataFrame = {
     require(dfSchema.isEmpty,
       "JDBC sources infer their schema from the database — df_schema is not supported")
+    val known = passedBounds.get
+      .filter(b => partitioning.exists(_.partitionColumn == b.expression))
     var boundsProbed = false
     val plan = JdbcReadPlan.plan(dialect, source, columns, where, hint, limit,
-      partitioning, {
+      partitioning, known.map(b => (Some(b.min), Some(b.max))).getOrElse {
         boundsProbed = true
         getMinMaxValues(source, partitioning.get.partitionColumn, where)
       })
@@ -193,18 +226,21 @@ class JdbcConnection(val spark: SparkSession,
   }
 
   /** `LIMIT 0` schema probe on the driver connection
-    * (reference jdbc_connection/connection.py:257-276). */
+    * (reference jdbc_connection/connection.py:257-276), read off the
+    * result set's metadata. */
   def getDfSchema(source: String, columns: Seq[String]): StructType = {
     val cols = if (columns.isEmpty) Seq("*") else columns
-    val sql = dialect.getSqlQuery(source, cols, limit = Some(0))
-    fetch(sql).schema
+    driverQuery(dialect.getSqlQuery(source, cols, limit = Some(0)))(new ResultSetReader(_).schema)
   }
 
+  /** MIN/MAX probe on the driver connection, read off its one result row. */
   def getMinMaxValues(source: String, expression: String,
-                      where: Seq[String]): (Option[Any], Option[Any]) = {
-    val row = fetch(dialect.getMinMaxQuery(source, expression, where)).head()
-    (Option(row.get(0)), Option(row.get(1)))
-  }
+                      where: Seq[String]): (Option[Any], Option[Any]) =
+    driverQuery(dialect.getMinMaxQuery(source, expression, where)) { rs =>
+      val reader = new ResultSetReader(rs)
+      if (!rs.next()) (None, None)
+      else { val r = reader.row(); (Option(r(0)), Option(r(1))) }
+    }
 
   /** Lazy, executor-side user SELECT
     * (reference jdbc_connection/connection.py:109-159). */
@@ -214,13 +250,17 @@ class JdbcConnection(val spark: SparkSession,
 
   /** Eager SELECT **on the driver** — short-lived connection, results into a
     * local DataFrame (reference jdbc_mixin/connection.py:143-210). */
-  def fetch(query: String): DataFrame = withConnection { conn =>
-    val st = conn.prepareStatement(clearStatement(query),
+  def fetch(query: String): DataFrame = driverQuery(query)(resultSetToDf)
+
+  /** `sql` run on a short-lived driver connection; `read` consumes its
+    * result set. */
+  private def driverQuery[A](sql: String)(read: ResultSet => A): A = withConnection { conn =>
+    val st = conn.prepareStatement(clearStatement(sql),
       ResultSet.TYPE_FORWARD_ONLY, ResultSet.CONCUR_READ_ONLY)
     try {
       st.setFetchSize(options.fetchsize)
       options.queryTimeoutSec.foreach(st.setQueryTimeout)
-      resultSetToDf(st.executeQuery())
+      read(st.executeQuery())
     } finally st.close()
   }
 
@@ -249,54 +289,61 @@ class JdbcConnection(val spark: SparkSession,
     } finally conn.close()
   }
 
-  /** ResultSet → local DataFrame. Covers the common SQL types; BYO mapping
-    * for vendor exotica (reference relies on Spark-internal JdbcUtils,
-    * jdbc_mixin/connection.py:497-546 — reimplemented here because those
-    * APIs are private[sql]). */
+  /** ResultSet → local DataFrame, through [[ResultSetReader]]. */
   protected def resultSetToDf(rs: ResultSet): DataFrame = {
-    import java.sql.Types._
-    val md = rs.getMetaData
-    val n = md.getColumnCount
-    val fields = (1 to n).map { i =>
-      val dt = md.getColumnType(i) match {
-        case BIT | BOOLEAN => BooleanType
-        case TINYINT | SMALLINT => ShortType
-        case INTEGER => IntegerType
-        case BIGINT => LongType
-        case FLOAT | REAL => FloatType
-        case DOUBLE => DoubleType
-        case NUMERIC | DECIMAL =>
-          val p = math.max(1, math.min(38, md.getPrecision(i)))
-          DecimalType(p, math.max(0, math.min(p, md.getScale(i))))
-        case DATE => DateType
-        case TIME | TIMESTAMP | TIMESTAMP_WITH_TIMEZONE => TimestampType
-        case BINARY | VARBINARY | LONGVARBINARY | BLOB => BinaryType
-        case _ => StringType
-      }
-      StructField(md.getColumnLabel(i), dt, md.isNullable(i) != 0)
-    }
-    val schema = StructType(fields)
+    val reader = new ResultSetReader(rs)
     val rows = new java.util.ArrayList[Row]()
-    while (rs.next()) {
-      val vals = (1 to n).map { i =>
-        val v: Any = fields(i - 1).dataType match {
-          case BooleanType => rs.getBoolean(i)
-          case ShortType => rs.getShort(i)
-          case IntegerType => rs.getInt(i)
-          case LongType => rs.getLong(i)
-          case FloatType => rs.getFloat(i)
-          case DoubleType => rs.getDouble(i)
-          case _: DecimalType => rs.getBigDecimal(i)
-          case DateType => rs.getDate(i)
-          case TimestampType => rs.getTimestamp(i)
-          case BinaryType => rs.getBytes(i)
-          case _ => rs.getString(i)
+    while (rs.next()) rows.add(Row.fromSeq(reader.row()))
+    spark.createDataFrame(rows, reader.schema)
+  }
+
+  /** Reads a driver-channel ResultSet as Spark-typed values: the one owner
+    * of this connection's JDBC → Spark type map. Covers the common SQL
+    * types; BYO mapping for vendor exotica (reference relies on
+    * Spark-internal JdbcUtils, jdbc_mixin/connection.py:497-546 —
+    * reimplemented here because those APIs are private[sql]). */
+  private final class ResultSetReader(rs: ResultSet) {
+    val schema: StructType = {
+      import java.sql.Types._
+      val md = rs.getMetaData
+      StructType((1 to md.getColumnCount).map { i =>
+        val dt = md.getColumnType(i) match {
+          case BIT | BOOLEAN => BooleanType
+          case TINYINT | SMALLINT => ShortType
+          case INTEGER => IntegerType
+          case BIGINT => LongType
+          case FLOAT | REAL => FloatType
+          case DOUBLE => DoubleType
+          case NUMERIC | DECIMAL =>
+            val p = math.max(1, math.min(38, md.getPrecision(i)))
+            DecimalType(p, math.max(0, math.min(p, md.getScale(i))))
+          case DATE => DateType
+          case TIME | TIMESTAMP | TIMESTAMP_WITH_TIMEZONE => TimestampType
+          case BINARY | VARBINARY | LONGVARBINARY | BLOB => BinaryType
+          case _ => StringType
         }
-        if (rs.wasNull()) null else v
-      }
-      rows.add(Row.fromSeq(vals))
+        StructField(md.getColumnLabel(i), dt, md.isNullable(i) != 0)
+      })
     }
-    spark.createDataFrame(rows, schema)
+
+    /** The current row's values; SQL NULL is null. */
+    def row(): Seq[Any] = schema.fields.indices.map { c =>
+      val i = c + 1
+      val v: Any = schema.fields(c).dataType match {
+        case BooleanType => rs.getBoolean(i)
+        case ShortType => rs.getShort(i)
+        case IntegerType => rs.getInt(i)
+        case LongType => rs.getLong(i)
+        case FloatType => rs.getFloat(i)
+        case DoubleType => rs.getDouble(i)
+        case _: DecimalType => rs.getBigDecimal(i)
+        case DateType => rs.getDate(i)
+        case TimestampType => rs.getTimestamp(i)
+        case BinaryType => rs.getBytes(i)
+        case _ => rs.getString(i)
+      }
+      if (rs.wasNull()) null else v
+    }
   }
 }
 

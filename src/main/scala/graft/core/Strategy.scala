@@ -132,19 +132,20 @@ sealed abstract class HwmStrategy(val store: HwmStore) extends Strategy {
     case None => Edge.unset
   }
 
-  /** The window the reader reads next over `expression`, or None when
-    * there is nothing to read (reference db_reader.py:718-794). `probe`
-    * returns the source's MIN/MAX of `expression` inside a window whose
-    * edges are both inclusive; `>` vs `>=` applies only to the returned
-    * window (db_reader.py:741-746). Call after [[fetchHwm]].
+  /** The plan for the reader's next read over `expression`: its window,
+    * None when there is nothing to read (reference db_reader.py:718-794),
+    * and the window's MIN/MAX. `probe` returns the source's MIN/MAX of
+    * `expression` inside a window whose edges are both inclusive; `>` vs
+    * `>=` applies only to the planned window (db_reader.py:741-746). Call
+    * after [[fetchHwm]].
     *
-    * `reader` names the query the window is for. A look-ahead (`hasData`)
+    * `reader` names the query the plan is for. A look-ahead (`hasData`)
     * passes `keep`, and its plan is handed, once, to the next call for an
     * equal `reader` from the same start edge, so `hasData` then `run()`
     * probe once; every other call plans afresh. */
   private[graft] def nextWindow(reader: Any, expression: String,
                                 probe: Window => (Option[Any], Option[Any]),
-                                keep: Boolean): Option[Window]
+                                keep: Boolean): WindowPlan
 
   /** `v` (a Spark row value or a user literal) in the bound HWM's value
     * type — the conversion its `withValue` applies. */
@@ -166,22 +167,27 @@ final class IncrementalStrategy(val offset: Option[Any] = None,
     case (None, _) => Edge.unset
   }
 
-  /** The plan a look-ahead kept: its reader, start edge and window. */
-  @volatile private var kept: Option[(Any, Edge, Option[Window])] = None
+  /** The plan a look-ahead kept, with the reader and start edge it is for. */
+  @volatile private var kept: Option[(Any, Edge, WindowPlan)] = None
 
-  /** `(startEdge, max]`, with `max` probed from the inclusive start so the
-    * HWM matches the frame even if rows arrive mid-read
+  /** `(startEdge, max]`, with MIN/MAX probed from the inclusive start so
+    * the HWM matches the frame even if rows arrive mid-read
     * (db_reader.py:786-792). */
   private[graft] def nextWindow(reader: Any, expression: String,
                                 probe: Window => (Option[Any], Option[Any]),
-                                keep: Boolean): Option[Window] =
+                                keep: Boolean): WindowPlan =
     synchronized {
       val start = startEdge
-      val taken = if (keep) None else kept.collect { case (`reader`, `start`, w) => w }
-      val w = taken.getOrElse(probe(Window(expression, Edge(start.value)))._2
-        .map(mx => Window(expression, start, Edge.inclusive(align(mx)))))
-      kept = if (keep) Some((reader, start, w)) else None
-      w
+      val taken = if (keep) None else kept.collect { case (`reader`, `start`, p) => p }
+      val plan = taken.getOrElse(probe(Window(expression, Edge(start.value))) match {
+        case (mn, Some(mx)) =>
+          val hi = align(mx)
+          WindowPlan(Some(Window(expression, start, Edge.inclusive(hi))),
+            mn.map(m => Bounds(expression, align(m), hi)))
+        case _ => WindowPlan(None)
+      })
+      kept = if (keep) Some((reader, start, plan)) else None
+      plan
     }
 
   private def negate(step: Any): Any = step match {
@@ -252,12 +258,12 @@ sealed abstract class BatchHwmStrategy(val step: Any, store: HwmStore)
 
   /** Seeds the range on the first call — probing only the edges
     * [[firstEdge]]/[[lastValue]] leave unset; an empty source leaves it
-    * unseeded — then returns the current window until the range is
-    * covered. The range is seeded once per scope, so a look-ahead needs
-    * no kept plan. */
+    * unseeded — then plans the current window, with its edges as the
+    * bounds, until the range is covered. The range is seeded once per
+    * scope, so a look-ahead needs no kept plan. */
   private[graft] def nextWindow(reader: Any, expression: String,
                                 probe: Window => (Option[Any], Option[Any]),
-                                keep: Boolean): Option[Window] =
+                                keep: Boolean): WindowPlan =
     synchronized {
       if (stop.isEmpty) {
         val first = firstEdge
@@ -270,7 +276,9 @@ sealed abstract class BatchHwmStrategy(val step: Any, store: HwmStore)
         }
         range.foreach { case (s, e) => initialize(s, e, exclusiveStart = !first.including) }
       }
-      next.map(_ => currentWindow(expression))
+      val window = next.map(_ => currentWindow(expression))
+      WindowPlan(window,
+        window.map(w => Bounds(expression, w.startFrom.value.get, w.stopAt.value.get)))
     }
 
   /** Move past the current window; true once the range is covered. */

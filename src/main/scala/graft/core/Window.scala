@@ -15,3 +15,14 @@ object Edge {
 final case class Window(expression: String,
                         startFrom: Edge = Edge.unset,
                         stopAt: Edge = Edge.unset)
+
+/** MIN and MAX of `expression` over a window, both inclusive, in the bound
+  * HWM's value type. */
+final case class Bounds(expression: String, min: Any, max: Any)
+
+/** What a strategy plans for one read: the window to read (None when there
+  * is nothing left to read) and the [[Bounds]] of its expression that the
+  * planning probed or already knew. A range-partitioned read on that
+  * expression takes `bounds` as its partition bounds instead of probing the
+  * window again. */
+final case class WindowPlan(window: Option[Window], bounds: Option[Bounds] = None)

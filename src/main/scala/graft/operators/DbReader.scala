@@ -31,6 +31,8 @@ final case class HwmColumn(expression: String, name: Option[String] = None) {
   *  - HWM is updated with the window stop *before* the lazy read executes
   *    (:592-595) — intentional eager-update semantics;
   *  - `hasData` checks the same window `run()` reads next;
+  *  - the plan's MIN/MAX goes to the connection with the window, so a
+  *    range-partitioned JDBC read on the HWM column sends no second probe;
   *  - HWM without a HwmStrategy (and vice versa) is a usage error
   *    (:611-624).
   */
@@ -47,14 +49,14 @@ final case class DbReader(connection: DbConnection,
       s"${connection.getClass.getSimpleName} -> DbReader.run($source)") {
       graft.hooks.GraftListeners.fireBeforeRead(source)
       val strategy = checkStrategy()
-      val planned = strategy.map(nextWindow(_))
+      val plan = strategy.map(nextWindow(_))
       for {
         s <- strategy
-        w <- planned.flatten
+        w <- plan.flatMap(_.window)
         stop <- w.stopAt.value
       } s.updateHwm(stop)
-      val limit = if (planned.contains(None)) Some(0) else None
-      graft.hooks.GraftListeners.fireAfterRead(source, read(planned.flatten, limit))
+      val limit = if (plan.exists(_.window.isEmpty)) Some(0) else None
+      graft.hooks.GraftListeners.fireAfterRead(source, read(plan, limit))
     }
 
   /** Single-pass incremental read: capture the HWM with a Spark
@@ -94,7 +96,7 @@ final case class DbReader(connection: DbConnection,
     val window = Window(col.expression, startFrom = inc.startEdge)
     val obs = Observation(s"graft_hwm_${source}_${col.expression}")
     val df = graft.hooks.GraftListeners
-      .fireAfterRead(source, read(Some(window), None))
+      .fireAfterRead(source, read(Some(WindowPlan(Some(window))), None))
       .observe(obs, max(sexpr(col.expression)).as("max"))
     val result = action(df)
     // the observation arrives through the async listener bus; once the
@@ -120,26 +122,24 @@ final case class DbReader(connection: DbConnection,
   }
 
   /** `LIMIT 1` existence probe under the window `run()` reads next
-    * (reference db_reader.py:452-512: limit=1 then take(1)); finding that
-    * window may take a MIN/MAX probe, which this reader's next `run()`
+    * (reference db_reader.py:452-512: limit=1 then take(1)); planning that
+    * window may take a MIN/MAX probe, whose plan this reader's next `run()`
     * reuses. */
   def hasData: Boolean = checkStrategy().map(nextWindow(_, keep = true)) match {
-    case Some(None) => false // the strategy has nothing left to read
-    case planned => read(planned.flatten, Some(1)).take(1).nonEmpty
+    case Some(WindowPlan(None, _)) => false // the strategy has nothing left to read
+    case plan => read(plan, Some(1)).take(1).nonEmpty
   }
 
   def raiseIfNoData(): Unit =
     if (!hasData) throw new IllegalStateException(
       s"no data in source $source under the current window")
 
-  private def read(window: Option[Window], limit: Option[Int]): DataFrame =
-    connection.readSourceAsDf(
-      source = source,
-      columns = columns,
-      where = connection.dialect.applyWindow(where, window),
-      hint = hint,
-      limit = limit,
-      dfSchema = dfSchema)
+  /** The read of `plan`'s window; its bounds go to the connection, so a
+    * range-partitioned read on the HWM column probes nothing more. */
+  private def read(plan: Option[WindowPlan], limit: Option[Int]): DataFrame =
+    connection.readSourceAsDf(source, columns,
+      connection.dialect.applyWindow(where, plan.flatMap(_.window)), hint, limit, dfSchema,
+      plan.flatMap(_.bounds))
 
   private def checkStrategy(): Option[HwmStrategy] = Strategy.current match {
     case s: HwmStrategy =>
@@ -165,9 +165,9 @@ final case class DbReader(connection: DbConnection,
         connection.getDfSchema(source, Seq(col.expression)).fields.head))
   }
 
-  /** The window `s` plans next, after binding it to this reader's HWM;
+  /** The plan `s` makes next, after binding it to this reader's HWM;
     * `keep` hands the plan to this reader's next `run()`. */
-  private def nextWindow(s: HwmStrategy, keep: Boolean = false): Option[Window] = {
+  private def nextWindow(s: HwmStrategy, keep: Boolean = false): WindowPlan = {
     bindHwm(s)
     s.nextWindow(this, hwm.get.expression, minMax, keep)
   }

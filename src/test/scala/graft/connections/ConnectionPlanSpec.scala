@@ -31,6 +31,19 @@ class JdbcReadPlanSpec extends AnyFunSuite {
     assert(p.options("lowerBound") == "100" && p.options("upperBound") == "200")
   }
 
+  test("range bounds render as strings Spark's JDBC partitioner parses") {
+    val p = JdbcReadPlan.plan(PostgresDialect, "t", Nil, Nil, None, None,
+      Some(JdbcPartitioning(4, "ts")),
+      (Some(java.time.Instant.parse("2024-03-15T12:30:45Z")),
+       Some(java.time.LocalDate.parse("2024-03-16"))))
+    assert(p.options("lowerBound") == "2024-03-15T12:30:45Z")
+    assert(p.options("upperBound") == "2024-03-16")
+    // a decimal rounds outward to the integers Spark parses for numbers
+    assert(JdbcReadPlan.boundString(BigDecimal("-2.5"), up = false) == "-3")
+    assert(JdbcReadPlan.boundString(new java.math.BigDecimal("7.25"), up = true) == "8")
+    assert(JdbcReadPlan.boundString(42L, up = true) == "42")
+  }
+
   test("hash partitioning synthesizes an aliased bucket column and drops it") {
     val p = JdbcReadPlan.plan(PostgresDialect, "t", Seq("id", "name"), Nil,
       None, None, Some(JdbcPartitioning(8, "id", PartitioningMode.Hash)),

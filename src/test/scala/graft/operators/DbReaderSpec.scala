@@ -1,8 +1,10 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.connections.{FileTableConnection, IfExists}
+import graft.connections.{FileTableConnection, IfExists, JdbcConnection, JdbcOptions,
+  JdbcPartitioning, PartitioningMode}
 import graft.core._
+import graft.dialects.DerbyDialect
 
 class DbReaderSpec extends SparkSpec {
   import spark.implicits._
@@ -315,6 +317,120 @@ class DbReaderSpec extends SparkSpec {
     }
     assert(conn.minMaxProbes.get == 4)
     assert(store.get("hp.id").get.valueOpt.contains(30L))
+  }
+
+  // keep derby.log out of the repo working tree
+  System.setProperty("derby.system.home", tmpDir("derby-home"))
+
+  /** A Derby connection, Range-partitioned 4 ways on `partitionColumn`,
+    * that counts its MIN/MAX probes. */
+  private class CountingDerby(db: String, partitionColumn: String)
+    extends JdbcConnection(spark, DerbyDialect,
+      JdbcOptions(s"jdbc:derby:memory:$db;create=true"),
+      Some(JdbcPartitioning(4, partitionColumn, PartitioningMode.Range))) {
+    val minMaxProbes = new java.util.concurrent.atomic.AtomicInteger
+    override def getMinMaxValues(source: String, expression: String,
+                                 where: Seq[String]): (Option[Any], Option[Any]) = {
+      minMaxProbes.incrementAndGet()
+      super.getMinMaxValues(source, expression, where)
+    }
+  }
+
+  /** Table `t (id BIGINT, v INT)` holding ids 1..n, v = n + 1 - id. */
+  private def derbyTable(db: String, n: Int, partitionColumn: String = "id"): CountingDerby = {
+    val c = new CountingDerby(db, partitionColumn)
+    c.execute("CREATE TABLE t (id BIGINT NOT NULL, v INT NOT NULL)")
+    c.execute("INSERT INTO t " +
+      (1 to n).map(i => s"VALUES ($i, ${n + 1 - i})").mkString(" UNION ALL "))
+    c
+  }
+
+  test("a range-partitioned JDBC run() on the HWM column sends one MIN/MAX probe") {
+    val c = derbyTable("probe_run", 40)
+    val store = new InMemoryHwmStore
+    store.set(IntHwm("t.id", "t", "id", Some(10L)))
+    val df = Strategy.using(new IncrementalStrategy(store = store)) {
+      DbReader(c, "t", hwm = Some(HwmColumn("id"))).run()
+    }
+    assert(c.minMaxProbes.get == 1)
+    assert(df.rdd.getNumPartitions == 4)
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq == (11L to 40L))
+    assert(store.get("t.id").get.valueOpt.contains(40L))
+  }
+
+  test("a range-partitioned JDBC hasData then run() sends one MIN/MAX probe") {
+    val c = derbyTable("probe_hasdata", 40)
+    val store = new InMemoryHwmStore
+    store.set(IntHwm("t.id", "t", "id", Some(25L)))
+    val n = Strategy.using(new IncrementalStrategy(store = store)) {
+      val r = DbReader(c, "t", hwm = Some(HwmColumn("id")))
+      if (r.hasData) r.run().count() else -1L
+    }
+    assert(n == 15L)
+    assert(c.minMaxProbes.get == 1)
+  }
+
+  test("a 3-window incremental-batch loop over range-partitioned JDBC sends " +
+       "only its seeding probe") {
+    val c = derbyTable("probe_batch", 120)
+    val b = new IncrementalBatchStrategy(40L, store = new InMemoryHwmStore)
+    val counts = Strategy.using(b) {
+      b.foreachBatch(DbReader(c, "t", hwm = Some(HwmColumn("id"))).run().count())
+    }
+    assert(counts == Seq(41L, 40L, 39L))
+    assert(c.minMaxProbes.get == 1)
+  }
+
+  test("a JDBC read range-partitioned on a column other than the HWM still " +
+       "probes its partition bounds") {
+    val c = derbyTable("probe_other", 40, partitionColumn = "v")
+    val store = new InMemoryHwmStore
+    store.set(IntHwm("t.id", "t", "id", Some(10L)))
+    val df = Strategy.using(new IncrementalStrategy(store = store)) {
+      DbReader(c, "t", hwm = Some(HwmColumn("id"))).run()
+    }
+    assert(c.minMaxProbes.get == 2)
+    assert(df.rdd.getNumPartitions == 4)
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq == (11L to 40L))
+  }
+
+  test("range-partitioned incremental reads keyed by date, timestamp and " +
+       "decimal columns return the rows of an unpartitioned read") {
+    val url = "jdbc:derby:memory:bounds_typed;create=true"
+    val plain = new JdbcConnection(spark, DerbyDialect, JdbcOptions(url))
+    plain.execute("CREATE TABLE typed (id INT NOT NULL, d DATE NOT NULL, " +
+      "ts TIMESTAMP NOT NULL, dc DECIMAL(12,2) NOT NULL)")
+    val day0 = java.time.LocalDate.parse("2024-01-01")
+    plain.execute("INSERT INTO typed " + (0 until 60).map { i =>
+      val ts = day0.atStartOfDay().plusHours(7L * i).toString.replace('T', ' ')
+      s"VALUES ($i, DATE('${day0.plusDays(i)}'), TIMESTAMP('$ts:00'), ${i * 2.5 + 0.25})"
+    }.mkString(" UNION ALL "))
+    Seq("d", "ts", "dc").foreach { key =>
+      val parted = new JdbcConnection(spark, DerbyDialect, JdbcOptions(url),
+        Some(JdbcPartitioning(4, key, PartitioningMode.Range)))
+      // the first run reads everything; the second, after 20 more keys
+      // are stored as read, reads the window past them
+      def ids(conn: JdbcConnection, store: HwmStore): Seq[Seq[Int]] =
+        Seq(true, false).map { first =>
+          if (!first) {
+            val h = store.get(s"typed.$key").get
+            store.set(h.withValue(h match {
+              case _: DateHwm => day0.plusDays(19)
+              case _: DateTimeHwm =>
+                java.sql.Timestamp.valueOf(day0.atStartOfDay().plusHours(7L * 19))
+              case _ => BigDecimal("47.75")
+            }))
+          }
+          Strategy.using(new IncrementalStrategy(store = store)) {
+            val df = DbReader(conn, "typed", hwm = Some(HwmColumn(key))).run()
+            if (conn eq parted) assert(df.rdd.getNumPartitions == 4, key)
+            df.collect().map(_.getInt(0)).sorted.toSeq
+          }
+        }
+      val got = ids(parted, new InMemoryHwmStore)
+      assert(got == ids(plain, new InMemoryHwmStore), key)
+      assert(got == Seq(0 until 60, 20 until 60), key)
+    }
   }
 
   test("writer: ifExists modes on file tables + metrics") {
